@@ -8,6 +8,7 @@ file skips the compile when nothing changed.
 """
 import hashlib
 import os
+import re
 import shutil
 import subprocess
 import sys
@@ -19,9 +20,17 @@ OUT = os.path.join(REPO, ".bench_build", "userbench")
 
 
 def spark_jars():
-    jars = os.path.join(os.environ.get("SPARK_HOME", "/opt/spark"), "jars")
+    """The Spark jars: $SPARK_HOME/jars, else the `unmanagedBase` the
+    repository's sbt build compiles against."""
+    if os.environ.get("SPARK_HOME"):
+        jars = os.path.join(os.environ["SPARK_HOME"], "jars")
+    else:
+        sbt = os.path.join(REPO, "build.sbt")
+        m = os.path.exists(sbt) and re.search(
+            r'unmanagedBase\s*:=\s*file\("([^"]+)"\)', open(sbt).read())
+        jars = m.group(1) if m else ""
     if not os.path.isdir(jars):
-        raise SystemExit(f"build: no Spark jars at {jars} (set SPARK_HOME)")
+        raise SystemExit("build: no Spark jars found (set SPARK_HOME)")
     return jars
 
 
