@@ -15,17 +15,20 @@ import graft.operators.PivotOps
   * Two write paths:
   *  - [[publishChunks]] — faithful: one single-file CSV (with `#`
   *    metadata header) per chunk key. Chunk keys are enumerated from a
-  *    small distinct() (the catalog is dim-sized); each chunk is an
-  *    independent Spark job, so a driver thread pool can run them
-  *    concurrently at scale. The per-file `coalesce(1)` is correct
-  *    because a published series file is small by construction.
+  *    small distinct() (the catalog is dim-sized). A published series
+  *    file is small by construction and written by one task, so each
+  *    chunk is shuffled to ONE partition before its pivot and sorted
+  *    within it: one shuffle-map job and one write job per chunk, no
+  *    range sampling. Chunks are independent, so a driver thread pool
+  *    runs them concurrently.
   *  - [[publishPartitioned]] — scale: one `partitionBy(chunk keys)`
   *    parquet/csv write, all chunks in a single distributed job. This is
   *    the 100 TB path; the faithful path exists for byte-format parity.
   *
   * Resume (§2.10): [[publishChunks]] probes each existing output file
-  * for its max timestamp and appends only newer rows, headerless —
-  * exactly the reference's disabled-but-designed incremental mode.
+  * for its max timestamp on the driver (no Spark job) and appends only
+  * newer rows, headerless — exactly the reference's
+  * disabled-but-designed incremental mode.
   */
 object Publish {
 
@@ -71,12 +74,16 @@ object Publish {
         .replace("/", "%2F"))
       .mkString("_") + ".csv"
 
-  /** One chunk's wide frame: filter → pivot → sentinel fill → sort. */
+  /** One chunk's wide frame: filter → one partition → pivot → sentinel
+    * fill → sort within that partition. The single partition satisfies
+    * the pivot's grouping without a second exchange, and sorting it is a
+    * total order, so the sink's `coalesce(1)` writes it as is.
+    */
   def wideChunk(fact: DataFrame, spec: ChunkSpec,
       chunkValue: Seq[Any]): DataFrame = {
     val filtered = spec.chunkKeys.zip(chunkValue).foldLeft(fact) {
       case (df, (k, v)) => df.filter(col(k) === lit(v))
-    }
+    }.repartition(1)
     // duplicate cells average as exact integer cents (centsOf →
     // centsMean): deterministic under any partition order, where the
     // old round(avg(double), 2) default was the playbook's
@@ -84,9 +91,8 @@ object Publish {
     val wide = PivotOps.pivotWide(filtered, Seq(col(spec.indexCol)),
       col(spec.pivotKey), spec.domain, col(spec.valueCol),
       v => PivotOps.centsMean(PivotOps.centsOf(v)))
-    PivotOps.fillSentinels(wide,
-        spec.sentinels)
-      .orderBy(col(spec.indexCol))
+    PivotOps.fillSentinels(wide, spec.sentinels)
+      .sortWithinPartitions(col(spec.indexCol))
   }
 
   /** Faithful per-chunk publication with incremental resume. Returns the
@@ -99,14 +105,17 @@ object Publish {
     * barriers — on a cluster this is the difference between one chunk's
     * tail latency and the sum of all of them. Spark job submission is
     * thread-safe; results are re-ordered to chunk order so output is
-    * deterministic regardless of completion order.
+    * deterministic regardless of completion order. Every chunk has
+    * settled before the call returns: a failure is rethrown (the first
+    * in chunk order) only after the sibling writes have finished, so no
+    * write outlives the call or the caller's cleanup.
     */
   def publishChunks(spark: SparkSession, fact: DataFrame, spec: ChunkSpec,
       outDir: String, headerFor: Seq[Any] => Seq[String],
       parallelism: Int = 4): Seq[(Seq[Any], String, Boolean)] = {
     val chunkVals = fact
       .select(spec.chunkKeys.map(col): _*).distinct()
-      .orderBy(spec.chunkKeys.map(col): _*)
+      .coalesce(1).sortWithinPartitions(spec.chunkKeys.map(col): _*)
       .collect().map(_.toSeq).toSeq
     // fail loudly on NULL chunk keys: the filename composition would
     // NPE inside a Future, and wideChunk's `===` filter can never
@@ -139,7 +148,7 @@ object Publish {
           }
         }
       }
-      futures.map(Await.result(_, Duration.Inf))
+      futures.map(Await.ready(_, Duration.Inf).value.get).map(_.get)
     } finally pool.shutdown()
   }
 

@@ -4,8 +4,12 @@ import java.io.{BufferedOutputStream, FileOutputStream}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 
+import com.univocity.parsers.csv.CsvParser
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import scala.jdk.CollectionConverters._
 
@@ -28,7 +32,8 @@ object CsvHeaderSink {
 
   /** K1 — write `df` as a single CSV file at `out`, preceded by
     * `headerLines` each prefixed `# `. Ordering inside the file is the
-    * caller's `orderBy`; `coalesce(1)` preserves a sorted parent's order.
+    * caller's: `coalesce(1)` preserves the order of a globally sorted
+    * parent or of a single partition sorted within itself.
     * The file is staged next to the target and moved in atomically, so
     * a failure mid-write never leaves a truncated deliverable; staging
     * and the Spark temp dir are released on every path.
@@ -206,22 +211,48 @@ object CsvHeaderSink {
   }
 
   /** S5 — resume probe: max value of `tsCol` in an existing output file,
-    * or None if the file doesn't exist / has no rows. Comment lines
-    * (incl. the quoted form) are skipped. Single pass: columns read as
-    * strings (no inference scan) and only `tsCol` is cast — this runs
-    * once per resumed chunk per micro-batch under StreamingPublish, so
-    * the old infer-then-aggregate double scan was the probe's whole
-    * cost.
+    * or None if the file doesn't exist, has no `tsCol` column or no
+    * non-empty `tsCol` field. Single pass: columns read as strings, on
+    * the driver, no Spark job — the same answer as
+    * `read(spark, path).agg(max(col(tsCol).cast("timestamp")))`.
+    * Comment lines (incl. the quoted form) and blank lines are skipped,
+    * the first remaining line is the column header and later copies of
+    * it are dropped, every line is split with the CSV reader's own
+    * univocity settings, empty fields are skipped as `max` skips nulls,
+    * and each field is cast in the session time zone (under ANSI an
+    * unparsable one throws the cast's error). O(file), which [[append]]
+    * pays anyway when it restages the target.
     */
   def tailProbe(spark: SparkSession, path: String,
       tsCol: String): Option[java.sql.Timestamp] = {
-    if (!Files.exists(Paths.get(path))) return None
-    val txt = spark.read.textFile(path)
-      .filter((l: String) => !isCommentLine(l))
-    val df = spark.read.option("header", "true").csv(txt)
-    if (!df.columns.contains(tsCol)) return None
-    df.agg(max(col(tsCol).cast("timestamp"))).collect().headOption
-      .flatMap(r => Option(r.getTimestamp(0)))
+    val file = Paths.get(path)
+    if (!Files.exists(file)) return None
+    val conf = spark.sessionState.conf
+    val opts = new CSVOptions(Map("header" -> "true"), false,
+      conf.sessionLocalTimeZone)
+    val zone = DateTimeUtils.getZoneId(conf.sessionLocalTimeZone)
+    val parser = new CsvParser(opts.asParserSettings)
+    val in = Files.newBufferedReader(file, StandardCharsets.UTF_8)
+    try {
+      val lines = Iterator.continually(in.readLine()).takeWhile(_ != null)
+        .filter(l => !isCommentLine(l) && l.trim.nonEmpty)
+      if (!lines.hasNext) return None
+      val headerLine = lines.next()
+      val header = parser.parseLine(headerLine)
+      val idx = header.indexOf(tsCol)
+      // the reader renames case-insensitive duplicates, so a duplicated
+      // tsCol is no column at all
+      if (idx < 0 ||
+          header.count(h => h != null && h.equalsIgnoreCase(tsCol)) > 1)
+        return None
+      lines.filter(_ != headerLine).flatMap { l =>
+        val f = parser.parseLine(l).lift(idx).orNull
+        if (f == null || f == opts.nullValue) None
+        else if (conf.ansiEnabled) Some(DateTimeUtils.stringToTimestampAnsi(
+          UTF8String.fromString(f), zone))
+        else DateTimeUtils.stringToTimestamp(UTF8String.fromString(f), zone)
+      }.maxOption.map(DateTimeUtils.toJavaTimestamp)
+    } finally in.close()
   }
 
   /** Staging file in the TARGET's directory (atomic moves need the same

@@ -32,13 +32,12 @@ object StreamingPublish {
       headerFor: Seq[Any] => Seq[String], checkpoint: String): Unit = {
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // persist: publishChunks reads the batch once for the
-        // chunk-value distinct and once per chunk's filtered pivot —
-        // without the persist each of those re-scans the micro-batch's
-        // source files (N_chunks + 1 rescans per trigger). The
-        // chunkVals collect inside publishChunks materializes the
-        // cache; empty batches publish zero chunks via the same path
-        // (no separate isEmpty pre-scan).
+        // persist: publishChunks reads the batch once to enumerate its
+        // chunks and once per chunk, so the cache (filled by the
+        // enumeration) keeps the source files to one scan per trigger.
+        // An empty batch enumerates zero chunks. publishChunks returns
+        // only after every chunk write has settled, so the unpersist
+        // never races one.
         batch.persist()
         try {
           Publish.publishChunks(batch.sparkSession, batch, spec, outDir,

@@ -1,7 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.time.{LocalDateTime, ZoneOffset}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.{SparkThrowable, TestBus}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.io.{CsvHeaderSink, JdbcIO, XmlMetadataSink}
 import graft.pipeline.Publish
@@ -11,6 +15,60 @@ class IoPublishSpec extends SparkSpec {
 
   private def tmpDir(): String =
     Files.createTempDirectory("graft-io").toString
+
+  /** Runs `f` under a fresh job group and counts the Spark jobs started
+    * in it (threads `f` creates inherit the group), after the listener
+    * bus has delivered every event. */
+  private def jobsOf[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"io-publish-jobs-${System.nanoTime}"
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "counted")
+    try {
+      val a = f
+      TestBus.drain(sc)
+      (a, n.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+  }
+
+  /** A naive wall-clock literal in the session zone (UTC). */
+  private def utc(s: String): java.sql.Timestamp =
+    java.sql.Timestamp.from(
+      LocalDateTime.parse(s.replace(' ', 'T')).toInstant(ZoneOffset.UTC))
+
+  /** The distributed form of the resume probe: text read without
+    * metadata lines, CSV over the rest as strings, max of the cast. */
+  private def sparkTail(path: String, tsCol: String)
+      : Option[java.sql.Timestamp] = {
+    val txt = spark.read.textFile(path)
+      .filter((l: String) => !(l.startsWith("#") || l.startsWith("\"#")))
+    val df = spark.read.option("header", "true").csv(txt)
+    if (!df.columns.contains(tsCol)) None
+    else df.agg(max(col(tsCol).cast("timestamp"))).collect().headOption
+      .flatMap(r => Option(r.getTimestamp(0)))
+  }
+
+  /** Write `text` to a fresh file, probe it with zero Spark jobs, and
+    * check the answer against the distributed form. */
+  private def probeText(text: String, tsCol: String = "t")
+      : Option[java.sql.Timestamp] = {
+    val out = s"${tmpDir()}/probe.csv"
+    Files.write(Paths.get(out), text.getBytes("UTF-8"))
+    val (probed, jobs) = jobsOf(CsvHeaderSink.tailProbe(spark, out, tsCol))
+    assert(jobs === 0, "the tail probe launched Spark jobs")
+    assert(probed === sparkTail(out, tsCol))
+    probed
+  }
 
   test("csv sink writes comment header then ordered data; probe resumes") {
     val out = s"${tmpDir()}/series.csv"
@@ -90,6 +148,55 @@ class IoPublishSpec extends SparkSpec {
       "t").isEmpty)
   }
 
+  test("tail probe finds tsCol by header name, not position") {
+    assert(probeText("# Site: S1\nv,t\n1.0,2024-01-01 00:00:00\n" +
+      "2.0,2024-01-01 02:00:00\n") === Some(utc("2024-01-01 02:00:00")))
+  }
+
+  test("tail probe splits quoted header and data fields like the reader") {
+    // the comma inside the quoted fields would shift `t` under a naive
+    // split; blank lines, both comment forms and a repeated column
+    // header line are dropped as the distributed reader drops them
+    val text = "# SiteCode: S1 \n\"# SiteName: Logan, UT\"\n" +
+      "\"v, raw\",\"t\",q\n" +
+      "\"1,5\",2024-01-01 00:00:00,a\n\n" +
+      "\"v, raw\",\"t\",q\n" +
+      "\"2,5\",\"2024-01-01 03:00:00.000250\",b\n"
+    val tail = utc("2024-01-01 03:00:00")
+    tail.setNanos(250000)
+    assert(probeText(text) === Some(tail))
+  }
+
+  test("tail probe on a header-only file is None") {
+    assert(probeText("# hdr\nt,v\n").isEmpty)
+    assert(probeText("# only metadata\n").isEmpty)
+    assert(probeText("v,w\n1,2\n").isEmpty) // no tsCol column
+  }
+
+  test("tail probe returns the max, not the last row") {
+    assert(probeText("t,v\n2024-01-01 05:00:00,1\n" +
+      "2024-01-01 09:00:00,2\n2024-01-01 07:00:00,3\n")
+      === Some(utc("2024-01-01 09:00:00")))
+  }
+
+  test("tail probe skips empty fields as max skips nulls") {
+    assert(probeText("t,v\n,1\n2024-01-01 01:00:00,2\n\"\",3\n")
+      === Some(utc("2024-01-01 01:00:00")))
+    // unquoted empty, quoted empty, and a short row missing the field
+    assert(probeText("v,t\n1,\n2,\"\"\n3\n").isEmpty)
+  }
+
+  test("tail probe throws on an unparsable timestamp, as the ANSI cast") {
+    val out = s"${tmpDir()}/bad.csv"
+    Files.write(Paths.get(out),
+      "t,v\n2024-01-01 01:00:00,1\nnot a time,2\n".getBytes("UTF-8"))
+    val e = intercept[java.time.DateTimeException] {
+      CsvHeaderSink.tailProbe(spark, out, "t")
+    }
+    assert(e.asInstanceOf[SparkThrowable].getCondition === "CAST_INVALID_INPUT")
+    intercept[Exception](sparkTail(out, "t"))
+  }
+
   test("xml metadata renders escaped nested sections") {
     val doc = XmlMetadataSink.seriesMetadata(
       Map("id" -> "s<1>"),
@@ -145,6 +252,45 @@ class IoPublishSpec extends SparkSpec {
     val f1b = Files.readAllLines(Paths.get(s"$dir/1.csv"))
     assert(f1b.size === 5)
     assert(f1b.get(4).endsWith(",3.5,-9999.0"))
+  }
+
+  test("publishing a fresh and a resumed chunk stays within a few jobs") {
+    val dir = tmpDir()
+    Publish.publishChunks(spark, fact.filter(col("sid") === 1L), spec, dir,
+      cv => Seq("h"))
+    val newer = fact.union(Seq(
+      (1L, ts("2024-01-01 02:00:00"), "temp", 3.5))
+      .toDF("sid", "t", "metric", "v"))
+    val (written, jobs) = jobsOf(
+      Publish.publishChunks(spark, newer, spec, dir, cv => Seq("h")))
+    assert(written.map(_._3) === Seq(true, false)) // resumed, fresh
+    // enumeration plus two per chunk; the probe-and-global-sort form
+    // launched more than twice as many
+    assert(jobs <= 8, s"$jobs Spark jobs for one resumed and one fresh chunk")
+  }
+
+  test("a failed chunk is rethrown only after its sibling writes settle") {
+    withTempDir("graft-publish-fail") { dir =>
+      val many = (1 to 6).map(i => (i.toLong, ts("2024-01-01 00:00:00"),
+        "temp", i.toDouble)).toDF("sid", "t", "metric", "v")
+      val e = intercept[IllegalStateException] {
+        Publish.publishChunks(spark, many, spec, dir, cv =>
+          if (cv.head == 1L) throw new IllegalStateException("no header")
+          else Seq("h"))
+      }
+      assert(e.getMessage === "no header")
+      def listing() = {
+        val s = Files.list(Paths.get(dir))
+        try s.toArray.map(_.toString.split("/").last).sorted.toSeq
+        finally s.close()
+      }
+      val atReturn = listing()
+      TestBus.drain(spark.sparkContext)
+      assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+      assert(atReturn === (2 to 6).map(i => s"$i.csv"))
+      Thread.sleep(300)
+      assert(listing() === atReturn)
+    }
   }
 
   test("partitioned publish writes all chunks in one job") {
