@@ -18,9 +18,9 @@ import graft.operators.PivotOps
   *    small distinct() (the catalog is dim-sized). A published series
   *    file is small by construction and written by one task, so each
   *    chunk is shuffled to ONE partition before its pivot and sorted
-  *    within it: one shuffle-map job and one write job per chunk, no
-  *    range sampling. Chunks are independent, so a driver thread pool
-  *    runs them concurrently.
+  *    within it: one exchange and one write per chunk, no
+  *    range-sampling job. Chunks are independent, so a driver thread
+  *    pool runs them concurrently.
   *  - [[publishPartitioned]] — scale: one `partitionBy(chunk keys)`
   *    parquet/csv write, all chunks in a single distributed job. This is
   *    the 100 TB path; the faithful path exists for byte-format parity.

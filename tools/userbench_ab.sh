@@ -7,8 +7,9 @@
 # (it records the side's class-data-sharing archive, whose recording
 # run is slow to start), then every seed runs on both sides, back to
 # back, alternating which side goes first so drift of a shared host
-# falls on both. Prints per-seed setup_s, step_ms and cycle_s, then the
-# medians and how many seeds B won.
+# falls on both. Prints per-seed setup_s, step_ms and cycle_s, then per
+# metric each side's median and quartiles, the median difference in
+# units of A's interquartile range, and how many seeds B won.
 #
 # Usage: tools/userbench_ab.sh <ref> <workload> <seeds> [seconds]
 #   ref       git ref for the A side (B is HEAD)
@@ -101,9 +102,15 @@ for r in table:
     print("  ".join(c.rjust(w[i]) for i, c in enumerate(r)))
 print(f"\nA = {a_ref}, B = {b_ref}; {len(ok)}/{len(rows)} seeds correct on both sides.")
 for n in names:
-    if ok:
-        ma = statistics.median(a[n] for a, _ in ok)
-        mb = statistics.median(b[n] for _, b in ok)
-        wins = sum(b[n] < a[n] for a, b in ok)
-        print(f"{n}: B/A = {mb / ma:.3f}, B lower on {wins}/{len(ok)} seeds")
+    if len(ok) < 2:
+        break
+    a1, am, a3 = statistics.quantiles([a[n] for a, _ in ok], n=4,
+                                      method="inclusive")
+    b1, bm, b3 = statistics.quantiles([b[n] for _, b in ok], n=4,
+                                      method="inclusive")
+    wins = sum(b[n] < a[n] for a, b in ok)
+    print(f"{n}: A {am:.4g} [{a1:.4g}, {a3:.4g}], B {bm:.4g} "
+          f"[{b1:.4g}, {b3:.4g}]; B/A = {bm / am:.3f}; |B-A| = "
+          f"{abs(bm - am) / (a3 - a1) if a3 > a1 else float('inf'):.2f}"
+          f" x A's IQR; B lower on {wins}/{len(ok)} seeds")
 EOF
