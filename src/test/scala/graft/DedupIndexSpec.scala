@@ -75,15 +75,18 @@ class DedupIndexSpec extends SparkSpec {
       // (what makes the pushed filter skip instead of just re-filter)
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val files = fs.globStatus(new org.apache.hadoop.fs.Path(
-        s"$dir/buckets/ingest=0/band=*/part-*")).map(_.getPath)
-      assert(files.nonEmpty)
-      files.take(4).foreach { f =>
-        val b = spark.read.parquet(f.toString)
-          .select("bucket").as[Long].collect()
-        assert(b.sameElements(b.sorted),
-          s"unsorted bucket layout in $f")
+      def assertBucketSorted(gen: Long): Unit = {
+        val files = fs.globStatus(new org.apache.hadoop.fs.Path(
+          s"$dir/buckets/ingest=$gen/band=*/part-*")).map(_.getPath)
+        assert(files.nonEmpty, s"no band files in generation $gen")
+        files.take(4).foreach { f =>
+          val b = spark.read.parquet(f.toString)
+            .select("bucket").as[Long].collect()
+          assert(b.sameElements(b.sorted),
+            s"unsorted bucket layout in $f")
+        }
       }
+      assertBucketSorted(0L)
       // a batch with NO valid signatures (below the shingle width)
       // short-circuits the store scan and probes empty, not an error
       val degenerate = Seq((999999L, "ab")).toDF("doc_id", "text")
@@ -99,6 +102,10 @@ class DedupIndexSpec extends SparkSpec {
       assert(!uncapped.queryExecution.executedPlan.toString
         .contains("In(bucket"))
       assert(uncapped.count() === l.buckets.count())
+      // an appended generation keeps the same layout: the append's
+      // band files are bucket-sorted too
+      DedupIndex.append(spark, dir, arrivals, "text", "doc_id")
+      assertBucketSorted(1L)
     }
   }
 

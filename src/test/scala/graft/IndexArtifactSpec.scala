@@ -613,18 +613,23 @@ class IndexArtifactSpec extends SparkSpec {
       // VectorIndex.build's layout comment)
       val cellFs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val cellFiles = cellFs.globStatus(new org.apache.hadoop.fs.Path(
-        s"$dir/corpus/ingest=0/cell=*/part-*")).map(_.getPath)
-      assert(cellFiles.nonEmpty)
-      cellFiles.take(4).foreach { f =>
-        val b = spark.read.parquet(f.toString)
-          .select("bucket").collect().map(_.getLong(0))
-        assert(b.sameElements(b.sorted),
-          s"unsorted bucket layout in $f")
+      def assertBucketSorted(gen: Long): Unit = {
+        val cellFiles = cellFs.globStatus(new org.apache.hadoop.fs.Path(
+          s"$dir/corpus/ingest=$gen/cell=*/part-*")).map(_.getPath)
+        assert(cellFiles.nonEmpty, s"no cell files in generation $gen")
+        cellFiles.take(4).foreach { f =>
+          val b = spark.read.parquet(f.toString)
+            .select("bucket").collect().map(_.getLong(0))
+          assert(b.sameElements(b.sorted),
+            s"unsorted bucket layout in $f")
+        }
       }
-      // appends keep the column complete under the SAME geometry
+      assertBucketSorted(0L)
+      // appends keep the column complete under the SAME geometry, and
+      // the appended generation's cell files bucket-sorted too
       VectorIndex.append(spark, dir, all.filter(col("vec_id") >= 400)
         .select("vec_id", "embedding"))
+      assertBucketSorted(1L)
       val l2 = VectorIndex.load(spark, dir)
       assert(l2.corpus.filter(col("bucket").isNull ||
         col("bucket") =!= SimilarityOps.signBucket("embedding", bits))
