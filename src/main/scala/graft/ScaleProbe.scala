@@ -457,7 +457,7 @@ object ScaleProbe {
           .repartition(col("cell"))
           // constant `ingest` OUT of the sort list — with it, the
           // writer re-sorts by partition columns alone and the files
-          // ship unsorted (see VectorIndex.build's layout comment)
+          // ship unsorted (see ArtifactManifest.writeGeneration)
           .sortWithinPartitions(col("cell"), col("bucket"))
           .write.partitionBy("ingest", "cell").parquet(dir)
       // batch b arrives from 16 groups — its touched-bucket set is
@@ -622,7 +622,7 @@ object ScaleProbe {
           // sortWithin = bucket)
           .repartition(col("band"))
           // constant `ingest` OUT of the sort list (see
-          // VectorIndex.build's layout comment)
+          // ArtifactManifest.writeGeneration)
           .sortWithinPartitions(col("band"), col("bucket"))
           .write.partitionBy("ingest", "band").parquet(dir)
       // batch b arrives from 8 groups — its touched set is

@@ -67,7 +67,7 @@ object ArtifactManifest {
     * LocatedFileStatus per file, which on the local Hadoop adapter
     * without the native lib forks an `ls` PROCESS per file to read
     * permissions (measured on this box: 64 files, 310 ms listFiles
-    * vs 4 ms listStatus walk — FsProbe). The walk needs only
+    * vs 4 ms listStatus walk). The walk needs only
     * path+length, which plain listStatus carries fork-free.
     */
   private def genListing(s: SparkSession, dir: String,
@@ -554,6 +554,54 @@ object ArtifactManifest {
     compactGenerations(s, dir, partCol, filesPerPartition = fpp,
       sortWithin = sortWithin, vacuum = vacuum,
       rangeFiles = fpp > 1 && sortWithin.nonEmpty)
+  }
+
+  /** The index stores' compaction trigger: once `store` carries
+    * `compactEvery` generations, collapse it with
+    * [[compactGenerationsSized]] (past `graft.index.targetFileBytes`
+    * per partition the files range-split on `sortWithin`, so the
+    * pushed probes keep skipping). File count stays bounded by the
+    * compaction period at any ingest rate.
+    */
+  private[operators] def compactIfDue(s: SparkSession, store: String,
+      key: String, compactEvery: Int, sortWithin: Seq[String]): Unit =
+    if (LayoutOps.ingestGenerations(s, store).size >= compactEvery)
+      compactGenerationsSized(s, store, key, sortWithin = sortWithin)
+
+  /** Write generation `gen` of an index store: `rows` plus the
+    * constant `ingest` column, partitioned by `(ingest, key)`, pages
+    * capped at [[DedupIndex.pageRowLimit]] rows so the pushed probes
+    * skip at page granularity. A non-empty `sortWithin` sorts each
+    * file by `(key, sortWithin…)`. The CONSTANT `ingest` must NOT
+    * appear in that sort list: FoldablePropagation prunes it from the
+    * Sort, the V1 writer then sees an ordering without its required
+    * partition prefix and injects its own non-stable sort by the
+    * partition columns alone, destroying the secondary order (on both
+    * the static and dynamic overwrite paths). Sorting by the real
+    * columns leaves the required ordering satisfied (the constant is
+    * pruned from it too) and the files sorted.
+    *
+    * A build (`append = false`) statically overwrites the store and
+    * returns the written frame's shape ([[frameShapeJson]]) for the
+    * caller to record with [[recordBuild]] after its own fence. An
+    * append dynamically overwrites only generation `gen` — a replayed
+    * batch replaces its own partitions, so per-batch ingest is
+    * idempotent — and records it with [[recordAppend]].
+    */
+  private[operators] def writeGeneration(rows: DataFrame, store: String,
+      key: String, gen: Long, sortWithin: Seq[String],
+      append: Boolean): String = {
+    val s = rows.sparkSession
+    val tagged = rows.withColumn("ingest", lit(gen))
+    val w = (if (sortWithin.isEmpty) tagged
+        else tagged.sortWithinPartitions((key +: sortWithin).map(col): _*))
+      .write.mode("overwrite")
+      .option("parquet.page.row.count.limit", DedupIndex.pageRowLimit(s))
+    (if (append) w.option("partitionOverwriteMode", "dynamic") else w)
+      .partitionBy("ingest", key).parquet(store)
+    val shape = frameShapeJson(tagged.schema, Seq("ingest", key))
+    if (append) recordAppend(s, store, gen, Some(shape))
+    shape
   }
 
   /** The clustered plan for one generation of a VERSIONED clustered

@@ -254,36 +254,22 @@ object DedupIndex {
     // members at the probe) — drop it first; between here and
     // buildMembers below, serving degrades to unpruned, never wrong
     dropMembers(s, dir)
-    val rows = stamped(bucketsOf(docs, textCol, idCol, k, rowsPerBand),
-        k, rowsPerBand)
-      .withColumn("ingest", lit(0L))
     // bucket-sorted layout WITHIN each band partition's files:
     // row-group/page min/max stats on `bucket` become tight, so the
     // probe's pushed touched-bucket In filter ([[touchedPrune]])
     // skips instead of scanning every block — the text twin of
-    // [[VectorIndex.build]]'s gate layout. The CONSTANT `ingest` key
-    // must NOT appear in the sort list: FoldablePropagation prunes
-    // it from the Sort, the V1 writer then sees an ordering that no
-    // longer carries its required partition prefix and injects its
-    // own non-stable sort by the partition columns alone — silently
-    // destroying the bucket order (verified empirically on both the
-    // static and dynamic overwrite paths). Sorting by the REAL
-    // columns only leaves the required ordering satisfied (the
-    // constant is pruned from it too) and the files sorted.
-    rows.sortWithinPartitions(col("band"), col("bucket"))
-      .write.mode("overwrite")
-      .option("parquet.page.row.count.limit", pageRowLimit(s))
-      .partitionBy("ingest", "band")
-      .parquet(s"$dir/buckets")
+    // [[VectorIndex.build]]'s gate layout
+    val shape = ArtifactManifest.writeGeneration(
+      stamped(bucketsOf(docs, textCol, idCol, k, rowsPerBand), k,
+        rowsPerBand),
+      s"$dir/buckets", "band", 0L, Seq("bucket"), append = false)
     // fence after the long signature+write stage, before the
     // geometry commit (params) and manifest publish: a holder whose
     // bucket write outlasted the steal horizon stops here, leaving
     // buckets-complete/params-missing — the incomplete state a
     // re-run converges (builtComplete)
     WriterLease.verifyHeld(s, leaseRoot(dir))
-    ArtifactManifest.recordBuild(s, s"$dir/buckets",
-      Some(ArtifactManifest.frameShapeJson(rows.schema,
-        Seq("ingest", "band"))))
+    ArtifactManifest.recordBuild(s, s"$dir/buckets", Some(shape))
     Seq((k, rowsPerBand)).toDF("k", "rows_per_band")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
     buildMembers(docs, idCol, dir)
@@ -790,12 +776,8 @@ object DedupIndex {
       val l = load(s, dir)
       appendWith(l.k, l.rowsPerBand, dir, newDocs, textCol, idCol,
         nextGeneration(s, s"$dir/buckets"))
-      if (LayoutOps.ingestGenerations(s, s"$dir/buckets")
-          .size >= compactEvery)
-        // SIZED: past graft.index.targetFileBytes per band the files
-        // range-split on bucket so the pushed probes keep skipping
-        ArtifactManifest.compactGenerationsSized(s, s"$dir/buckets",
-          "band", sortWithin = Seq("bucket"))
+      ArtifactManifest.compactIfDue(s, s"$dir/buckets", "band",
+        compactEvery, Seq("bucket"))
     }
   }
 
@@ -822,25 +804,15 @@ object DedupIndex {
     // membership FIRST: a crash between the two writes must leave the
     // sketch a superset (see the membership-sketch block above)
     orMembers(newDocs, idCol, dir)
-    val rows = stamped(
-        bucketsOf(newDocs, textCol, idCol, k, rowsPerBand), k,
-        rowsPerBand)
-      .withColumn("ingest", lit(generation))
     // pre-write fence (no-op on the lease-less streaming fast path)
     WriterLease.verifyHeld(newDocs.sparkSession, leaseRoot(dir))
     // bucket-sorted within the generation's band files, same as
     // [[build]] — keeps the probe's row-group skipping effective
-    // across appends (and like build, the constant `ingest` stays
-    // OUT of the sort list — see build's layout comment)
-    rows.sortWithinPartitions(col("band"), col("bucket"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .option("parquet.page.row.count.limit",
-        pageRowLimit(newDocs.sparkSession))
-      .partitionBy("ingest", "band").parquet(s"$dir/buckets")
-    ArtifactManifest.recordAppend(newDocs.sparkSession,
-      s"$dir/buckets", generation, Some(ArtifactManifest.frameShapeJson(rows.schema,
-        Seq("ingest", "band"))))
+    // across appends
+    ArtifactManifest.writeGeneration(
+      stamped(bucketsOf(newDocs, textCol, idCol, k, rowsPerBand), k,
+        rowsPerBand),
+      s"$dir/buckets", "band", generation, Seq("bucket"), append = true)
   }
 
   /** Delete documents from the index by id — the takedown path (the
@@ -1221,20 +1193,11 @@ object DedupIndex {
               .option("partitionOverwriteMode", "dynamic")
               .partitionBy("batch").parquet(s"$root/decisions")
           } {
-            val rows = bb.withColumn("ingest", lit(batchId + 1))
-            // bucket-sorted like every other generation writer — the
-            // NEXT batch's pushed probe skips this generation's
-            // un-touched row groups too (constant `ingest` out of the
-            // sort list — see build's layout comment)
-            rows.sortWithinPartitions(col("band"), col("bucket"))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .option("parquet.page.row.count.limit", pageRowLimit(ss))
-              .partitionBy("ingest", "band")
-              .parquet(s"$root/index/buckets")
-            ArtifactManifest.recordAppend(ss, s"$root/index/buckets",
-              batchId + 1, Some(ArtifactManifest.frameShapeJson(rows.schema,
-          Seq("ingest", "band"))))
+            // bucket-sorted like every other generation — the NEXT
+            // batch's pushed probe skips this generation's un-touched
+            // row groups too
+            ArtifactManifest.writeGeneration(bb, s"$root/index/buckets",
+              "band", batchId + 1, Seq("bucket"), append = true)
           }
         } finally bb.unpersist()
       }
@@ -1245,10 +1208,8 @@ object DedupIndex {
     // overwrite would target a partition the collapse removed. At
     // this point every batch is checkpoint-committed, so nothing can
     // replay, and collapsing the per-batch bucket files is safe.
-    if (LayoutOps.ingestGenerations(ss, s"$root/index/buckets")
-        .size >= compactEvery)
-      ArtifactManifest.compactGenerationsSized(ss,
-        s"$root/index/buckets", "band", sortWithin = Seq("bucket"))
+    ArtifactManifest.compactIfDue(ss, s"$root/index/buckets", "band",
+      compactEvery, Seq("bucket"))
     // sketch over EVERY ingested id (corpus + all arrivals — the
     // gate appends every batch's buckets, admitted or not): one
     // column-pruned pass per stream, sized fresh

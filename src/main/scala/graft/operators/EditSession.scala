@@ -15,8 +15,9 @@ import org.apache.spark.storage.StorageLevel
   * state; rollback (M6) is simply retaining the parent state — lineage
   * is the undo log. Nothing is written until an explicit sink call
   * (M7: a Spark write is atomic per output). Unlike the reference this
-  * holds ALL series at once, partitioned by series key — the "session"
-  * scales out instead of being one Python process per series.
+  * holds ALL series at once: [[EditSession.open]] persists the source
+  * frame as given (no repartitioning), so the session spans whatever
+  * partitions the source has instead of one Python process per series.
   */
 final class EditSession private (val df: DataFrame,
     parent: Option[EditSession]) {

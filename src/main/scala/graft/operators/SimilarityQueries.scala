@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.{ArtifactManifest, DedupOps, Par,
+import graft.operators.{ArtifactManifest, DedupOps,
   ProductQuantization, SimilarityOps, TempArtifacts, VectorIndex}
 
 /** Similarity-search inventory over `embeddings` (64-dim float
@@ -341,26 +341,17 @@ object SimilarityQueries {
       val e = SimilarityOps.trainCache(
         SimilarityOps.withNorm(embeddings(s, d), "embedding", "n"))
       try {
-      // independent trainings overlapped (Par.both — see
-      // VectorIndex.build's rationale; read-only)
-      val (cents, books) = Par.both {
-        SimilarityOps.trainIvf(e, Dim, LloydSteps)
-      } {
-        ProductQuantization.train(
-          e, "embedding", "vec_id", PqSub, PqSubDim, PqK, steps = 1)
-      }
-      val assigned = e.withColumn("cell",
-        SimilarityOps.ivfAssign(cents, Dim))
+      val (cents, books) =
+        VectorIndex.fit(e, Dim, LloydSteps, PqSub, PqSubDim, PqK)
+      val coded = VectorIndex.encode(e, cents, books, Dim, PqSubDim)
       // repartition by cell = the inverted-list build + the
       // materialization barrier that keeps codegen's deferred
       // evaluation from re-running assign+encode per join match
       // (measured 5-7x, see s7 / NOTES plan-shape traps)
-      val enc = ProductQuantization.encode(
-        assigned, "embedding", books, PqSubDim, "code")
-        .select(col("vec_id"), col("cell"), col("code"))
+      val enc = coded.select(col("vec_id"), col("cell"), col("code"))
         .repartition(s.sessionState.conf.numShufflePartitions,
           col("cell"))
-      val q = assigned.filter(col("vec_id") < NQueries)
+      val q = coded.filter(col("vec_id") < NQueries)
         .select(col("vec_id").as("q_id"),
           ProductQuantization.adcTablesCol(
             col("embedding"), books, PqSubDim).as("qt"),
@@ -408,32 +399,19 @@ object SimilarityQueries {
       val e = SimilarityOps.trainCache(
         SimilarityOps.withNorm(embeddings(s, d), "embedding", "n"))
       try {
-      // independent trainings overlapped (Par.both — see
-      // VectorIndex.build's rationale; read-only)
-      val (cents, books) = Par.both {
-        SimilarityOps.trainIvf(e, Dim, LloydSteps)
-      } {
-        ProductQuantization.train(
-          e, "embedding", "vec_id", PqSub, PqSubDim, PqK, steps = 1)
-      }
-      val assigned = e.withColumn("cell",
-        SimilarityOps.ivfAssign(cents, Dim))
+      val (cents, books) =
+        VectorIndex.fit(e, Dim, LloydSteps, PqSub, PqSubDim, PqK)
+      val coded = VectorIndex.encode(e, cents, books, Dim, PqSubDim)
       // LEAN inverted list: only (vec_id, cell, code) rides the
       // barrier shuffle — full-precision vectors are fetched later,
       // for the shortlist only (see the re-rank below)
-      val enc = ProductQuantization.encode(
-        assigned, "embedding", books, PqSubDim, "code")
-        .select(col("vec_id"), col("cell"), col("code"))
+      val enc = coded.select(col("vec_id"), col("cell"), col("code"))
         .repartition(s.sessionState.conf.numShufflePartitions,
           col("cell"))
       // centroid table from the trained driver state (k rows — the
       // same legitimacy class as a broadcast dim table)
-      val centDf = {
-        import s.implicits._
-        cents.cells.indices.map(c => (cents.cells(c),
-          cents.books.slice(c * Dim, (c + 1) * Dim).toSeq,
-          cents.mns(c))).toDF("cell", "cvec", "cn")
-      }
+      val centDf =
+        VectorIndex.centroidFrame(s, cents, Dim, floatVecs = false)
       val q = e.filter(col("vec_id") < NQueries)
         .select(col("vec_id").as("q_id"), col("embedding").as("qv"),
           col("n").as("qn"))

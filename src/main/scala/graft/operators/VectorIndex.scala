@@ -107,17 +107,7 @@ object VectorIndex {
     val e = SimilarityOps.trainCache(
       SimilarityOps.withNorm(e0, "embedding", "n"))
     try {
-    // the two quantizer trainings are independent (coarse cells from
-    // Lloyd over `e`; PQ codebooks from Lloyd over `e`'s subspaces)
-    // and mutate nothing — overlap them so one's driver-side collect/
-    // recentroid phase runs under the other's jobs (Par's contract;
-    // read-only, so the crash sweeps' mutating-op order is untouched)
-    val (cents, books) = Par.both {
-      SimilarityOps.trainIvf(e, dim, lloydSteps)
-    } {
-      ProductQuantization.train(
-        e, "embedding", "vec_id", subspaces, subDim, k, steps = 1)
-    }
+    val (cents, books) = fit(e, dim, lloydSteps, subspaces, subDim, k)
     // heartbeat + fence after the long training stage, BEFORE the
     // first destructive write: a holder whose training outlasted the
     // steal horizon (and was legally stolen) dies here instead of
@@ -131,10 +121,7 @@ object VectorIndex {
     // quantizer state complete (buildOrLoad keys on the corpus
     // marker and load() reads both trees).
     Par.both {
-      cents.cells.indices.map(c => (cents.cells(c),
-          cents.books.slice(c * dim, (c + 1) * dim).toSeq,
-          cents.mns(c)))
-        .toDF("cell", "cvec", "cn")
+      centroidFrame(s, cents, dim, floatVecs = false)
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
     } {
       books.zipWithIndex.flatMap { case (cbs, j) =>
@@ -142,36 +129,17 @@ object VectorIndex {
         .toDF("j", "c", "m")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks")
     }
-    val assigned = e.withColumn("cell",
-      SimilarityOps.ivfAssign(cents, dim))
     // drift baseline: the training corpus's mean assigned-centroid
     // cosine under the quantizers just trained ON it — the "no drift"
-    // reference [[append]] compares each batch against. FOLDED INTO
-    // the corpus write via observe(): one broadcast join against the
-    // k-row centroid table rides the encode+write job, instead of the
-    // extra full-corpus read-back this used to pay (at 100 TB that
-    // read-back was a whole second pass per build). A corpus of only
-    // zero-norm vectors yields no statistic (avg over all-null) — no
-    // baseline file, signal stays off.
+    // reference [[append]] compares each batch against, observed on
+    // the corpus write ([[observeDrift]]). A corpus of only zero-norm
+    // vectors yields no statistic (avg over all-null) — no baseline
+    // file, signal stays off.
     val drift = new org.apache.spark.sql.Observation("drift_base")
-    val rows = ProductQuantization.encode(assigned, "embedding", books,
-        subDim, "code")
-      // left join: the centroid table covers every cell ivfAssign can
-      // emit, but corpus rows must survive even if it didn't
-      .join(broadcast(centroidTable(s, cents, dim)), Seq("cell"),
-        "left")
-      .observe(drift, avg(when(col("n") > 0 && col("cn") > 0,
-        call_function("vec_dot", col("embedding"), col("cvec")) /
-          (col("n") * col("cn")))).as("base_cos"),
-        count(lit(1)).as("n_rows"))
-      // the serving columns, the gate bucket when stamped, plus any
-      // declared filter metadata — other input columns (and the
-      // joined centroid columns) don't belong in the index artifact
-      .withColumn("bucket", gateBits.fold(lit(null).cast("long"))(b =>
-        SimilarityOps.signBucket("embedding", b)))
-      .select((Seq("vec_id", "embedding", "n", "cell", "code") ++
-        gateBits.map(_ => "bucket").toSeq ++ metaCols).map(col): _*)
-      .withColumn("ingest", lit(0L))
+    val rows = corpusRows(
+      observeDrift(encode(e, cents, books, dim, subDim), cents, dim,
+        drift, "base_cos", count(lit(1)).as("n_rows")),
+      gateBits, metaCols)
     // a re-build drops the previous sketch AND gate stamp BEFORE the
     // corpus overwrite (DedupIndex.buildMembers' crash argument; the
     // stamp must never outlive the bucket column it describes)
@@ -180,21 +148,9 @@ object VectorIndex {
     // a gate-stamped corpus is laid out bucket-sorted WITHIN each
     // cell's files: row-group min/max stats on `bucket` become tight,
     // so the gate's pushed touched-bucket filter skips row groups
-    // instead of scanning every block. The CONSTANT `ingest` key must
-    // NOT appear in the sort list: FoldablePropagation prunes it from
-    // the Sort, the V1 writer then sees an ordering that no longer
-    // carries its required partition prefix and injects its own
-    // NON-STABLE sort by the partition columns alone — silently
-    // destroying the bucket order (verified empirically on both the
-    // static and dynamic overwrite paths; the earlier
-    // `(ingest, cell, bucket)` spelling shipped unsorted files).
-    gateBits.fold(rows)(_ => rows.sortWithinPartitions(
-        col("cell"), col("bucket")))
-      .write.mode("overwrite")
-      .option("parquet.page.row.count.limit",
-        DedupIndex.pageRowLimit(s))
-      .partitionBy("ingest", "cell")
-      .parquet(s"$dir/corpus")
+    // instead of scanning every block
+    val shape = ArtifactManifest.writeGeneration(rows, s"$dir/corpus",
+      "cell", 0L, bucketCol(gateBits), append = false)
     // fence after the long encode+write stage, before the stamp/
     // manifest/sketch publishes (the build's commit-equivalents)
     WriterLease.verifyHeld(s, DedupIndex.leaseRoot(dir))
@@ -225,9 +181,7 @@ object VectorIndex {
       metrics.get("base_cos").flatMap(Option(_))
         .foreach(c => Seq(c.asInstanceOf[Double]).toDF("base_cos")
           .coalesce(1).write.mode("overwrite").parquet(s"$dir/drift"))
-      ArtifactManifest.recordBuild(s, s"$dir/corpus",
-        Some(ArtifactManifest.frameShapeJson(rows.schema,
-          Seq("ingest", "cell"))))
+      ArtifactManifest.recordBuild(s, s"$dir/corpus", Some(shape))
     } {
       DedupIndex.buildMembers(e, "vec_id", dir,
         metrics.get("n_rows").map(_.asInstanceOf[Long]))
@@ -236,20 +190,97 @@ object VectorIndex {
     }
   }
 
-  /** The k-row (cell, cvec, cn) centroid table for the drift dot
-    * product — FLOAT centroid copies so it runs through the native
-    * codegen'd vec_dot instead of a zip_with/aggregate lambda chain
-    * (measured ~2x on the whole-build bench delta); the signal is
-    * tolerance-thresholded, so the float rounding is irrelevant.
+  /** Train both quantizers on `e` (vec_id, embedding, n): the coarse
+    * cells by Lloyd over `e`, the PQ codebooks by Lloyd over its
+    * subspaces. The two trainings are independent and mutate nothing,
+    * so they overlap ([[Par.both]]): one's driver-side collect/
+    * recentroid phase runs under the other's jobs, and a failure in
+    * either waits for the other before it propagates.
     */
-  private def centroidTable(s: SparkSession,
-      cents: SimilarityOps.IvfCentroids, dim: Int): DataFrame = {
+  private[graft] def fit(e: DataFrame, dim: Int, lloydSteps: Int,
+      subspaces: Int, subDim: Int, k: Int)
+      : (SimilarityOps.IvfCentroids, ProductQuantization.Codebooks) =
+    Par.both {
+      SimilarityOps.trainIvf(e, dim, lloydSteps)
+    } {
+      ProductQuantization.train(
+        e, "embedding", "vec_id", subspaces, subDim, k, steps = 1)
+    }
+
+  /** `e` (vec_id, embedding, n, …) under trained quantizers: its
+    * coarse `cell` ([[SimilarityOps.ivfAssign]]) and its PQ `code`.
+    */
+  private[graft] def encode(e: DataFrame,
+      cents: SimilarityOps.IvfCentroids,
+      books: ProductQuantization.Codebooks, dim: Int,
+      subDim: Int): DataFrame =
+    ProductQuantization.encode(
+      e.withColumn("cell", SimilarityOps.ivfAssign(cents, dim)),
+      "embedding", books, subDim, "code")
+
+  /** The k-row (cell, cvec, cn) centroid table. `floatVecs` makes the
+    * FLOAT centroid copies the drift dot product uses, so it runs
+    * through the native codegen'd vec_dot instead of a zip_with/
+    * aggregate lambda chain (measured ~2x on the whole-build bench
+    * delta); the signal is tolerance-thresholded, so the float
+    * rounding is irrelevant.
+    */
+  private[graft] def centroidFrame(s: SparkSession,
+      cents: SimilarityOps.IvfCentroids, dim: Int,
+      floatVecs: Boolean): DataFrame = {
     import s.implicits._
-    cents.cells.indices.map(c => (cents.cells(c),
-        cents.books.slice(c * dim, (c + 1) * dim).map(_.toFloat).toSeq,
-        cents.mns(c)))
-      .toDF("cell", "cvec", "cn")
+    val rows = cents.cells.indices.map(c => (cents.cells(c),
+      cents.books.slice(c * dim, (c + 1) * dim).toSeq, cents.mns(c)))
+    if (floatVecs)
+      rows.map { case (c, v, n) => (c, v.map(_.toFloat), n) }
+        .toDF("cell", "cvec", "cn")
+    else rows.toDF("cell", "cvec", "cn")
   }
+
+  /** The drift statistic folded into an encoded write: `enc`'s mean
+    * assigned-centroid cosine (zero-norm rows excluded) observed as
+    * `stat` through `drift`, plus any `extra` aggregates. One
+    * broadcast left join against the k-row centroid table rides the
+    * encode+write job instead of a read-back of the written rows (at
+    * 100 TB a whole second pass); the join is LEFT because rows must
+    * survive even a cell the table did not cover.
+    */
+  private def observeDrift(enc: DataFrame,
+      cents: SimilarityOps.IvfCentroids, dim: Int,
+      drift: org.apache.spark.sql.Observation, stat: String,
+      extra: org.apache.spark.sql.Column*): DataFrame =
+    enc.join(broadcast(centroidFrame(enc.sparkSession, cents, dim,
+        floatVecs = true)), Seq("cell"), "left")
+      .observe(drift, avg(when(col("n") > 0 && col("cn") > 0,
+        call_function("vec_dot", col("embedding"), col("cvec")) /
+          (col("n") * col("cn")))).as(stat), extra: _*)
+
+  /** The stored corpus columns of encoded rows: the serving five, the
+    * gate bucket (computed under the stamped geometry inside the same
+    * encode pass) when `gateBits` is set, and the declared filter
+    * metadata — other input columns and the joined centroid columns
+    * don't belong in the index artifact.
+    */
+  private def corpusRows(enc: DataFrame, gateBits: Option[Int],
+      metaCols: Seq[String]): DataFrame =
+    enc.withColumn("bucket", gateBits.fold(lit(null).cast("long"))(b =>
+        SimilarityOps.signBucket("embedding", b)))
+      .select((Seq("vec_id", "embedding", "n", "cell", "code") ++
+        bucketCol(gateBits) ++ metaCols).map(col): _*)
+
+  /** The gate's `bucket` column when the artifact is stamped: stored
+    * beside the serving columns, and the secondary sort of every
+    * write, compaction and takedown rewrite of the cell files.
+    */
+  private def bucketCol(gateBits: Option[Int]): Seq[String] =
+    gateBits.map(_ => "bucket").toSeq
+
+  /** The artifact's metadata columns: anything beyond the serving
+    * five, the stamped gate bucket and the generation.
+    */
+  private def metaColsOf(l: Loaded): Seq[String] =
+    l.corpus.columns.toSeq.filterNot(Set("vec_id", "embedding", "n",
+      "cell", "code", "bucket", "ingest"))
 
   /** The stored drift baseline ([[build]] writes it; artifacts built
     * before the drift signal existed have none).
@@ -407,16 +438,10 @@ object VectorIndex {
     } {
       appendWithDrift(l, dir, newVecs, gen)
     }
-    val tripped =
-      base.exists(b => cos.exists(_ < b - driftTolerance))
-    if (LayoutOps.ingestGenerations(s, s"$dir/corpus")
-        .size >= compactEvery)
-      // SIZED: a cell past graft.index.targetFileBytes range-splits
-      // its files on bucket (gate-stamped artifacts) so the pushed
-      // probes keep skipping; ungated corpora split by hash
-      ArtifactManifest.compactGenerationsSized(s, s"$dir/corpus",
-        "cell", sortWithin = l.gateBits.map(_ => "bucket").toSeq)
-    tripped
+    // ungated corpora (no bucket sort) split oversized cells by hash
+    ArtifactManifest.compactIfDue(s, s"$dir/corpus", "cell",
+      compactEvery, bucketCol(l.gateBits))
+    base.exists(b => cos.exists(_ < b - driftTolerance))
     }
   }
 
@@ -448,55 +473,26 @@ object VectorIndex {
   private[operators] def appendWithDrift(l: Loaded, dir: String,
       newVecs: DataFrame, generation: Long): Option[Double] = {
     val dim = l.cents.books.length / l.cents.cells.length
-    val subDim = l.books.head.head.length
-    val ss = newVecs.sparkSession
-    // the artifact's metadata columns (anything beyond the serving
-    // five, the stamped gate bucket, and the generation) must arrive
-    // with the new vectors too
-    val metaCols = l.corpus.columns.toSeq
-      .filterNot(Set("vec_id", "embedding", "n", "cell", "code",
-        "bucket", "ingest"))
     // membership before the corpus append (superset-on-crash)
     DedupIndex.orMembers(newVecs, "vec_id", dir)
     val drift = new org.apache.spark.sql.Observation
-    val rows = ProductQuantization.encode(
-        SimilarityOps.withNorm(newVecs, "embedding", "n")
-          .withColumn("cell", SimilarityOps.ivfAssign(l.cents, dim)),
-        "embedding", l.books, subDim, "code")
-      // left join, zero-norm rows excluded from the statistic —
-      // build's drift-baseline fold verbatim
-      .join(broadcast(centroidTable(ss, l.cents, dim)), Seq("cell"),
-        "left")
-      .observe(drift, avg(when(col("n") > 0 && col("cn") > 0,
-        call_function("vec_dot", col("embedding"), col("cvec")) /
-          (col("n") * col("cn")))).as("batch_cos"))
-      // a gate-stamped artifact keeps its bucket column CONSISTENT
-      // across appends: the batch's buckets are computed under the
-      // stamped geometry inside the same encode pass
-      .withColumn("bucket", l.gateBits.fold(lit(null).cast("long"))(
-        b => SimilarityOps.signBucket("embedding", b)))
-      .select((Seq("vec_id", "embedding", "n", "cell", "code") ++
-        l.gateBits.map(_ => "bucket").toSeq ++ metaCols).map(col): _*)
-      .withColumn("ingest", lit(generation))
+    // the artifact's metadata columns must arrive with the new vectors
+    // too; a gate-stamped artifact keeps its bucket column consistent
+    // across appends
+    val rows = corpusRows(
+      observeDrift(encode(SimilarityOps.withNorm(newVecs, "embedding",
+          "n"), l.cents, l.books, dim, l.books.head.head.length),
+        l.cents, dim, drift, "batch_cos"),
+      l.gateBits, metaColsOf(l))
     // pre-write fence: a batch-mutator holder that stalled past the
     // steal horizon refuses before touching the corpus (no-op on the
     // lease-less streaming fast path — run-private roots)
     WriterLease.verifyHeld(newVecs.sparkSession,
       DedupIndex.leaseRoot(dir))
-    // bucket-sorted layout within the generation's cell files, same
-    // as [[build]] — keeps the gate's row-group skipping effective
-    // across appends (constant `ingest` out of the sort list — see
-    // build's layout comment)
-    l.gateBits.fold(rows)(_ => rows.sortWithinPartitions(
-        col("cell"), col("bucket")))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .option("parquet.page.row.count.limit",
-        DedupIndex.pageRowLimit(newVecs.sparkSession))
-      .partitionBy("ingest", "cell").parquet(s"$dir/corpus")
-    ArtifactManifest.recordAppend(newVecs.sparkSession,
-      s"$dir/corpus", generation, Some(ArtifactManifest.frameShapeJson(rows.schema,
-        Seq("ingest", "cell"))))
+    // bucket-sorted within the generation's cell files, same as
+    // [[build]] — keeps the gate's row-group skipping effective
+    ArtifactManifest.writeGeneration(rows, s"$dir/corpus", "cell",
+      generation, bucketCol(l.gateBits), append = true)
     drift.get.get("batch_cos").flatMap(Option(_))
       .map(_.asInstanceOf[Double])
   }
@@ -532,9 +528,7 @@ object VectorIndex {
     // it under the carried gate stamp (embedding-derived, so the
     // values are identical — but routing it through the stamp keeps
     // exactly one source of truth for the geometry)
-    val metaCols = l.corpus.columns.toSeq
-      .filterNot(Set("vec_id", "embedding", "n", "cell", "code",
-        "bucket", "ingest"))
+    val metaCols = metaColsOf(l)
     // SIBLING, not string concatenation: under a trailing-slash dir
     // the naive concat yields a CHILD of the live tree, which the
     // swap's rename-aside then carries away — stranding the staged
@@ -606,7 +600,7 @@ object VectorIndex {
       // through the takedown (the pushed gate filter's layout)
       LayoutOps.deleteKeysPartitioned(s, s"$dir/corpus", "cell",
         "vec_id", tombs, staged = staged,
-        sortWithin = gateBitsOf(s, dir).map(_ => "bucket").toSeq)
+        sortWithin = bucketCol(gateBitsOf(s, dir)))
       ArtifactManifest.refreshAfterDelete(s, s"$dir/corpus")
     }
 
@@ -1001,12 +995,9 @@ object VectorIndex {
         // the batch is encoded ONCE (norm, cell, PQ code, bucket),
         // persisted for the batch's lifetime, and both served to the
         // gate and appended — instead of encoding separately for each
-        val enc = ProductQuantization.encode(
-            SimilarityOps.withNorm(
-              batch.select("vec_id", "embedding"), "embedding", "n")
-              .withColumn("cell",
-                SimilarityOps.ivfAssign(frozen.cents, dim)),
-            "embedding", frozen.books, subDim, "code")
+        val enc = encode(SimilarityOps.withNorm(
+              batch.select("vec_id", "embedding"), "embedding", "n"),
+            frozen.cents, frozen.books, dim, subDim)
           .withColumn("bucket",
             SimilarityOps.signBucket("embedding", bits))
           .persist()
@@ -1032,23 +1023,11 @@ object VectorIndex {
             // the batch's bucket (already computed for the gate) is
             // appended too, keeping the stored column complete so the
             // NEXT batch's stored side never derives
-            val rows = enc
-              .select((Seq("vec_id", "embedding", "n", "cell", "code")
-                ++ storedBits.map(_ => "bucket").toSeq).map(col): _*)
-              .withColumn("ingest", lit(batchId + 1))
-            // constant `ingest` out of the sort list — see build's
-            // layout comment
-            storedBits.fold(rows)(_ => rows.sortWithinPartitions(
-                col("cell"), col("bucket")))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .option("parquet.page.row.count.limit",
-                DedupIndex.pageRowLimit(ss))
-              .partitionBy("ingest", "cell")
-              .parquet(s"$root/index/corpus")
-            ArtifactManifest.recordAppend(ss, s"$root/index/corpus",
-              batchId + 1, Some(ArtifactManifest.frameShapeJson(rows.schema,
-          Seq("ingest", "cell"))))
+            ArtifactManifest.writeGeneration(
+              enc.select((Seq("vec_id", "embedding", "n", "cell", "code")
+                ++ bucketCol(storedBits)).map(col): _*),
+              s"$root/index/corpus", "cell", batchId + 1,
+              bucketCol(storedBits), append = true)
           }
         } finally enc.unpersist()
       }
@@ -1058,11 +1037,8 @@ object VectorIndex {
     // (a replayed batch's generation-keyed overwrite would target a
     // partition the collapse removed); every batch is
     // checkpoint-committed here, so nothing can replay
-    if (LayoutOps.ingestGenerations(ss, s"$root/index/corpus")
-        .size >= compactEvery)
-      ArtifactManifest.compactGenerationsSized(ss,
-        s"$root/index/corpus", "cell",
-        sortWithin = storedBits.map(_ => "bucket").toSeq)
+    ArtifactManifest.compactIfDue(ss, s"$root/index/corpus", "cell",
+      compactEvery, bucketCol(storedBits))
     // sketch over every ingested vec id (corpus + all arrivals): one
     // column-pruned pass per stream, sized fresh
     DedupIndex.buildMembers(e0, "vec_id", s"$root/index")

@@ -374,16 +374,6 @@ object StreamingOps {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    // dev diagnostics: per-batch wall time + state-store metrics
-    if (sys.env.get("SPARK_GRAFT_STREAM_DEBUG").contains("1"))
-      q.recentProgress.foreach { p =>
-        val st = p.stateOperators.map(s =>
-          s"op=${s.operatorName} rows=${s.numRowsTotal} " +
-            s"updated=${s.numRowsUpdated} commitMs=${s.allUpdatesTimeMs}")
-          .mkString("; ")
-        println(s"[stream-debug] $name batch=${p.batchId} " +
-          s"durMs=${p.batchDuration} rows=${p.numInputRows} $st")
-      }
     spark.table(name)
   }
 }

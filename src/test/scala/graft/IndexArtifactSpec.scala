@@ -610,7 +610,7 @@ class IndexArtifactSpec extends SparkSpec {
       // pushed filter's row-group/page skipping depends on. This was
       // silently false before: a constant `ingest` in the sort list
       // makes the writer re-sort by partition columns alone (see
-      // VectorIndex.build's layout comment)
+      // ArtifactManifest.writeGeneration)
       val cellFs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       def assertBucketSorted(gen: Long): Unit = {
@@ -1011,5 +1011,35 @@ class IndexArtifactSpec extends SparkSpec {
       }
       assert(ex.getMessage.contains("gate-stamped"), ex.getMessage)
     } finally rmTree(root)
+  }
+
+  test("a failed fit leaves no active job, no cached training frame " +
+      "and no held lease behind") {
+    withTempDir("graft-fit-fail") { root =>
+      // the index under a subdirectory, so its sibling lease root is
+      // removed with the temp dir
+      val dir = s"$root/idx"
+      val all = Tables.embeddings(spark, d).select("vec_id", "embedding")
+      // no seed id (vec_id < 8): the IVF training's require throws
+      // while the PQ training runs beside it
+      val ex = intercept[IllegalArgumentException] {
+        VectorIndex.build(all.filter(col("vec_id") >= 8), dim, steps,
+          sub, subDim, k, dir)
+      }
+      assert(ex.getMessage.contains("no seed vectors"), ex.getMessage)
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+      // the cost-gated training cache was released on the failure path
+      assert(spark.sharedState.cacheManager.isEmpty)
+      // the lease was released: a valid build from ANOTHER thread (a
+      // leaked holder would refuse it there) enters and completes
+      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val t = new Thread(() =>
+        try VectorIndex.build(all, dim, steps, sub, subDim, k, dir)
+        catch { case x: Throwable => errs.add(x) })
+      t.start(); t.join()
+      assert(errs.isEmpty, errs.toArray.mkString(", "))
+      assert(VectorIndex.load(spark, dir).corpus.count() === all.count())
+    }
   }
 }

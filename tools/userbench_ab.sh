@@ -9,7 +9,14 @@
 # back, alternating which side goes first so drift of a shared host
 # falls on both. Prints per-seed setup_s, step_ms and cycle_s, then per
 # metric each side's median and quartiles, the median difference in
-# units of A's interquartile range, and how many seeds B won.
+# units of A's interquartile range, and how many seeds B won. Last, one
+# verdict per metric against its `bound` in BENCHMARK.json:
+#   unresolved     A's IQR/median exceeds the bound (too noisy to judge)
+#                  and not every B run beats every A run;
+#   REGRESSION     B's median is worse than A's by more than the bound;
+#   no regression  otherwise, with ", separates" appended when B wins
+#                  at least 9 of 10 pairs and the medians differ by
+#                  more than A's IQR (the bar a claimed gain must clear).
 #
 # Usage: tools/userbench_ab.sh <ref> <workload> <seeds> [seconds]
 #   ref       git ref for the A side (B is HEAD)
@@ -69,9 +76,11 @@ for s in "${SEEDS[@]}"; do
   i=$((i + 1))
 done
 
-python3 - "$WORK" "$A_SHORT" "$B_SHORT" "${SEEDS[@]}" <<'EOF'
+python3 - "$ROOT/BENCHMARK.json" "$WORK" "$A_SHORT" "$B_SHORT" \
+    "${SEEDS[@]}" <<'EOF'
 import json, statistics, sys
-work, a_ref, b_ref, seeds = sys.argv[1], sys.argv[2], sys.argv[3], sys.argv[4:]
+bench, work, a_ref, b_ref, seeds = (sys.argv[1], sys.argv[2], sys.argv[3],
+                                    sys.argv[4], sys.argv[5:])
 names = ("setup_s", "step_ms", "cycle_s")
 
 def load(side, seed):
@@ -113,4 +122,28 @@ for n in names:
           f"[{b1:.4g}, {b3:.4g}]; B/A = {bm / am:.3f}; |B-A| = "
           f"{abs(bm - am) / (a3 - a1) if a3 > a1 else float('inf'):.2f}"
           f" x A's IQR; B lower on {wins}/{len(ok)} seeds")
+
+with open(bench) as f:
+    spec = {m["name"]: m for m in json.load(f)["end_to_end"]}
+print()
+for n in names:
+    if len(ok) < 2:
+        print("verdict: fewer than 2 seeds correct on both sides")
+        break
+    bound = spec[n]["bound"]
+    sign = 1 if spec[n]["better"] == "lower" else -1
+    av, bv = [sign * a[n] for a, _ in ok], [sign * b[n] for _, b in ok]
+    a1, am, a3 = statistics.quantiles(av, n=4, method="inclusive")
+    bm = statistics.median(bv)
+    spread = (a3 - a1) / abs(am) if am else float("inf")
+    worse = (bm - am) / abs(am) if am else float("inf")
+    wins = sum(y < x for x, y in zip(av, bv))
+    if spread > bound and not max(bv) < min(av):
+        verdict = f"unresolved (A's IQR/median {spread:.3f} > bound {bound})"
+    else:
+        verdict = ("REGRESSION" if worse > bound else "no regression") + \
+            f" (B worse by {worse:+.3f} of A's median, bound {bound})"
+        if wins * 10 >= 9 * len(ok) and am - bm > a3 - a1:
+            verdict += ", separates"
+    print(f"verdict {n}: {verdict}")
 EOF
