@@ -87,9 +87,9 @@ object VectorIndex {
       metaCols: Seq[String] = Seq.empty,
       gateBits: Option[Int] = None): Unit = {
     // `bucket` is the gate's column: a metadata column with that name
-    // would be silently clobbered by the withColumn below (or
-    // duplicated in the select when gateBits is set) — refuse at
-    // build instead
+    // would be silently clobbered or duplicated by [[corpusRows]], or
+    // taken for the gate column by every later load — refuse at build
+    // instead
     require(!metaCols.contains("bucket"),
       "VectorIndex.build: 'bucket' is reserved for the ingest gate's " +
         "sign-bucket column — rename the metadata column")
@@ -263,7 +263,7 @@ object VectorIndex {
     */
   private def corpusRows(enc: DataFrame, gateBits: Option[Int],
       metaCols: Seq[String]): DataFrame =
-    enc.withColumn("bucket", gateBits.fold(lit(null).cast("long"))(b =>
+    gateBits.fold(enc)(b => enc.withColumn("bucket",
         SimilarityOps.signBucket("embedding", b)))
       .select((Seq("vec_id", "embedding", "n", "cell", "code") ++
         bucketCol(gateBits) ++ metaCols).map(col): _*)
@@ -438,7 +438,6 @@ object VectorIndex {
     } {
       appendWithDrift(l, dir, newVecs, gen)
     }
-    // ungated corpora (no bucket sort) split oversized cells by hash
     ArtifactManifest.compactIfDue(s, s"$dir/corpus", "cell",
       compactEvery, bucketCol(l.gateBits))
     base.exists(b => cos.exists(_ < b - driftTolerance))
