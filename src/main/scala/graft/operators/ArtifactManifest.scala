@@ -39,10 +39,24 @@ import org.apache.spark.sql.functions._
   */
 object ArtifactManifest {
 
+  /** `partCols`: which fields of `schemaJson` are directory-encoded
+    * partition columns (empty when the schema was inferred, or the
+    * manifest predates the field) — a read drops them from the stored
+    * schema and lets path discovery type them.
+    */
   final case class Pin(version: Long, generations: Seq[Long],
       signature: String,
       genDigests: Map[Long, String] = Map.empty,
-      schemaJson: Option[String] = None)
+      schemaJson: Option[String] = None,
+      partCols: Seq[String] = Nil) {
+    def shape: Option[Shape] = schemaJson.map(Shape(_, partCols))
+  }
+
+  /** A generation's read-back schema and the names of its partition
+    * columns — what a pin stores so a reader needs no footer
+    * inference.
+    */
+  final case class Shape(schemaJson: String, partCols: Seq[String])
 
   private def fsOf(s: SparkSession, p: Path): FileSystem =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -186,7 +200,11 @@ object ArtifactManifest {
       case JString(x) => Some(x)
       case _ => None
     }
-    Some(Pin(v, gens, sig, digests, schemaJson))
+    val partCols = (j \ "partitions") match {
+      case JArray(xs) => xs.collect { case JString(c) => c }
+      case _ => Nil
+    }
+    Some(Pin(v, gens, sig, digests, schemaJson, partCols))
   }
 
   /** Commit a new manifest version: write to a temp name, rename into
@@ -219,7 +237,7 @@ object ArtifactManifest {
   private def commit(s: SparkSession, dir: String, gens: Seq[Long],
       signature: String, prev: Option[Pin],
       genDigests: Map[Long, String] = Map.empty,
-      knownSchemaJson: Option[String] = None,
+      known: Option[Shape] = None,
       mergeCarried: Boolean = true): Long = {
     val md = manifestDir(dir)
     val fs = fsOf(s, md)
@@ -229,7 +247,7 @@ object ArtifactManifest {
     // NEEDED — serving a committed-empty artifact (total takedown) as
     // a zero-row frame — it is already stored. Sources, cheapest
     // first:
-    //  - the WRITE PATH's own schema (`knownSchemaJson` — every
+    //  - the WRITE PATH's own shape (`known` — every
     //    artifact mutation has the written DataFrame in hand, so this
     //    is free; the per-commit DataFrameReader inference it
     //    replaces cost the index lifecycle family 2-3x at sf0.1);
@@ -242,7 +260,7 @@ object ArtifactManifest {
     // content-preserving compactions) — but a BUILD replaces it
     // outright (`mergeCarried = false`): a rebuild that legitimately
     // dropped a column must not carry the phantom field forever.
-    val newestJson = knownSchemaJson.orElse {
+    val newestJson = known.map(_.schemaJson).orElse {
       gens.sorted.lastOption.flatMap { g =>
         scala.util.Try(
           s.read.option("basePath", dir).parquet(s"$dir/ingest=$g")
@@ -258,6 +276,13 @@ object ArtifactManifest {
       scala.util.Try(
         s.read.option("basePath", dir).parquet(dir).schema.json)
         .toOption)
+    // partition columns are known only with a known shape, or with
+    // the carried schema alone (a fileless commit); an inferred schema
+    // records none, so its readers keep inference
+    val partCols = known.map(_.partCols).getOrElse(
+      if (newestJson.isEmpty && schemaJson == carried)
+        prev.map(_.partCols).getOrElse(Nil)
+      else Nil)
     // digests are hex, keys numeric — safe to emit without escaping
     val digestJson = genDigests.toSeq.sortBy(_._1)
       .map { case (g, d) => s""""$g":"$d"""" }.mkString(",")
@@ -267,10 +292,14 @@ object ArtifactManifest {
       s""","schema":${org.json4s.jackson.JsonMethods.compact(
         org.json4s.jackson.JsonMethods.render(org.json4s.JString(sj)))}"""
     }.getOrElse("")
+    val partField = if (partCols.isEmpty || schemaJson.isEmpty) ""
+      else partCols.map(c => org.json4s.jackson.JsonMethods.compact(
+          org.json4s.jackson.JsonMethods.render(org.json4s.JString(c))))
+        .mkString(""","partitions":[""", ",", "]")
     val json =
       s"""{"version":$v,"generations":[${gens.sorted.mkString(",")}],""" +
         s""""signature":"$signature","genDigests":{$digestJson}""" +
-        schemaField + "}"
+        schemaField + partField + "}"
     val tmp = new Path(md, f".manifest-$v%020d.json.tmp")
     val out = fs.create(tmp, true)
     try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -299,19 +328,136 @@ object ArtifactManifest {
     v
   }
 
+  // ---- driver-side state files ----------------------------------------
+  // The KB-sized state beside an index's data tree (banding geometry,
+  // quantizers, gate stamp, drift baseline, membership sketch) is one
+  // small binary file per piece, read and written on the driver with
+  // no Spark job. Layout: magic, format version, the piece's kind tag,
+  // then its fields; doubles are stored as their raw IEEE bits
+  // (`doubleToRawLongBits`), so every value — NaN payloads, -0.0,
+  // subnormals — decodes bit-exactly. A write goes to a hidden tmp
+  // sibling, then the old file is deleted and the tmp renamed in: a
+  // crash leaves the old state, no state, or the new state, the same
+  // windows as the `mode("overwrite")` tree it replaced, never a torn
+  // file. An absent file means no state.
+
+  private val StateMagic = 0x47535431 // "GST1"
+  private val StateVersion = 1
+
+  /** Field writer of one state file. */
+  final class StateOut private[ArtifactManifest] (
+      d: java.io.DataOutputStream) {
+    def int(v: Int): StateOut = { d.writeInt(v); this }
+    def long(v: Long): StateOut = { d.writeLong(v); this }
+    def double(v: Double): StateOut =
+      long(java.lang.Double.doubleToRawLongBits(v))
+    def longs(a: Array[Long]): StateOut = {
+      int(a.length); a.foreach(long); this
+    }
+    def doubles(a: Array[Double]): StateOut = {
+      int(a.length); a.foreach(double); this
+    }
+  }
+
+  /** Field reader of one state file, in the order they were written. */
+  final class StateIn private[ArtifactManifest] (
+      d: java.io.DataInputStream) {
+    def int(): Int = d.readInt()
+    def long(): Long = d.readLong()
+    def double(): Double = java.lang.Double.longBitsToDouble(long())
+    def longs(): Array[Long] = Array.fill(length())(long())
+    def doubles(): Array[Double] = Array.fill(length())(double())
+    private def length(): Int = {
+      val n = int()
+      if (n < 0 || n > d.available() / 8) throw new java.io.IOException(
+        s"state file: array length $n exceeds the remaining bytes")
+      n
+    }
+  }
+
+  private[graft] def encodeState(kind: String)(
+      body: StateOut => Unit): Array[Byte] = {
+    val bytes = new java.io.ByteArrayOutputStream()
+    val d = new java.io.DataOutputStream(bytes)
+    d.writeInt(StateMagic)
+    d.writeInt(StateVersion)
+    d.writeUTF(kind)
+    body(new StateOut(d))
+    d.flush()
+    bytes.toByteArray
+  }
+
+  /** Decode `bytes` as a `kind` state file; refuses another kind, an
+    * unknown version, a truncated file and trailing bytes.
+    */
+  private[graft] def decodeState[T](bytes: Array[Byte], kind: String)(
+      body: StateIn => T): T = {
+    val d = new java.io.DataInputStream(
+      new java.io.ByteArrayInputStream(bytes))
+    val (magic, version, tag) = (d.readInt(), d.readInt(), d.readUTF())
+    if (magic != StateMagic || version != StateVersion || tag != kind)
+      throw new java.io.IOException(
+        s"state file: expected $kind v$StateVersion, found " +
+          f"magic=$magic%08x version=$version kind=$tag")
+    val v = body(new StateIn(d))
+    if (d.available() != 0) throw new java.io.IOException(
+      s"state file: ${d.available()} trailing bytes after the $kind state")
+    v
+  }
+
+  /** Write the `kind` state file at `path` (see the section note). */
+  private[graft] def saveState(s: SparkSession, path: String,
+      kind: String)(body: StateOut => Unit): Unit = {
+    val fin = new Path(path)
+    val fs = fsOf(s, fin)
+    val tmp = new Path(fin.getParent, s".${fin.getName}.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(encodeState(kind)(body)) finally out.close()
+    fs.delete(fin, false)
+    if (!fs.rename(tmp, fin)) {
+      fs.delete(tmp, false)
+      throw new java.io.IOException(s"state file: rename $tmp -> $fin failed")
+    }
+  }
+
+  /** The `kind` state file at `path`, `None` when absent. */
+  private[graft] def loadState[T](s: SparkSession, path: String,
+      kind: String)(body: StateIn => T): Option[T] = {
+    val p = new Path(path)
+    val in = try Some(fsOf(s, p).open(p))
+      catch { case _: java.io.FileNotFoundException => None }
+    in.map { i =>
+      val bytes = try i.readAllBytes() finally i.close()
+      decodeState(bytes, kind)(body)
+    }
+  }
+
+  /** Whether the state file at `path` is present. */
+  private[graft] def hasState(s: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    fsOf(s, p).exists(p)
+  }
+
+  /** Remove the state file at `path` (absent is fine). */
+  private[graft] def dropState(s: SparkSession, path: String): Unit = {
+    val p = new Path(path)
+    fsOf(s, p).delete(p, false)
+  }
+
   /** Record a fresh BUILD: the live set is exactly the on-disk
     * listing (a build starts the artifact; there is nothing stale to
-    * exclude). `knownSchemaJson` is the written frame's schema when
-    * the caller has it — the commit then skips schema inference.
+    * exclude). `known` is the written frame's shape when the caller
+    * has it — the commit then skips schema inference, and readers of
+    * the pin skip it too.
     */
   def recordBuild(s: SparkSession, dir: String,
-      knownSchemaJson: Option[String] = None): Unit = {
+      known: Option[Shape] = None): Unit = {
     val gens = LayoutOps.ingestGenerations(s, dir)
     val raw = rawListings(s, dir, gens)
     // a build REPLACES the artifact — its schema replaces the pin's
     // (no merge): a rebuild that dropped a column must not carry it
     commit(s, dir, gens, fullSignatureOf(raw, gens), latest(s, dir),
-      digestsOf(raw), knownSchemaJson, mergeCarried = false)
+      digestsOf(raw), known, mergeCarried = false)
   }
 
   /** Record a committed APPEND of `gen`. The signature extends the
@@ -342,7 +488,7 @@ object ArtifactManifest {
     * the absent path would make every subsequent [[frame]] read fail.
     */
   def recordAppend(s: SparkSession, dir: String, gen: Long,
-      knownSchemaJson: Option[String] = None): Unit =
+      known: Option[Shape] = None): Unit =
     latest(s, dir) match {
       case Some(p) if p.generations.contains(gen) =>
         p.genDigests.get(gen).foreach { stored =>
@@ -362,11 +508,11 @@ object ArtifactManifest {
           commit(s, dir, (p.generations :+ gen).distinct,
             md5(p.signature + "\n\n" + listing), Some(p),
             p.genDigests + (gen -> contentDigestOfListing(listing)),
-            knownSchemaJson)
+            known)
         }
       case None =>
         // legacy artifact (predates manifests): adopt the listing
-        recordBuild(s, dir, knownSchemaJson)
+        recordBuild(s, dir, known)
     }
 
   /** Re-derive the live set after a TAKEDOWN
@@ -386,7 +532,7 @@ object ArtifactManifest {
       // stored schema rides through with no inference
       val raw = rawListings(s, dir, gens)
       commit(s, dir, gens, fullSignatureOf(raw, gens), Some(p),
-        digestsOf(raw), p.schemaJson)
+        digestsOf(raw), p.shape)
     }
 
   /** The artifact's data as of the latest manifest: ONLY the listed
@@ -443,12 +589,25 @@ object ArtifactManifest {
   private def liveFrame(s: SparkSession, dir: String): DataFrame =
     frameOfPin(s, dir, latest(s, dir))
 
+  /** The pinned generations' frame. A pin that stores its shape is
+    * read with the stored DATA schema — no footer-inference job — and
+    * the partition columns are left to path discovery, which types
+    * them exactly as an inferred read does; a pin without one keeps
+    * inference.
+    */
   private[operators] def frameOfPin(s: SparkSession, dir: String,
       pin: Option[Pin]): DataFrame =
     pin match {
       case Some(p) if p.generations.nonEmpty =>
-        s.read.option("basePath", dir)
-          .parquet(p.generations.sorted.map(g => s"$dir/ingest=$g"): _*)
+        val r = s.read.option("basePath", dir)
+        (p.shape match {
+          case Some(sh) if sh.partCols.nonEmpty => r.schema(
+            org.apache.spark.sql.types.StructType(
+              org.apache.spark.sql.types.DataType.fromJson(sh.schemaJson)
+                .asInstanceOf[org.apache.spark.sql.types.StructType]
+                .fields.filterNot(f => sh.partCols.contains(f.name))))
+          case _ => r
+        }).parquet(p.generations.sorted.map(g => s"$dir/ingest=$g"): _*)
       case Some(p) =>
         // committed-empty (a takedown emptied every generation): zero
         // rows in the STORED schema — a clean total takedown leaves
@@ -521,7 +680,8 @@ object ArtifactManifest {
       rangeFiles)
     val raw = rawListings(s, dir, Seq(newGen))
     commit(s, dir, Seq(newGen), fullSignatureOf(raw, Seq(newGen)),
-      latest(s, dir), digestsOf(raw), Some(live.schema.json))
+      latest(s, dir), digestsOf(raw),
+      Some(Shape(live.schema.json, Seq("ingest", partCol))))
     if (vacuum) this.vacuum(s, dir)
     newGen
   }
@@ -582,7 +742,7 @@ object ArtifactManifest {
     * pruned from it too) and the files sorted.
     *
     * A build (`append = false`) statically overwrites the store and
-    * returns the written frame's shape ([[frameShapeJson]]) for the
+    * returns the written frame's shape ([[frameShape]]) for the
     * caller to record with [[recordBuild]] after its own fence. An
     * append dynamically overwrites only generation `gen` — a replayed
     * batch replaces its own partitions, so per-batch ingest is
@@ -590,7 +750,7 @@ object ArtifactManifest {
     */
   private[operators] def writeGeneration(rows: DataFrame, store: String,
       key: String, gen: Long, sortWithin: Seq[String],
-      append: Boolean): String = {
+      append: Boolean): Shape = {
     val s = rows.sparkSession
     val tagged = rows.withColumn("ingest", lit(gen))
     val w = (if (sortWithin.isEmpty) tagged
@@ -599,7 +759,7 @@ object ArtifactManifest {
       .option("parquet.page.row.count.limit", DedupIndex.pageRowLimit(s))
     (if (append) w.option("partitionOverwriteMode", "dynamic") else w)
       .partitionBy("ingest", key).parquet(store)
-    val shape = frameShapeJson(tagged.schema, Seq("ingest", key))
+    val shape = frameShape(tagged.schema, Seq("ingest", key))
     if (append) recordAppend(s, store, gen, Some(shape))
     shape
   }
@@ -637,14 +797,14 @@ object ArtifactManifest {
     * committed-empty frame cast partition columns explicitly exactly
     * as they do after a live read.
     */
-  private[operators] def frameShapeJson(
+  private[operators] def frameShape(
       schema: org.apache.spark.sql.types.StructType,
-      partCols: Seq[String]): String = {
+      partCols: Seq[String]): Shape = {
     import org.apache.spark.sql.types.{IntegerType, StructField,
       StructType}
     val data = schema.fields.filterNot(f => partCols.contains(f.name))
-    StructType(data ++ partCols.map(c =>
-      StructField(c, IntegerType, nullable = true))).json
+    Shape(StructType(data ++ partCols.map(c =>
+      StructField(c, IntegerType, nullable = true))).json, partCols)
   }
 
   /** Build a VERSIONED clustered fact artifact: one fresh generation
@@ -692,8 +852,7 @@ object ArtifactManifest {
       require(fs.delete(new Path(dir, s"ingest=$g"), true),
         s"clusterBuild: could not remove previous generation $g of " +
           dir)
-    recordBuild(s, dir,
-      Some(frameShapeJson(laid.schema, Seq("ingest"))))
+    recordBuild(s, dir, Some(frameShape(laid.schema, Seq("ingest"))))
   }
 
   /** Append one clustered generation to a [[clusterBuild]] artifact
@@ -713,8 +872,7 @@ object ArtifactManifest {
     val laid = clusteredFrame(df, cols, partitions, zorder, bits)
     laid.write.options(extraWriteOpts).mode("overwrite")
       .parquet(s"$dir/ingest=$gen")
-    recordAppend(s, dir, gen,
-      Some(frameShapeJson(laid.schema, Seq("ingest"))))
+    recordAppend(s, dir, gen, Some(frameShape(laid.schema, Seq("ingest"))))
     gen
   }
 
@@ -749,7 +907,8 @@ object ArtifactManifest {
       .parquet(s"$dir/ingest=$newGen")
     val raw = rawListings(s, dir, Seq(newGen))
     commit(s, dir, Seq(newGen), fullSignatureOf(raw, Seq(newGen)),
-      latest(s, dir), digestsOf(raw), Some(live.schema.json))
+      latest(s, dir), digestsOf(raw),
+      Some(Shape(live.schema.json, Seq("ingest"))))
     if (vacuum) this.vacuum(s, dir)
     newGen
   }

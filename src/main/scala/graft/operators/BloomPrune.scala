@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{BloomAgg, BloomSketch}
 
@@ -25,8 +25,8 @@ import graft.functions.{BloomAgg, BloomSketch}
   *  - beyond that: let AQE's runtime bloom (`InjectRuntimeFilter`)
   *    handle single-query cases; this operator's extra value is the
   *    ARTIFACT form — build once (e.g. the admitted-corpus id set, the
-  *    non-tombstoned set), [[save]] it, and reuse it across many fact
-  *    scans without re-aggregating the dim.
+  *    non-tombstoned set), persist it ([[DedupIndex.saveMembers]]), and
+  *    reuse it across many fact scans without re-aggregating the dim.
   *
   * Spark's own runtime filter covers the single-query case when its
   * thresholds line up; an explicit operator makes the decision — and
@@ -78,20 +78,4 @@ object BloomPrune {
     fact.where(call_function("bloom_might_contain",
       col(keyCol).cast("long"), typedLit(bits.toSeq), lit(numHashes))
       || orKeep)
-
-  /** Persist the sketch as a one-row parquet artifact (bits + k):
-    * the reusable-membership form — build once over the dim/corpus,
-    * load per query, prune many fact scans.
-    */
-  def save(spark: SparkSession, bits: Array[Long], numHashes: Int,
-      path: String): Unit = {
-    import spark.implicits._
-    Seq((bits.toSeq, numHashes)).toDF("bits", "k")
-      .coalesce(1).write.mode("overwrite").parquet(path)
-  }
-
-  def load(spark: SparkSession, path: String): (Array[Long], Int) = {
-    val row = spark.read.parquet(path).select("bits", "k").head()
-    (row.getSeq[Long](0).toArray, row.getInt(1))
-  }
 }

@@ -14,9 +14,11 @@ import org.apache.spark.sql.functions._
   * build (spec-asserted).
   *
   * Layout under `dir/`:
-  *  - `params/`  one row (k, rows_per_band): probe/append re-derive
-  *    the banding from the artifact, so a probe can never use a
+  *  - `params.state` (k, rows_per_band), a driver-side state file
+  *    ([[ArtifactManifest.saveState]]): probe/append re-derive the
+  *    banding from the artifact, so a probe can never use a
   *    different geometry than the index was built with.
+  *  - `members.state` the membership sketch (see below).
   *  - `buckets/` (doc_id, bucket) PARTITIONED BY band. The probe
   *    joins on (band, bucket); at cluster scale this table is the
   *    natural [[graft.io.BucketedIO]] candidate (bucketBy on bucket)
@@ -74,7 +76,9 @@ object DedupIndex {
   // Appends past the build-time sizing degrade fpp, never
   // correctness.
 
-  private def membersPath(dir: String) = s"$dir/members"
+  private def membersPath(dir: String) = s"$dir/members.state"
+
+  private def paramsPath(dir: String) = s"$dir/params.state"
 
   /** The artifact's writer-lease root — a SIBLING of the artifact
     * tree, not inside it: [[VectorIndex.rebuild]]'s staging swap
@@ -85,14 +89,6 @@ object DedupIndex {
     */
   private[operators] def leaseRoot(dir: String): String =
     LayoutOps.sibling(dir, "__lock").toString
-
-  private def fsOf(s: SparkSession, p: String) =
-    new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  private def hasMembers(s: SparkSession, dir: String): Boolean =
-    fsOf(s, dir).exists(
-      new org.apache.hadoop.fs.Path(membersPath(dir)))
 
   /** The sketch keys on LONG ids; a non-integral id column cannot be
     * cast faithfully (cast → NULL → every row silently dropped at the
@@ -109,39 +105,32 @@ object DedupIndex {
       case _ => false
     }
 
-  /** Crash-safe sketch write: stage to a sibling, remove the old,
-    * rename in — the mid-write crash of a plain overwrite leaves a
-    * members directory with no committed data file, and every
-    * subsequent load (serving AND the streaming replay's next
-    * orMembers) throws on it: a permanent wedge. With the staged
-    * swap, every crash window leaves either the old complete sketch
-    * or none at all — and "none" degrades to unpruned serving, which
-    * is always correct.
+  /** Crash-safe sketch write ([[ArtifactManifest.saveState]]): every
+    * crash window leaves either the old complete sketch or none at
+    * all — and "none" degrades to unpruned serving, which is always
+    * correct.
     */
-  private def saveMembers(s: SparkSession, bits: Array[Long], k: Int,
-      dir: String): Unit = {
+  private[graft] def saveMembers(s: SparkSession, bits: Array[Long],
+      k: Int, dir: String): Unit = {
     // pre-swap fence: the sketch replace is destructive, and every
     // batch mutator routes its sketch maintenance here — a holder
     // that stalled past the steal horizon dies before the delete
     // (no-op on the lease-less streaming paths)
     WriterLease.verifyHeld(s, leaseRoot(dir))
-    val fs = fsOf(s, dir)
-    val fin = new org.apache.hadoop.fs.Path(membersPath(dir))
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"${membersPath(dir)}.staged.${java.util.UUID.randomUUID}")
-    BloomPrune.save(s, bits, k, tmp.toString)
-    fs.delete(fin, true)
-    if (!fs.rename(tmp, fin)) {
-      fs.delete(tmp, true)
-      throw new java.io.IOException(
-        s"DedupIndex: members sketch rename $tmp -> $fin failed")
+    ArtifactManifest.saveState(s, membersPath(dir), "members") { o =>
+      o.int(k).longs(bits)
     }
-    // stale staged siblings from crashed earlier saves (ours just
-    // renamed away; single writer per artifact)
-    for (st <- fs.globStatus(new org.apache.hadoop.fs.Path(
-          s"${membersPath(dir)}.staged.*")))
-      fs.delete(st.getPath, true)
   }
+
+  /** The sketch's (bits, hash count), `None` when the artifact has
+    * none.
+    */
+  private[graft] def loadMembers(s: SparkSession,
+      dir: String): Option[(Array[Long], Int)] =
+    ArtifactManifest.loadState(s, membersPath(dir), "members") { i =>
+      val k = i.int()
+      (i.longs(), k)
+    }
 
   /** Fresh sized sketch over `ids` (build path). Called AFTER
     * [[dropMembers]] + the bucket overwrite: a crash anywhere in a
@@ -169,8 +158,7 @@ object DedupIndex {
     */
   private[operators] def dropMembers(s: SparkSession,
       dir: String): Unit =
-    fsOf(s, dir).delete(
-      new org.apache.hadoop.fs.Path(membersPath(dir)), true)
+    ArtifactManifest.dropState(s, membersPath(dir))
 
   /** OR a batch's ids into the existing sketch (append path) — a
     * legacy artifact without one stays without (memberPrune then
@@ -182,14 +170,15 @@ object DedupIndex {
   private[graft] def orMembers(ids: DataFrame, idCol: String,
       dir: String): Unit = {
     val s = ids.sparkSession
-    if (!integralKey(ids, idCol) || !hasMembers(s, dir)) return
-    val (bits, k) = BloomPrune.load(s, membersPath(dir))
-    val add = BloomPrune.build(
-      ids.select(col(idCol).cast("long").as("id")), "id",
-      bits.length * 64, k)
-    var i = 0
-    while (i < bits.length) { bits(i) |= add(i); i += 1 }
-    saveMembers(s, bits, k, dir)
+    if (integralKey(ids, idCol)) loadMembers(s, dir).foreach {
+      case (bits, k) =>
+        val add = BloomPrune.build(
+          ids.select(col(idCol).cast("long").as("id")), "id",
+          bits.length * 64, k)
+        var i = 0
+        while (i < bits.length) { bits(i) |= add(i); i += 1 }
+        saveMembers(s, bits, k, dir)
+    }
   }
 
   /** Re-size the sketch from the artifact's CURRENT live ids — the
@@ -217,9 +206,8 @@ object DedupIndex {
     */
   def memberPrune(s: SparkSession, dir: String, fact: DataFrame,
       keyCol: String, orKeep: Column = lit(false)): DataFrame =
-    if (!integralKey(fact, keyCol) || !hasMembers(s, dir)) fact
-    else {
-      val (bits, k) = BloomPrune.load(s, membersPath(dir))
+    if (!integralKey(fact, keyCol)) fact
+    else loadMembers(s, dir).fold(fact) { case (bits, k) =>
       BloomPrune.prune(fact, keyCol, bits, k, orKeep)
     }
 
@@ -235,7 +223,6 @@ object DedupIndex {
   def build(docs: DataFrame, textCol: String, idCol: String, k: Int,
       rowsPerBand: Int, dir: String): Unit = {
     val s = docs.sparkSession
-    import s.implicits._
     // single-writer per artifact, ENFORCED: batch mutators hold the
     // cross-process lease for the mutation's duration (the streaming
     // gates' run-private roots keep their checkpoint serialization
@@ -270,11 +257,17 @@ object DedupIndex {
     // re-run converges (builtComplete)
     WriterLease.verifyHeld(s, leaseRoot(dir))
     ArtifactManifest.recordBuild(s, s"$dir/buckets", Some(shape))
-    Seq((k, rowsPerBand)).toDF("k", "rows_per_band")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
+    saveParams(s, dir, k, rowsPerBand)
     buildMembers(docs, idCol, dir)
     }
   }
+
+  /** Commit the banding geometry: the state file [[load]] reads. */
+  private[graft] def saveParams(s: SparkSession, dir: String, k: Int,
+      rowsPerBand: Int): Unit =
+    ArtifactManifest.saveState(s, paramsPath(dir), "dedup.params") {
+      _.int(k).int(rowsPerBand)
+    }
 
   /** The banding geometry as constant bucket columns — the
     * consistency stamp [[load]] checks params against.
@@ -298,27 +291,32 @@ object DedupIndex {
     load(s, dir)
   }
 
-  /** A built artifact's completion predicate: BOTH the bucket tree's
-    * and params' commit markers (build writes params AFTER the
-    * buckets — a crash between the two leaves buckets-complete,
-    * params-missing, and a buckets-only check would skip the rebuild
-    * and fail every later load on the missing geometry: a permanent
-    * wedge a re-run should instead converge).
+  /** A built artifact's completion predicate: the bucket tree's
+    * commit marker AND the params state file (build writes params
+    * AFTER the buckets — a crash between the two leaves
+    * buckets-complete, params-missing, and a buckets-only check would
+    * skip the rebuild and fail every later load on the missing
+    * geometry: a permanent wedge a re-run should instead converge).
+    * A root written before the params state file existed (a parquet
+    * `params/` tree) reads as incomplete too, so it rebuilds.
     */
   private def builtComplete(s: SparkSession, dir: String): Boolean = {
-    val fs = fsOf(s, dir)
-    fs.exists(new org.apache.hadoop.fs.Path(
-        s"$dir/buckets/_SUCCESS")) &&
-      fs.exists(new org.apache.hadoop.fs.Path(
-        s"$dir/params/_SUCCESS"))
+    val marker = new org.apache.hadoop.fs.Path(s"$dir/buckets/_SUCCESS")
+    marker.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .exists(marker) && ArtifactManifest.hasState(s, paramsPath(dir))
   }
 
-  /** Banding geometry to the driver, buckets as a lazy partitioned
-    * scan (`band` re-cast to its written long type).
+  /** Banding geometry to the driver (its state file — no Spark job),
+    * buckets as a lazy partitioned scan (`band` re-cast to its written
+    * long type).
     */
   def load(s: SparkSession, dir: String): Loaded = {
-    val p = s.read.parquet(s"$dir/params").head()
-    val (k, rowsPerBand) = (p.getInt(0), p.getInt(1))
+    val (k, rowsPerBand) = ArtifactManifest.loadState(s, paramsPath(dir),
+        "dedup.params")(i => (i.int(), i.int()))
+      .getOrElse(throw new IllegalArgumentException(
+        s"DedupIndex.load: $dir has no banding params (no " +
+          s"${paramsPath(dir)}) — not a built artifact, or a build " +
+          "crashed before committing; re-run the build"))
     val (pin, raw) = ArtifactManifest.pinnedFrame(s, s"$dir/buckets")
     // geometry consistency: a crashed re-build can pair params with a
     // bucket tree written under DIFFERENT banding — probing across
@@ -1160,7 +1158,13 @@ object DedupIndex {
         // otherwise re-shingles the batch three times (measured ~2 s
         // of the 3-batch sf0.1 stream). The library-call cache-leak
         // rule is kept by the finally-unpersist.
+        // The PRE-batch store: a replayed batch's own generation
+        // (ingest = batchId + 1, left by a run that died before its
+        // checkpoint commit) is pruned at planning — the append below
+        // replaces exactly those files while the decisions job runs,
+        // and the batch's own buckets join through `bb` anyway.
         val stored = ss.read.parquet(s"$root/index/buckets")
+          .filter(col("ingest") <= batchId)
           .withColumn("band", col("band").cast("long"))
           .select(col(idCol), col("band"), col("bucket"))
         val bb = bucketsOf(batch, textCol, idCol, k, rowsPerBand)
@@ -1196,7 +1200,8 @@ object DedupIndex {
             // bucket-sorted like every other generation — the NEXT
             // batch's pushed probe skips this generation's un-touched
             // row groups too
-            ArtifactManifest.writeGeneration(bb, s"$root/index/buckets",
+            ArtifactManifest.writeGeneration(
+              stamped(bb, k, rowsPerBand), s"$root/index/buckets",
               "band", batchId + 1, Seq("bucket"), append = true)
           }
         } finally bb.unpersist()

@@ -10,10 +10,13 @@ import org.apache.spark.sql.functions._
   * invocation, which is right for a gate and wrong for a service).
   *
   * Artifact layout under `dir/`:
-  *  - `centroids/`  (cell, cvec array<double>, cn) — the trained coarse
-  *    quantizer, k rows (dim-sized; collected to the driver on load).
-  *  - `codebooks/`  (j, c, m array<double>) — the PQ codebooks,
-  *    subspaces×k rows (dim-sized).
+  *  - `quantizer.state` — the trained coarse centroids (cell ids,
+  *    components, norms) and the PQ codebooks, one driver-side state
+  *    file ([[ArtifactManifest.saveState]]; dim-sized, read with no
+  *    Spark job on load).
+  *  - `gate.state`, `drift.state`, `members.state` — the gate stamp
+  *    ([[gateBitsOf]]), the drift baseline ([[driftBaseline]]) and
+  *    the membership sketch ([[memberPrune]]), state files too.
   *  - `corpus/`     (vec_id, embedding, n, code) PARTITIONED BY cell —
   *    the encoded corpus laid out as on-disk inverted lists: a serving
   *    query's cell filter becomes a partition filter, so a probe reads
@@ -22,8 +25,8 @@ import org.apache.spark.sql.functions._
   *    the build is one distributed write.
   *
   * Determinism: training is the same integer-exact scheme as the
-  * inline queries (shared builders), and parquet round-trips
-  * float/double/int values bit-exactly, so build → load → serve equals
+  * inline queries (shared builders), and parquet and the state files
+  * round-trip float/double/int values bit-exactly, so build → load → serve equals
   * train → serve EXACTLY (spec-asserted against s8, and s11's oracle
   * is literally s8's oracle).
   */
@@ -33,8 +36,8 @@ object VectorIndex {
       books: ProductQuantization.Codebooks, corpus: DataFrame,
       gateBits: Option[Int] = None)
 
-  /** The artifact's serving-gate geometry stamp (`dir/gate`, one
-    * `bits` row): present iff the corpus carries a persisted `bucket`
+  /** The artifact's serving-gate geometry stamp (`dir/gate.state`,
+    * the `bits`): present iff the corpus carries a persisted `bucket`
     * column computed as `signBucket(embedding, bits)`. The ingest
     * gate requires the stamp to MATCH its requested bits (a mismatch
     * fails loudly — a stale bucket column under different geometry
@@ -42,24 +45,40 @@ object VectorIndex {
     * (built before the column existed, or with `gateBits = None`)
     * derive the bucket on the fly.
     */
-  def gateBitsOf(s: SparkSession, dir: String): Option[Int] = {
-    import s.implicits._
-    // the COMMIT MARKER, not bare directory existence: a crash during
-    // the stamp write leaves a half-written directory (no _SUCCESS),
-    // and reading it would throw — wedging every later load() of an
-    // otherwise healthy artifact. Absent marker = no stamp = the gate
-    // derives on the fly, which is always correct.
-    val p = new org.apache.hadoop.fs.Path(s"$dir/gate/_SUCCESS")
-    if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
-      None
-    else Some(s.read.parquet(s"$dir/gate").select("bits")
-      .as[Int].head())
-  }
+  def gateBitsOf(s: SparkSession, dir: String): Option[Int] =
+    // a crash during the stamp write leaves at most the hidden tmp
+    // file: absent = no stamp = the gate derives on the fly, which is
+    // always correct
+    ArtifactManifest.loadState(s, gatePath(dir), "vec.gate")(_.int())
 
-  private def dropGate(s: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/gate")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-  }
+  private def gatePath(dir: String) = s"$dir/gate.state"
+
+  private def driftPath(dir: String) = s"$dir/drift.state"
+
+  private def quantizerPath(dir: String) = s"$dir/quantizer.state"
+
+  /** Persist both trained quantizers as one state file: the centroid
+    * cell ids, components and norms, then each subspace's codebook.
+    */
+  private[graft] def saveQuantizers(s: SparkSession, dir: String,
+      cents: SimilarityOps.IvfCentroids,
+      books: ProductQuantization.Codebooks): Unit =
+    ArtifactManifest.saveState(s, quantizerPath(dir), "vec.quantizer") {
+      o =>
+        o.longs(cents.cells).doubles(cents.books).doubles(cents.mns)
+          .int(books.length)
+        books.foreach { cbs => o.int(cbs.length); cbs.foreach(o.doubles) }
+    }
+
+  /** The trained quantizers, `None` when the artifact has none. */
+  private[graft] def loadQuantizers(s: SparkSession, dir: String)
+      : Option[(SimilarityOps.IvfCentroids, ProductQuantization.Codebooks)] =
+    ArtifactManifest.loadState(s, quantizerPath(dir), "vec.quantizer") {
+      i =>
+        val cents =
+          SimilarityOps.IvfCentroids(i.longs(), i.doubles(), i.doubles())
+        (cents, Array.fill(i.int())(Array.fill(i.int())(i.doubles())))
+    }
 
   /** Train both quantizers on `e0` (vec_id + embedding) and write the
     * artifact. One pass over the corpus for the final encode+write;
@@ -73,7 +92,7 @@ object VectorIndex {
     * `gateBits` declares the ingest gate's sign-LSH geometry: when
     * set, each corpus row's `bucket = signBucket(embedding, bits)` is
     * computed INSIDE the encode+write pass and persisted as one more
-    * artifact column, stamped via the `dir/gate` file — so the
+    * artifact column, stamped via the `dir/gate.state` file — so the
     * streaming gate reads buckets off disk instead of re-deriving
     * them over the full corpus every micro-batch (the O(corpus)
     * per-batch cost this column exists to delete). Crash ordering:
@@ -94,7 +113,6 @@ object VectorIndex {
       "VectorIndex.build: 'bucket' is reserved for the ingest gate's " +
         "sign-bucket column — rename the metadata column")
     val s = e0.sparkSession
-    import s.implicits._
     // single-writer per artifact, ENFORCED (the DedupIndex batch
     // mutators' contract): the lease lives at the artifact's SIBLING
     // lock root so rebuild's staging swap never carries it away
@@ -114,21 +132,10 @@ object VectorIndex {
     // interleaving overwrites with the stealer — the lease's mtime
     // otherwise never moves during a long build
     WriterLease.verifyHeld(s, DedupIndex.leaseRoot(dir))
-    // the two quantizer-state writes are independent single-task jobs
-    // on disjoint trees — overlap them (each is ~all driver latency).
-    // Both are awaited BEFORE the corpus write below, so the crash
-    // implication readers rely on is untouched: corpus committed ⇒
-    // quantizer state complete (buildOrLoad keys on the corpus
-    // marker and load() reads both trees).
-    Par.both {
-      centroidFrame(s, cents, dim, floatVecs = false)
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-    } {
-      books.zipWithIndex.flatMap { case (cbs, j) =>
-          cbs.zipWithIndex.map { case (m, c) => (j, c, m.toSeq) } }.toSeq
-        .toDF("j", "c", "m")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks")
-    }
+    // quantizer state BEFORE the corpus write below, so the crash
+    // implication readers rely on holds: corpus committed ⇒
+    // quantizer state complete ([[builtComplete]] keys on both)
+    saveQuantizers(s, dir, cents, books)
     // drift baseline: the training corpus's mean assigned-centroid
     // cosine under the quantizers just trained ON it — the "no drift"
     // reference [[append]] compares each batch against, observed on
@@ -144,7 +151,7 @@ object VectorIndex {
     // corpus overwrite (DedupIndex.buildMembers' crash argument; the
     // stamp must never outlive the bucket column it describes)
     DedupIndex.dropMembers(s, dir)
-    dropGate(s, dir)
+    ArtifactManifest.dropState(s, gatePath(dir))
     // a gate-stamped corpus is laid out bucket-sorted WITHIN each
     // cell's files: row-group min/max stats on `bucket` become tight,
     // so the gate's pushed touched-bucket filter skips row groups
@@ -155,37 +162,25 @@ object VectorIndex {
     // manifest/sketch publishes (the build's commit-equivalents)
     WriterLease.verifyHeld(s, DedupIndex.leaseRoot(dir))
     val metrics = drift.get
-    // the three commit-side publishes (gate stamp, drift baseline,
-    // manifest — kept in that relative order) and the membership
-    // sketch build touch four DISJOINT trees and none reads another's
-    // output — overlap the sketch (one aggregate job over the cached
-    // frame plus its staged save) with the publishes. Every crash
-    // window is a combination of each piece's own absent-is-safe
-    // contract (no stamp → derive-on-the-fly; no drift baseline →
-    // signal off; no manifest → raw-listing fallback; no sketch →
-    // unpruned serving), exactly the classes the serial order already
-    // had — the one NEW combination, sketch-present/manifest-absent,
-    // is safe because the sketch is a superset filter whatever the
-    // listing source. The lease-FENCED sketch save stays on the
-    // CALLING thread (WriterLease tracks holders per thread — Par's
-    // documented rule).
+    // the commit-side publishes, in this order: gate stamp, drift
+    // baseline, manifest. Every crash window is a combination of each
+    // piece's own absent-is-safe contract (no stamp →
+    // derive-on-the-fly; no drift baseline → signal off; no manifest
+    // → raw-listing fallback; no sketch → unpruned serving).
+    gateBits.foreach(b => ArtifactManifest.saveState(s, gatePath(dir),
+      "vec.gate")(_.int(b)))
+    metrics.get("base_cos").flatMap(Option(_)).foreach(c =>
+      ArtifactManifest.saveState(s, driftPath(dir), "vec.drift")(
+        _.double(c.asInstanceOf[Double])))
+    ArtifactManifest.recordBuild(s, s"$dir/corpus", Some(shape))
     // live-id membership sketch beside the corpus — same composition
     // (and the same superset/OR/unlearn contract) as
     // [[DedupIndex]]'s; [[memberPrune]] serves it. The sizing count
     // rode the corpus write's Observation — no extra pass. Built from
     // the cached frame (same ids as e0), not the raw input, so the
     // sketch pass is a cache read when the gate engaged.
-    Par.both {
-      gateBits.foreach(b => Seq(b).toDF("bits")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/gate"))
-      metrics.get("base_cos").flatMap(Option(_))
-        .foreach(c => Seq(c.asInstanceOf[Double]).toDF("base_cos")
-          .coalesce(1).write.mode("overwrite").parquet(s"$dir/drift"))
-      ArtifactManifest.recordBuild(s, s"$dir/corpus", Some(shape))
-    } {
-      DedupIndex.buildMembers(e, "vec_id", dir,
-        metrics.get("n_rows").map(_.asInstanceOf[Long]))
-    }
+    DedupIndex.buildMembers(e, "vec_id", dir,
+      metrics.get("n_rows").map(_.asInstanceOf[Long]))
     } finally e.unpersist()
     }
   }
@@ -285,17 +280,10 @@ object VectorIndex {
   /** The stored drift baseline ([[build]] writes it; artifacts built
     * before the drift signal existed have none).
     */
-  def driftBaseline(s: SparkSession, dir: String): Option[Double] = {
-    import s.implicits._
-    // commit marker, same rationale as [[gateBitsOf]]: a crash during
-    // the baseline write must read as "no baseline" (signal off),
-    // never wedge append()'s drift check with an unreadable directory
-    val p = new org.apache.hadoop.fs.Path(s"$dir/drift/_SUCCESS")
-    if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
-      None
-    else Some(s.read.parquet(s"$dir/drift").select("base_cos")
-      .as[Double].head())
-  }
+  def driftBaseline(s: SparkSession, dir: String): Option[Double] =
+    // same rationale as [[gateBitsOf]]: a crash during the baseline
+    // write reads as "no baseline" (signal off), never a wedge
+    ArtifactManifest.loadState(s, driftPath(dir), "vec.drift")(_.double())
 
   /** Deterministic artifact root for build-or-load serving: keyed by
     * the dataset's canonical path plus a cheap CONTENT fingerprint
@@ -361,20 +349,28 @@ object VectorIndex {
     s"${parent.getPath}/$name"
   }
 
-  /** Build the artifact only if absent (detected by the corpus write's
-    * commit marker), then load — the serve-many entry point: the first
-    * call pays training + encode, every later call pays only the
-    * dim-sized quantizer load. Same single-writer-per-root contract as
-    * [[append]].
+  /** A built artifact: the corpus write's commit marker AND the
+    * quantizer state file. A root written before the state file
+    * existed (parquet `centroids/`/`codebooks/` trees) reads as
+    * unbuilt, so it rebuilds instead of failing its load.
+    */
+  private def builtComplete(s: SparkSession, dir: String): Boolean = {
+    val marker = new org.apache.hadoop.fs.Path(s"$dir/corpus/_SUCCESS")
+    marker.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .exists(marker) && ArtifactManifest.hasState(s, quantizerPath(dir))
+  }
+
+  /** Build the artifact only if absent ([[builtComplete]]), then load
+    * — the serve-many entry point: the first call pays training +
+    * encode, every later call pays only the dim-sized quantizer load.
+    * Same single-writer-per-root contract as [[append]].
     */
   def buildOrLoad(e0: DataFrame, dim: Int, lloydSteps: Int,
       subspaces: Int, subDim: Int, k: Int, dir: String,
       metaCols: Seq[String] = Seq.empty,
       gateBits: Option[Int] = None): Loaded = {
     val s = e0.sparkSession
-    val marker = new org.apache.hadoop.fs.Path(s"$dir/corpus/_SUCCESS")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker))
+    if (!builtComplete(s, dir))
       build(e0, dim, lloydSteps, subspaces, subDim, k, dir, metaCols,
         gateBits)
     load(s, dir)
@@ -429,15 +425,9 @@ object VectorIndex {
     // Observation (one broadcast join against the k-row centroid
     // table inside the encode+write job) — the old form read the
     // written generation BACK for a separate aggregate, one extra
-    // driver action + scan per append. The baseline read is
-    // independent of the append (disjoint trees; read-only) and
-    // overlaps it; the lease-fenced write stays on the calling
-    // thread (Par's rule).
-    val (base, cos) = Par.both {
-      driftBaseline(s, dir)
-    } {
-      appendWithDrift(l, dir, newVecs, gen)
-    }
+    // driver action + scan per append
+    val base = driftBaseline(s, dir)
+    val cos = appendWithDrift(l, dir, newVecs, gen)
     ArtifactManifest.compactIfDue(s, s"$dir/corpus", "cell",
       compactEvery, bucketCol(l.gateBits))
     base.exists(b => cos.exists(_ < b - driftTolerance))
@@ -556,15 +546,15 @@ object VectorIndex {
     if (fs.exists(liveMan)) {
       val stMan = new org.apache.hadoop.fs.Path(
         s"$staging/corpus/_manifests")
-      // build() stored the rebuilt corpus's schema in the staging
+      // build() stored the rebuilt corpus's shape in the staging
       // chain's pin — lift it before that chain is replaced, so the
       // re-commit under the live chain needs no schema inference
-      val stagedSchema = ArtifactManifest
-        .latest(s, s"$staging/corpus").flatMap(_.schemaJson)
+      val stagedShape = ArtifactManifest
+        .latest(s, s"$staging/corpus").flatMap(_.shape)
       fs.delete(stMan, true)
       org.apache.hadoop.fs.FileUtil.copy(fs, liveMan, fs, stMan,
         false, s.sparkContext.hadoopConfiguration)
-      ArtifactManifest.recordBuild(s, s"$staging/corpus", stagedSchema)
+      ArtifactManifest.recordBuild(s, s"$staging/corpus", stagedShape)
     }
     // pre-commit fence: the staging build (training + full-corpus
     // encode) is rebuild's longest stage — a holder that lost the
@@ -914,9 +904,6 @@ object VectorIndex {
     // dir exists from the first committer temp file, so a crash
     // mid-build would otherwise skip the rebuild and gate every
     // batch against a partial (or unreadable) corpus
-    val built = new org.apache.hadoop.fs.Path(
-      s"$root/index/corpus/_SUCCESS")
-    val bfs = built.getFileSystem(ss.sparkContext.hadoopConfiguration)
     // the STREAM holds the artifact's writer lease for its whole run
     // (driver-thread acquire, per-batch asOwner transfer — the text
     // twin's contract): a concurrent batch mutator on the same index
@@ -935,7 +922,7 @@ object VectorIndex {
         s"$root/arrivals")
     } {
       WriterLease.asOwner(ss, lr, lease) {
-      if (!bfs.exists(built))
+      if (!builtComplete(ss, s"$root/index"))
         build(e0.filter(col("vec_id") < splitId)
             .select("vec_id", "embedding"),
           dim, lloydSteps, subspaces, subDim, k, s"$root/index",
@@ -1000,8 +987,11 @@ object VectorIndex {
           .withColumn("bucket",
             SimilarityOps.signBucket("embedding", bits))
           .persist()
+        // the PRE-batch corpus: a replayed batch's own generation is
+        // pruned (the text twin's rationale)
         val stored = gateStored(ss, s"$root/index", bits, storedBits,
           enc, push = pushInStream, rawList = true)
+          .filter(col("ingest") <= batchId)
         try {
           // batch-keyed dynamic overwrites: a replayed micro-batch
           // replaces its own decisions/generation instead of
@@ -1063,25 +1053,11 @@ object VectorIndex {
     DedupIndex.memberPrune(s, dir, fact, keyCol, orKeep)
 
   def load(s: SparkSession, dir: String): Loaded = {
-    // two independent dim-sized collects — overlap them (Par.both;
-    // read-only): load sits on every serve/append/rebuild entry and
-    // each collect is all driver latency at these sizes
-    val (cr, br) = Par.both {
-      s.read.parquet(s"$dir/centroids").collect().sortBy(_.getLong(0))
-    } {
-      s.read.parquet(s"$dir/codebooks").collect()
-        .map(r =>
-          (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toArray)
-        .toMap
-    }
-    val cents = SimilarityOps.IvfCentroids(
-      cr.map(_.getLong(0)),
-      cr.flatMap(_.getSeq[Double](1)),
-      cr.map(_.getDouble(2)))
-    val subspaces = br.keys.map(_._1).max + 1
-    val k = br.keys.map(_._2).max + 1
-    val books: ProductQuantization.Codebooks =
-      Array.tabulate(subspaces)(j => Array.tabulate(k)(c => br((j, c))))
+    val (cents, books) = loadQuantizers(s, dir).getOrElse(
+      throw new IllegalArgumentException(
+        s"VectorIndex.load: $dir has no quantizer state (no " +
+          s"${quantizerPath(dir)}) — not a built artifact, or a build " +
+          "crashed before committing; re-run the build"))
     val corpus = ArtifactManifest.frame(s, s"$dir/corpus")
       .withColumn("cell", col("cell").cast("long"))
       .withColumn("ingest", col("ingest").cast("long"))

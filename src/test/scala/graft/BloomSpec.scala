@@ -177,8 +177,9 @@ class BloomSpec extends SparkSpec {
     try {
       val dim = spark.range(0, 500).select((col("id") * 3).as("key"))
       val (bits, k) = BloomPrune.buildSized(dim, "key", 500L, 0.05)
-      BloomPrune.save(spark, bits, k, s"$dir/sketch")
-      val (bits2, k2) = BloomPrune.load(spark, s"$dir/sketch")
+      graft.operators.DedupIndex.saveMembers(spark, bits, k, dir)
+      val (bits2, k2) =
+        graft.operators.DedupIndex.loadMembers(spark, dir).get
       assert(k2 === k)
       assert(bits2.toSeq === bits.toSeq)
     } finally org.apache.commons.io.FileUtils

@@ -405,15 +405,13 @@ class DedupIndexSpec extends SparkSpec {
       // banding while the bucket tree still carries the old stamp —
       // probing across that mismatch silently admits duplicates, so
       // load must fail loudly instead
-      Seq((k * 2, rpb)).toDF("k", "rows_per_band")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
+      DedupIndex.saveParams(spark, dir, k * 2, rpb)
       val e = intercept[IllegalArgumentException] {
         DedupIndex.load(spark, dir)
       }
       assert(e.getMessage.contains("re-run the build"))
       // restoring consistent params restores the load
-      Seq((k, rpb)).toDF("k", "rows_per_band")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
+      DedupIndex.saveParams(spark, dir, k, rpb)
       assert(DedupIndex.load(spark, dir).k === k)
     }
   }
@@ -433,8 +431,7 @@ class DedupIndexSpec extends SparkSpec {
         .parquet(s"$dir/buckets")
       graft.operators.ArtifactManifest.recordBuild(spark,
         s"$dir/buckets")
-      Seq((k, rpb)).toDF("k", "rows_per_band")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
+      DedupIndex.saveParams(spark, dir, k, rpb)
       // a stamped append lands a new generation beside the legacy one:
       // the artifact now mixes rows with and without the stamp, so
       // the geometry probe must read its one row from a STAMPED
@@ -818,6 +815,26 @@ class DedupIndexSpec extends SparkSpec {
     }
   }
 
+  test("every generation a streamed root appends carries the geometry " +
+      "stamp (non-NULL k / rows_per_band), as build and append write it") {
+    val docs = Tables.documents(spark, d)
+    withDir { root =>
+      // default compactEvery: the per-batch generations stay on disk
+      DedupIndex.streamIngestGate(spark, docs, "text", "doc_id", k, rpb,
+        splitId, threshold = 0.5, nFiles = 3, root).count()
+      val gens = ingestDirs("index/buckets", root)
+      assert(gens === Seq("ingest=0", "ingest=1", "ingest=2", "ingest=3"))
+      for (g <- gens) {
+        val rows = spark.read.parquet(s"$root/index/buckets/$g")
+        assert(Seq("k", "rows_per_band").forall(rows.columns.contains),
+          s"$g has no stamp columns")
+        val stamps = rows.select("k", "rows_per_band").distinct()
+          .as[(Option[Int], Option[Int])].collect().toSeq
+        assert(stamps === Seq((Some(k), Some(rpb))), s"$g: $stamps")
+      }
+    }
+  }
+
   test("the streaming gate holds the index's writer lease for its " +
       "whole run: with another holder on the root the stream refuses " +
       "at ENTRY with zero bytes staged, and a finished run releases") {
@@ -915,12 +932,13 @@ class DedupIndexSpec extends SparkSpec {
       val bIds = b.select("doc_id").as[Long].collect().toSeq
       assert(bIds.forall(kept),
         "stale sketch dropped re-built corpus ids")
-      // the staged-swap save never leaves a sibling behind
+      // the tmp-and-rename save never leaves its tmp file behind
       DedupIndex.append(spark, dir,
         docs.filter(col("doc_id") >= splitId), "text", "doc_id")
-      assert(fs.globStatus(new org.apache.hadoop.fs.Path(
-        s"$dir/members.staged.*")).isEmpty)
-      assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/members")))
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(
+        s"$dir/.members.state.tmp")))
+      assert(fs.exists(
+        new org.apache.hadoop.fs.Path(s"$dir/members.state")))
     }
     withDir { dir =>
       // refreshMembers re-sizes from the live ids: after a heavy
@@ -952,7 +970,8 @@ class DedupIndexSpec extends SparkSpec {
         .filter(col("doc_id") < 100L)
         .withColumn("doc_id", concat(lit("doc-"), col("doc_id")))
       DedupIndex.build(sdocs, "text", "doc_id", k, rpb, dir)
-      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/members")))
+      assert(!fs.exists(
+        new org.apache.hadoop.fs.Path(s"$dir/members.state")))
       assert(DedupIndex.memberPrune(spark, dir, sdocs, "doc_id")
         .count() === sdocs.count())
     }
@@ -969,7 +988,8 @@ class DedupIndexSpec extends SparkSpec {
       // every later load would throw on the missing geometry forever
       val fs = new org.apache.hadoop.fs.Path("/")
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/params"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/params.state"),
+        false)
       val l = DedupIndex.buildOrLoad(
         docs.filter(col("doc_id") < splitId),
         "text", "doc_id", k, rpb, dir)

@@ -965,20 +965,17 @@ class IndexArtifactSpec extends SparkSpec {
     withArtifact() { dir =>
       val fs = new org.apache.hadoop.fs.Path("/")
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def halfWritten(p: String): Unit = {
-        val d = new org.apache.hadoop.fs.Path(p)
-        fs.delete(d, true)
-        fs.mkdirs(d)
-        // an uncommitted fragment, no _SUCCESS — what a mid-write
-        // crash leaves
+      def halfWritten(name: String): Unit = {
+        fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$name"), false)
+        // a torn tmp file and no state file — what a mid-write crash
+        // leaves
         val out = fs.create(
-          new org.apache.hadoop.fs.Path(d, "part-00000.snappy.parquet"),
-          true)
-        try out.write("not parquet".getBytes("UTF-8"))
+          new org.apache.hadoop.fs.Path(s"$dir/.$name.tmp"), true)
+        try out.write("not a state file".getBytes("UTF-8"))
         finally out.close()
       }
-      halfWritten(s"$dir/gate")
-      halfWritten(s"$dir/drift")
+      halfWritten("gate.state")
+      halfWritten("drift.state")
       // load treats both as absent instead of throwing on the
       // unreadable fragments
       val l = VectorIndex.load(spark, dir)

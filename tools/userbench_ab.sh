@@ -17,6 +17,10 @@
 #   no regression  otherwise, with ", separates" appended when B wins
 #                  at least 9 of 10 pairs and the medians differ by
 #                  more than A's IQR (the bar a claimed gain must clear).
+# Then each side's failed/attempted operations summed over its seeds
+# (warm-ups excluded; a run that printed no result is counted apart),
+# and `MORE FAILURES` when B's failed share, or its count of runs
+# without a result, exceeds A's.
 #
 # Usage: tools/userbench_ab.sh <ref> <workload> <seeds> [seconds]
 #   ref       git ref for the A side (B is HEAD)
@@ -83,13 +87,16 @@ bench, work, a_ref, b_ref, seeds = (sys.argv[1], sys.argv[2], sys.argv[3],
                                     sys.argv[4], sys.argv[5:])
 names = ("setup_s", "step_ms", "cycle_s")
 
-def load(side, seed):
+def result(side, seed):
     try:
         with open(f"{work}/{side}/seed{seed}.json") as f:
-            res = json.load(f)
+            return json.load(f)
     except (OSError, ValueError):
         return None
-    if not res.get("correct"):
+
+def load(side, seed):
+    res = result(side, seed)
+    if not res or not res.get("correct"):
         return None
     return {n: res["metrics"][n]["value"] for n in names}
 
@@ -146,4 +153,19 @@ for n in names:
         if wins * 10 >= 9 * len(ok) and am - bm > a3 - a1:
             verdict += ", separates"
     print(f"verdict {n}: {verdict}")
+
+print()
+share = {}
+for side in ("a", "b"):
+    runs = [result(side, s) for s in seeds]
+    got = [r for r in runs if isinstance(r, dict)]
+    failed = sum(int(r.get("failed", 0)) for r in got)
+    attempted = sum(int(r.get("attempted", 0)) for r in got)
+    share[side] = (failed / attempted if attempted else 0.0,
+                   len(runs) - len(got))
+    print(f"failures {side.upper()}: {failed}/{attempted} operations "
+          f"({share[side][0]:.4f}), {share[side][1]} of {len(runs)} runs "
+          "without a result")
+if share["b"][0] > share["a"][0] or share["b"][1] > share["a"][1]:
+    print("MORE FAILURES: B fails a larger share than A")
 EOF
