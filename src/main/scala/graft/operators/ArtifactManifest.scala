@@ -292,7 +292,7 @@ object ArtifactManifest {
       s""","schema":${org.json4s.jackson.JsonMethods.compact(
         org.json4s.jackson.JsonMethods.render(org.json4s.JString(sj)))}"""
     }.getOrElse("")
-    val partField = if (partCols.isEmpty || schemaJson.isEmpty) ""
+    val partField = if (partCols.isEmpty) ""
       else partCols.map(c => org.json4s.jackson.JsonMethods.compact(
           org.json4s.jackson.JsonMethods.render(org.json4s.JString(c))))
         .mkString(""","partitions":[""", ",", "]")

@@ -26,9 +26,9 @@ import org.apache.spark.sql.functions._
   *
   * Determinism: training is the same integer-exact scheme as the
   * inline queries (shared builders), and parquet and the state files
-  * round-trip float/double/int values bit-exactly, so build → load → serve equals
-  * train → serve EXACTLY (spec-asserted against s8, and s11's oracle
-  * is literally s8's oracle).
+  * round-trip float/double/int values bit-exactly, so build → load →
+  * serve equals train → serve EXACTLY (spec-asserted against s8, and
+  * s11's oracle is literally s8's oracle).
   */
 object VectorIndex {
 
