@@ -298,7 +298,10 @@ object VectorIndex {
     * is a shared-filesystem path provisioned by the platform, and the
     * fingerprint walk is one filesystem listing of the dataset dir.
     * Within one fingerprint the artifact still follows the index
-    * lifecycle (append / rebuild policy), not cache invalidation.
+    * lifecycle (append / rebuild policy), not cache invalidation. The
+    * name also carries the on-disk layout (`state`: the state files),
+    * so code writing another layout neither opens nor prunes these
+    * roots, and these never touch its roots.
     */
   def artifactRoot(tag: String, datasetDir: String): String = {
     // canonicalize BEFORE walking so two spellings of the same
@@ -335,7 +338,8 @@ object VectorIndex {
     val contentKey = md5(walk(root).mkString("\n")).take(16)
     val parent = new java.io.File(
       s"${sys.props("java.io.tmpdir")}/graft-artifacts")
-    val name = s"$tag-$pathKey-$contentKey"
+    val key = s"$tag-state-$pathKey"
+    val name = s"$key-$contentKey"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory && !java.nio.file.Files.isSymbolicLink(f.toPath))
         Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
@@ -343,7 +347,7 @@ object VectorIndex {
       f.delete()
     }
     Option(parent.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.getName.startsWith(s"$tag-$pathKey-") &&
+      .filter(f => f.getName.startsWith(s"$key-") &&
         f.getName != name)
       .foreach(rm)
     s"${parent.getPath}/$name"
