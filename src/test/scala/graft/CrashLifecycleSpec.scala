@@ -77,6 +77,10 @@ object KillPointFileSystem {
     * measure of the sweep range.
     */
   val ops = new AtomicInteger(0)
+  /** Manifest flips seen since the last (dis)arm — the dry run's
+    * count of the commit points the straddles must cover.
+    */
+  def flips: Int = manifestRenames.get
 
   def armAt(n: Int): Unit = synchronized { reset(); remaining.set(n) }
   def armAtManifestFlip(n: Int, after: Boolean): Unit = synchronized {
@@ -114,8 +118,7 @@ object KillPointFileSystem {
          (dst.getName.startsWith("v") &&
           dst.getName.endsWith(".json") &&
           dst.getParent.getName == "_versions"))
-      if (isFlip && flipTarget > 0 &&
-          manifestRenames.incrementAndGet() == flipTarget) {
+      if (isFlip && manifestRenames.incrementAndGet() == flipTarget) {
         if (flipAfter) armedOnNext = true else die(op, dst)
       }
       if (op == "rename" && dst != null &&
@@ -220,24 +223,29 @@ class CrashLifecycleSpec extends SparkSpec {
   }
 
   /** Run the story on a fresh killfs root with the given arming,
-    * catching the injected death; returns (dir, indexOfFailedStep)
-    * — failed = -1 when the kill never fired (armed past the end).
+    * catching the injected death; returns (dir, indexOfFailedStep,
+    * flipSteps) — failed = -1 when the kill never fired (armed past
+    * the end); flipSteps names, per manifest flip in order, the step
+    * that committed it.
     */
   private def runKilled(local: String,
-      arm: () => Unit): (String, Int) = {
+      arm: () => Unit): (String, Int, Seq[String]) = {
     val dir = s"killfs://$local/idx"
     arm()
     var failed = -1
     val ss = steps(dir)
+    val flipSteps = Seq.newBuilder[String]
     var i = 0
     while (i < ss.length && failed < 0) {
+      val before = KillPointFileSystem.flips
       try ss(i)._2()
       catch {
         case t: Throwable if KillPointFileSystem.fired => failed = i
       }
+      flipSteps ++= Seq.fill(KillPointFileSystem.flips - before)(ss(i)._1)
       i += 1
     }
-    (dir, failed)
+    (dir, failed, flipSteps.result())
   }
 
   /** The post-crash reader + recovery contract for one kill point. */
@@ -329,9 +337,9 @@ class CrashLifecycleSpec extends SparkSpec {
     try {
       // dry run: measure the op count of a clean story (also proves
       // the story itself is green on this filesystem)
-      val total = withTempDir("graft-crash-dry") { local =>
+      val (total, flipSteps) = withTempDir("graft-crash-dry") { local =>
         KillPointFileSystem.disarm()
-        val (dir, failed) = runKilled(local, () => ())
+        val (dir, failed, flipSteps) = runKilled(local, () => ())
         assert(failed === -1)
         // the compaction genuinely range-split: >1 file in a band
         val fs = new HPath(dir).getFileSystem(conf)
@@ -345,30 +353,36 @@ class CrashLifecycleSpec extends SparkSpec {
             "the sweep would not cover the rangeFiles path")
         val opCount = KillPointFileSystem.ops.get()
         checkAndRecover(dir, -1, "dry")
-        opCount
+        (opCount, flipSteps)
       }
       assert(total > 50, s"suspiciously few mutating ops ($total)")
+      assert(Seq("build", "append+sized-compact", "staged-takedown")
+          .forall(flipSteps.contains),
+        s"a mutating step committed no manifest flip ($flipSteps)")
       // seeded random kill points across the whole story…
       val rng = new scala.util.Random(20260816L)
       val randomKills = Seq.fill(8)(1 + rng.nextInt(total))
       for (n <- randomKills.distinct.sorted)
         withTempDir("graft-crash-rand") { local =>
-          val (dir, failed) =
+          val (dir, failed, _) =
             runKilled(local, () => KillPointFileSystem.armAt(n))
           checkAndRecover(dir, failed, s"op#$n")
         }
-      // …plus targeted straddles of every manifest flip: 1 = build's
-      // commit, 2 = the append's recordAppend, 3 = the sized
-      // compaction's flip (the rangeFiles path), 4 = the takedown's
-      // refreshAfterDelete
-      for (flip <- 1 to 4; after <- Seq(false, true))
+      // …plus targeted straddles of every manifest flip the dry run
+      // counted (the append's includes the sized compaction's — the
+      // rangeFiles path): a kill AT the flip lands in the step that
+      // commits it
+      for ((owner, i) <- flipSteps.zipWithIndex;
+          flip = i + 1; after <- Seq(false, true))
         withTempDir("graft-crash-flip") { local =>
-          val (dir, failed) = runKilled(local,
+          val label = s"flip#$flip ($owner) after=$after"
+          val (dir, failed, _) = runKilled(local,
             () => KillPointFileSystem.armAtManifestFlip(flip, after))
           assert(failed >= 0,
-            s"flip#$flip after=$after never fired — the straddle " +
-              "missed its commit point")
-          checkAndRecover(dir, failed, s"flip#$flip after=$after")
+            s"$label never fired — the straddle missed its commit point")
+          if (!after) assert(steps(dir)(failed)._1 === owner,
+            s"$label fired in step $failed")
+          checkAndRecover(dir, failed, label)
         }
       // …and the exact ABSENT-partition window inside the staged
       // swap: kill right after the first live partition is renamed
@@ -376,7 +390,7 @@ class CrashLifecycleSpec extends SparkSpec {
       // must see that band as absent (not torn) and recovery must
       // bring it back
       withTempDir("graft-crash-aside") { local =>
-        val (dir, failed) = runKilled(local,
+        val (dir, failed, _) = runKilled(local,
           () => KillPointFileSystem.armAtAsideRename(1))
         assert(failed >= 0 && steps(dir)(failed)._1 ==
             "staged-takedown",
@@ -461,17 +475,21 @@ class CrashLifecycleSpec extends SparkSpec {
     * per-cell id map right after the append step completes (the
     * takedown invariant's baseline; None when the kill fired at or
     * before the append). The snapshot is a pure read — it consumes no
-    * mutating ops, so it does not shift the armed kill point.
+    * mutating ops, so it does not shift the armed kill point. The
+    * last element names, per manifest flip, the step that committed
+    * it ([[runKilled]]'s).
     */
   private def runVecKilled(local: String, arm: () => Unit)
-      : (String, Int, Option[Map[Long, Set[Long]]]) = {
+      : (String, Int, Option[Map[Long, Set[Long]]], Seq[String]) = {
     val dir = s"killfs://$local/vidx"
     arm()
     var failed = -1
     var afterAppend: Option[Map[Long, Set[Long]]] = None
     val ss = vecSteps(dir)
+    val flipSteps = Seq.newBuilder[String]
     var i = 0
     while (i < ss.length && failed < 0) {
+      val before = KillPointFileSystem.flips
       try {
         ss(i)._2()
         if (ss(i)._1 == "append+sized-compact")
@@ -479,9 +497,10 @@ class CrashLifecycleSpec extends SparkSpec {
       } catch {
         case t: Throwable if KillPointFileSystem.fired => failed = i
       }
+      flipSteps ++= Seq.fill(KillPointFileSystem.flips - before)(ss(i)._1)
       i += 1
     }
-    (dir, failed, afterAppend)
+    (dir, failed, afterAppend, flipSteps.result())
   }
 
   private def vecCheckAndRecover(dir: String, failed: Int,
@@ -571,36 +590,40 @@ class CrashLifecycleSpec extends SparkSpec {
       assert(v1.nonEmpty && v2.size > v1.size && v3.size < v2.size,
         s"reference states not strictly staged " +
           s"(${v1.size}/${v2.size}/${v3.size})")
-      val total = withTempDir("graft-vcrash-dry") { local =>
+      val (total, flipSteps) = withTempDir("graft-vcrash-dry") { local =>
         KillPointFileSystem.disarm()
-        val (dir, failed, snap) = runVecKilled(local, () => ())
+        val (dir, failed, snap, flipSteps) =
+          runVecKilled(local, () => ())
         assert(failed === -1)
         val opCount = KillPointFileSystem.ops.get()
         vecCheckAndRecover(dir, -1, snap, v1, v2, v3, "vdry")
-        opCount
+        (opCount, flipSteps)
       }
       assert(total > 50, s"suspiciously few mutating ops ($total)")
+      assert(Seq("build", "append+sized-compact", "staged-takedown")
+          .forall(flipSteps.contains),
+        s"a mutating step committed no manifest flip ($flipSteps)")
       val rng = new scala.util.Random(20260817L)
       for (n <- Seq.fill(6)(1 + rng.nextInt(total)).distinct.sorted)
         withTempDir("graft-vcrash-rand") { local =>
-          val (dir, failed, snap) =
+          val (dir, failed, snap, _) =
             runVecKilled(local, () => KillPointFileSystem.armAt(n))
           vecCheckAndRecover(dir, failed, snap, v1, v2, v3, s"vop#$n")
         }
-      // straddle the append's recordAppend (2) and the sized
-      // compaction's flip (3); the build/delete flips are covered by
-      // the dedup twin's straddles of the same shared commit path
-      for (flip <- Seq(2, 3); after <- Seq(false, true))
+      // straddle every manifest flip the dry run counted
+      for ((owner, i) <- flipSteps.zipWithIndex;
+          flip = i + 1; after <- Seq(false, true))
         withTempDir("graft-vcrash-flip") { local =>
-          val (dir, failed, snap) = runVecKilled(local,
+          val label = s"vflip#$flip ($owner) after=$after"
+          val (dir, failed, snap, _) = runVecKilled(local,
             () => KillPointFileSystem.armAtManifestFlip(flip, after))
-          assert(failed >= 0,
-            s"vflip#$flip after=$after never fired")
-          vecCheckAndRecover(dir, failed, snap, v1, v2, v3,
-            s"vflip#$flip after=$after")
+          assert(failed >= 0, s"$label never fired")
+          if (!after) assert(vecSteps(dir)(failed)._1 === owner,
+            s"$label fired in step $failed")
+          vecCheckAndRecover(dir, failed, snap, v1, v2, v3, label)
         }
       withTempDir("graft-vcrash-aside") { local =>
-        val (dir, failed, snap) = runVecKilled(local,
+        val (dir, failed, snap, _) = runVecKilled(local,
           () => KillPointFileSystem.armAtAsideRename(1))
         assert(failed >= 0 && vecSteps(dir)(failed)._1 ==
             "staged-takedown",
