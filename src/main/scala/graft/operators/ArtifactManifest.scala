@@ -704,29 +704,76 @@ object ArtifactManifest {
   def compactGenerationsSized(s: SparkSession, dir: String,
       partCol: String, sortWithin: Seq[String] = Nil,
       vacuum: Boolean = true): Long = {
-    val target =
-      Knobs.long(s, "graft.index.targetFileBytes", 512L << 20, min = 1)
-    val bytes = liveBytes(s, dir)
-    val nPart =
-      math.max(1, LayoutOps.partitionValueCount(s, dir, partCol))
-    val fpp = math.min(4096L,
-      math.max(1L, (bytes / nPart + target - 1L) / target)).toInt
+    val fpp = sizedFilesPerPartition(s, liveBytes(s, dir),
+      LayoutOps.partitionValueCount(s, dir, partCol))
     compactGenerations(s, dir, partCol, filesPerPartition = fpp,
       sortWithin = sortWithin, vacuum = vacuum,
       rangeFiles = fpp > 1 && sortWithin.nonEmpty)
   }
 
-  /** The index stores' compaction trigger: once `store` carries
+  /** Files per partition for a sized rewrite of `bytes` over `nPart`
+    * partitions: ceil(bytes / nPart / `graft.index.targetFileBytes`),
+    * capped at 4096.
+    */
+  private def sizedFilesPerPartition(s: SparkSession, bytes: Long,
+      nPart: Int): Int = {
+    val target =
+      Knobs.long(s, "graft.index.targetFileBytes", 512L << 20, min = 1)
+    math.min(4096L,
+      math.max(1L, (bytes / math.max(1, nPart) + target - 1L) / target))
+      .toInt
+  }
+
+  /** The index stores' compaction trigger for the streaming gates,
+    * which have no batch left to merge: once `store` carries
     * `compactEvery` generations, collapse it with
     * [[compactGenerationsSized]] (past `graft.index.targetFileBytes`
     * per partition the files range-split on `sortWithin`, so the
-    * pushed probes keep skipping). File count stays bounded by the
-    * compaction period at any ingest rate.
+    * pushed probes keep skipping). Batch appends merge on write
+    * instead ([[appendGeneration]]).
     */
   private[operators] def compactIfDue(s: SparkSession, store: String,
       key: String, compactEvery: Int, sortWithin: Seq[String]): Unit =
     if (LayoutOps.ingestGenerations(s, store).size >= compactEvery)
       compactGenerationsSized(s, store, key, sortWithin = sortWithin)
+
+  /** Append generation `gen` of an index store, compacting on the
+    * write when it is due — the LSM merge-on-flush: when the on-disk
+    * generations plus this one reach `compactEvery` and the store is
+    * not committed-empty, the pinned live set ∪ `rows` is written as
+    * the ONE generation `gen` with [[compactGenerationsSized]]'s
+    * layout (sized from the live bytes, range-split on `sortWithin`
+    * past one file per partition), committed with one flip, then
+    * [[vacuum]]ed; the batch's rows are written once, not written,
+    * committed, read back and rewritten. Otherwise a plain
+    * [[writeGeneration]] append. A crash before the flip leaves `gen`
+    * an uncommitted orphan and readers on the previous live set.
+    */
+  private[operators] def appendGeneration(rows: DataFrame, store: String,
+      key: String, gen: Long, sortWithin: Seq[String],
+      compactEvery: Int): Unit = {
+    val s = rows.sparkSession
+    val listed = LayoutOps.ingestGenerations(s, store)
+    val pin = latest(s, store)
+    if (listed.size + 1 < compactEvery ||
+        pin.exists(_.generations.isEmpty)) {
+      writeGeneration(rows, store, key, gen, sortWithin, append = true)
+      return
+    }
+    // the recover-first rule of compactGenerations
+    LayoutOps.recoverStagedTakedown(s, store, key)
+    val live = frameOfPin(s, store, pin)
+    val merged = live.drop("ingest")
+      .unionByName(rows, allowMissingColumns = true)
+    val fpp = sizedFilesPerPartition(s, liveBytes(s, store),
+      LayoutOps.partitionValueCount(s, store, key))
+    LayoutOps.writeGenerationPacked(merged, key, fpp, sortWithin,
+      s"$store/ingest=$gen", rangeFiles = fpp > 1 && sortWithin.nonEmpty)
+    val raw = rawListings(s, store, Seq(gen))
+    commit(s, store, Seq(gen), fullSignatureOf(raw, Seq(gen)), pin,
+      digestsOf(raw), Some(frameShape(merged.schema, Seq("ingest", key))))
+    vacuum(s, store)
+  }
 
   /** Write generation `gen` of an index store: `rows` plus the
     * constant `ingest` column, partitioned by `(ingest, key)`, pages

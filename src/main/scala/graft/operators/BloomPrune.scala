@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.{BloomAgg, BloomSketch}
+import graft.functions.BloomSketch
 
 /** Bloom semi-join pruning: build a fixed-memory membership sketch over
   * the join keys of a filtered dimension, then drop fact rows that
@@ -34,22 +34,26 @@ import graft.functions.{BloomAgg, BloomSketch}
   */
 object BloomPrune {
 
-  /** Distributed build: aggregate the (long) key column into one
-    * bitset. The driver receives `numBits/8` bytes — dim-sized scalar
+  /** Distributed build: one `treeAggregate` of per-partition bitsets
+    * — ONE Spark job, where a global aggregate runs two under adaptive
+    * execution (its shuffle stage, then the result). Keys go through
+    * [[BloomSketch.add]] and partials through [[BloomSketch.merge]],
+    * exactly as [[graft.functions.BloomAgg]] does, so the bits are
+    * identical; NULL keys are skipped, and an empty key frame yields
+    * the all-zeros bitset that correctly rejects everything. The
+    * driver receives `numBits/8`-byte partials — dim-sized scalar
     * collect, same budget class as the IVF centroid pulls.
     */
   def build(keys: DataFrame, keyCol: String, numBits: Int,
-      numHashes: Int): Array[Long] = {
-    val agg = BloomAgg(numBits, numHashes)
-    val row = keys.select(col(keyCol).cast("long").as("k"))
-      .where(col("k").isNotNull)
-      .agg(agg(col("k")).as("bits"))
-      .head()
-    // an empty key frame yields the aggregator's zero — an all-zeros
-    // bitset that correctly rejects everything
-    if (row.isNullAt(0)) BloomSketch.alloc(numBits)
-    else row.getSeq[Long](0).toArray
-  }
+      numHashes: Int): Array[Long] =
+    keys.select(col(keyCol).cast("long")).queryExecution.toRdd
+      .treeAggregate(BloomSketch.alloc(numBits))(
+        (bits, row) => {
+          if (!row.isNullAt(0)) BloomSketch.add(bits, row.getLong(0),
+            numHashes)
+          bits
+        },
+        BloomSketch.merge)
 
   /** `sizing`-driven build: bits/k chosen for `expectedKeys` at `fpp`. */
   def buildSized(keys: DataFrame, keyCol: String, expectedKeys: Long,

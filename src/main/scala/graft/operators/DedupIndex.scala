@@ -46,14 +46,16 @@ object DedupIndex {
   /** Next ingest generation of a `(ingest, …)`-partitioned artifact
     * dir — driver-side listing via [[LayoutOps.ingestGenerations]]
     * (one filesystem metadata call, never a corpus scan). Shared by
-    * both index artifacts.
+    * both index artifacts. A committed-empty store whose total
+    * takedown removed every generation directory starts again at 0.
     */
   private[operators] def nextGeneration(s: SparkSession,
       partitionedDir: String): Long = {
     val gens = LayoutOps.ingestGenerations(s, partitionedDir)
-    require(gens.nonEmpty,
+    require(gens.nonEmpty ||
+        ArtifactManifest.latest(s, partitionedDir).nonEmpty,
       s"$partitionedDir has no ingest= partitions — not a built artifact")
-    gens.max + 1
+    gens.maxOption.fold(0L)(_ + 1)
   }
 
   // ---- membership sketch ------------------------------------------------
@@ -320,30 +322,78 @@ object DedupIndex {
     val (pin, raw) = ArtifactManifest.pinnedFrame(s, s"$dir/buckets")
     // geometry consistency: a crashed re-build can pair params with a
     // bucket tree written under DIFFERENT banding — probing across
-    // that mismatch silently admits duplicates. One-row check against
-    // the stamp (absent on pre-stamp artifacts — those keep the old
-    // trust-the-params behavior). A mixed artifact — legacy unstamped
-    // build plus stamped appends — surfaces the stamp columns in the
-    // schema but as NULL on the legacy rows, so the probe row must
-    // come from a stamped generation: filter nulls BEFORE limit(1),
-    // else getInt throws on a legitimate artifact (or the check is
-    // skipped when an unstamped footer wins schema inference).
-    if (raw.columns.contains("k"))
-      raw.select(col("k"), col("rows_per_band"))
-        .filter(col("k").isNotNull && col("rows_per_band").isNotNull)
-        .limit(1).collect()
-        .foreach { r =>
-          require(r.getInt(0) == k && r.getInt(1) == rowsPerBand,
-            s"DedupIndex.load: params of $dir declare geometry " +
-              s"($k, $rowsPerBand) but the bucket tree was written " +
-              s"under (${r.getInt(0)}, ${r.getInt(1)}) — a re-build " +
-              "crashed between the two writes; re-run the build")
-        }
+    // that mismatch silently admits duplicates. Checked against the
+    // stamp in a footer (absent on pre-stamp artifacts — those keep
+    // the old trust-the-params behavior).
+    storedStamp(s, s"$dir/buckets", pin).foreach { case (sk, srpb) =>
+      require(sk == k && srpb == rowsPerBand,
+        s"DedupIndex.load: params of $dir declare geometry " +
+          s"($k, $rowsPerBand) but the bucket tree was written " +
+          s"under ($sk, $srpb) — a re-build crashed between the two " +
+          "writes; re-run the build")
+    }
     Loaded(k, rowsPerBand,
       raw.drop("k", "rows_per_band")
         .withColumn("band", col("band").cast("long"))
         .withColumn("ingest", col("ingest").cast("long")),
       Some(dir), pin)
+  }
+
+  /** The bucket tree's `(k, rows_per_band)` stamp, read on the driver
+    * from the parquet footer statistics of the first pinned data file
+    * whose stamp columns have non-null stats — no Spark job. Files
+    * without them are skipped: a mixed artifact (legacy unstamped
+    * build plus stamped appends) has files that lack the columns or
+    * hold them all-NULL. `None` when no file carries a stamp (a
+    * pre-stamp artifact, a committed-empty one). A file whose stamp
+    * min differs from its max holds two geometries, which no writer
+    * produces: refused.
+    */
+  private def storedStamp(s: SparkSession, store: String,
+      pin: Option[ArtifactManifest.Pin]): Option[(Int, Int)] = {
+    import org.apache.hadoop.fs.Path
+    import scala.jdk.CollectionConverters._
+    val conf = s.sparkContext.hadoopConfiguration
+    val base = new Path(store)
+    val fs = base.getFileSystem(conf)
+    // the files a read of the pin serves: Spark skips `_`/`.` names
+    def served(root: Path)(p: Path): Boolean =
+      p.getName.endsWith(".parquet") && !p.toString
+        .stripPrefix(fs.makeQualified(root).toString + "/").split('/')
+        .exists(n => n.startsWith("_") || n.startsWith("."))
+    def stamp(p: Path): Option[(Int, Int)] = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+      try {
+        val blocks = r.getFooter.getBlocks.asScala
+        def range(c: String): Option[(Long, Long)] = {
+          val st = blocks.flatMap(_.getColumns.asScala
+              .find(_.getPath.toDotString == c))
+            .map(_.getStatistics)
+            .filter(x => x != null && x.hasNonNullValue)
+          def num(v: Any) = v.asInstanceOf[Number].longValue
+          if (st.isEmpty) None
+          else Some((st.map(x => num(x.genericGetMin)).min,
+            st.map(x => num(x.genericGetMax)).max))
+        }
+        for ((k0, k1) <- range("k"); (r0, r1) <- range("rows_per_band"))
+          yield {
+            require(k0 == k1 && r0 == r1,
+              s"DedupIndex.load: bucket file $p mixes banding " +
+                s"geometries (k $k0..$k1, rows_per_band $r0..$r1)")
+            (k0.toInt, r0.toInt)
+          }
+      } finally r.close()
+    }
+    val roots = pin match {
+      case Some(p) =>
+        p.generations.sorted.map(g => new Path(store, s"ingest=$g"))
+      case None => Seq(base)
+    }
+    roots.iterator.filter(fs.exists)
+      .flatMap(r => ArtifactManifest.listStatusWalk(fs, r).iterator
+        .map(_.getPath).filter(served(r)))
+      .flatMap(stamp).nextOption()
   }
 
   /** Ceiling on any CATALYST-pushed In list the engine builds
@@ -756,15 +806,15 @@ object DedupIndex {
   /** Append the batch's buckets — existing bucket files untouched;
     * ingest costs the batch's own signatures only. MAINTENANCE is
     * wired in, not left to an operator nobody schedules: every
-    * generation adds ≥1 file per band, so once the artifact carries
-    * `compactEvery` generations the append triggers
-    * [[ArtifactManifest.compactGenerations]] and the bucket tree collapses
-    * back to one generation (one file per band) — file count stays
-    * bounded by the compaction period at any ingest rate, and the
-    * amortized cost is one artifact rewrite per `compactEvery`
-    * appends. Probe results are identical across the collapse
-    * (spec-asserted); generation numbering stays monotone (the max
-    * survives).
+    * generation adds ≥1 file per band, so when this batch's
+    * generation would be the `compactEvery`-th, the append MERGES
+    * instead ([[ArtifactManifest.appendGeneration]]): the live bucket
+    * tree ∪ the batch is written once as the new generation (one file
+    * per band), with one manifest flip — file count stays bounded by
+    * the compaction period at any ingest rate, and the amortized cost
+    * is one artifact rewrite per `compactEvery` appends. Probe
+    * results are identical to a plain append followed by a
+    * compaction (spec-asserted); generation numbering stays monotone.
     */
   def append(s: SparkSession, dir: String, newDocs: DataFrame,
       textCol: String, idCol: String, compactEvery: Int = 16): Unit = {
@@ -772,10 +822,8 @@ object DedupIndex {
       s"append: compactEvery >= 2 (got $compactEvery)")
     WriterLease.withLease(s, leaseRoot(dir)) {
       val l = load(s, dir)
-      appendWith(l.k, l.rowsPerBand, dir, newDocs, textCol, idCol,
-        nextGeneration(s, s"$dir/buckets"))
-      ArtifactManifest.compactIfDue(s, s"$dir/buckets", "band",
-        compactEvery, Seq("bucket"))
+      appendBatch(l.k, l.rowsPerBand, dir, newDocs, textCol, idCol,
+        nextGeneration(s, s"$dir/buckets"), compactEvery)
     }
   }
 
@@ -798,7 +846,16 @@ object DedupIndex {
     */
   def appendWith(k: Int, rowsPerBand: Int, dir: String,
       newDocs: DataFrame, textCol: String, idCol: String,
-      generation: Long): Unit = {
+      generation: Long): Unit =
+    appendBatch(k, rowsPerBand, dir, newDocs, textCol, idCol, generation,
+      compactEvery = Int.MaxValue)
+
+  /** [[appendWith]], merging the live tree into the generation when
+    * it is the `compactEvery`-th ([[ArtifactManifest.appendGeneration]]).
+    */
+  private def appendBatch(k: Int, rowsPerBand: Int, dir: String,
+      newDocs: DataFrame, textCol: String, idCol: String,
+      generation: Long, compactEvery: Int): Unit = {
     // membership FIRST: a crash between the two writes must leave the
     // sketch a superset (see the membership-sketch block above)
     orMembers(newDocs, idCol, dir)
@@ -807,10 +864,10 @@ object DedupIndex {
     // bucket-sorted within the generation's band files, same as
     // [[build]] — keeps the probe's row-group skipping effective
     // across appends
-    ArtifactManifest.writeGeneration(
+    ArtifactManifest.appendGeneration(
       stamped(bucketsOf(newDocs, textCol, idCol, k, rowsPerBand), k,
         rowsPerBand),
-      s"$dir/buckets", "band", generation, Seq("bucket"), append = true)
+      s"$dir/buckets", "band", generation, Seq("bucket"), compactEvery)
   }
 
   /** Delete documents from the index by id — the takedown path (the

@@ -393,12 +393,13 @@ object VectorIndex {
     * gate is the re-train trigger.
     *
     * MAINTENANCE is wired in (the text twin's contract,
-    * [[DedupIndex.append]]): at `compactEvery` accumulated
-    * generations the append triggers
-    * [[ArtifactManifest.compactGenerations]], collapsing the per-batch cell
+    * [[DedupIndex.append]]): when this batch's generation would be the
+    * `compactEvery`-th, the append merges the live corpus and the
+    * batch into one new generation ([[ArtifactManifest.appendGeneration]],
+    * one write and one manifest flip), collapsing the per-batch cell
     * files back to one file per cell — a serving probe of one cell
-    * opens a bounded file count at any ingest rate. Serve results are
-    * identical across the collapse (spec-asserted).
+    * opens a bounded file count at any ingest rate. Serve results
+    * equal a plain append followed by a compaction (spec-asserted).
     *
     * Returns the DRIFT SIGNAL — `true` when this batch's mean
     * assigned-centroid cosine fell more than `driftTolerance` below
@@ -431,9 +432,7 @@ object VectorIndex {
     // written generation BACK for a separate aggregate, one extra
     // driver action + scan per append
     val base = driftBaseline(s, dir)
-    val cos = appendWithDrift(l, dir, newVecs, gen)
-    ArtifactManifest.compactIfDue(s, s"$dir/corpus", "cell",
-      compactEvery, bucketCol(l.gateBits))
+    val cos = appendWithDrift(l, dir, newVecs, gen, compactEvery)
     base.exists(b => cos.exists(_ < b - driftTolerance))
     }
   }
@@ -460,11 +459,15 @@ object VectorIndex {
     * broadcast join against the k-row centroid table rides the
     * encode+write job, the same fold [[build]] uses for the
     * baseline), instead of [[append]]'s former read-back aggregate of
-    * the just-written generation. `None` when no batch row has a
-    * positive norm (including the zero-row batch).
+    * the just-written generation. The observation sits on the batch's
+    * rows, so a merging write ([[ArtifactManifest.appendGeneration]],
+    * when `generation` is the `compactEvery`-th) still measures the
+    * batch alone. `None` when no batch row has a positive norm
+    * (including the zero-row batch).
     */
-  private[operators] def appendWithDrift(l: Loaded, dir: String,
-      newVecs: DataFrame, generation: Long): Option[Double] = {
+  private[graft] def appendWithDrift(l: Loaded, dir: String,
+      newVecs: DataFrame, generation: Long,
+      compactEvery: Int = Int.MaxValue): Option[Double] = {
     val dim = l.cents.books.length / l.cents.cells.length
     // membership before the corpus append (superset-on-crash)
     DedupIndex.orMembers(newVecs, "vec_id", dir)
@@ -484,8 +487,8 @@ object VectorIndex {
       DedupIndex.leaseRoot(dir))
     // bucket-sorted within the generation's cell files, same as
     // [[build]] — keeps the gate's row-group skipping effective
-    ArtifactManifest.writeGeneration(rows, s"$dir/corpus", "cell",
-      generation, bucketCol(l.gateBits), append = true)
+    ArtifactManifest.appendGeneration(rows, s"$dir/corpus", "cell",
+      generation, bucketCol(l.gateBits), compactEvery)
     drift.get.get("batch_cos").flatMap(Option(_))
       .map(_.asInstanceOf[Double])
   }

@@ -182,8 +182,8 @@ class ArtifactStateSpec extends SparkSpec {
     }
   }
 
-  test("VectorIndex.load starts no Spark job, and DedupIndex.load only " +
-      "its stamp-check job, on built and appended artifacts") {
+  test("VectorIndex.load and DedupIndex.load start no Spark job on " +
+      "built, appended and committed-empty artifacts") {
     withTempDir("graft-state-jobs") { root =>
       val docs = Tables.documents(spark, d)
       val vecs = Tables.embeddings(spark, d).select("vec_id", "embedding")
@@ -199,14 +199,24 @@ class ArtifactStateSpec extends SparkSpec {
       assert(vJobs === 0)
       assert(lv.gateBits === Some(4) && lv.cents.cells.nonEmpty)
       assert(jobsOf(VectorIndex.driftBaseline(spark, vdir))._2 === 0)
+      // the geometry check reads a footer on the driver
       val (ld, dJobs) = jobsOf(DedupIndex.load(spark, ddir))
-      assert(dJobs === 1)
+      assert(dJobs === 0)
       assert((ld.k, ld.rowsPerBand) === ((k, rpb)))
       // the loaded frames serve what an inference read serves
       assert(lv.corpus.count() === vecs.count())
       assert(ld.buckets.select("doc_id").distinct().count() ===
         spark.read.parquet(s"$ddir/buckets").select("doc_id")
           .distinct().count())
+      // committed-empty (a total takedown): no file to stamp-check,
+      // still no job, zero rows served
+      DedupIndex.delete(spark, ddir, docs.select("doc_id"))
+      assert(ArtifactManifest.latest(spark, s"$ddir/buckets").get
+        .generations.isEmpty)
+      val (le, eJobs) = jobsOf(DedupIndex.load(spark, ddir))
+      assert(eJobs === 0)
+      assert((le.k, le.rowsPerBand) === ((k, rpb)))
+      assert(le.buckets.count() === 0)
     }
   }
 
@@ -218,13 +228,12 @@ class ArtifactStateSpec extends SparkSpec {
         "doc_id", k, rpb, dir)
       val batch = docs.filter(col("doc_id") >= splitId)
       val (bits, hashes) = DedupIndex.loadMembers(spark, dir).get
-      // the batch's own bits (an aggregate: its shuffle stage and the
-      // result each run a job under adaptive execution)
+      // the batch's own bits: one treeAggregate job
       val (_, buildJobs) = jobsOf(BloomPrune.build(batch.select(
         col("doc_id").cast("long").as("id")), "id", bits.length * 64,
         hashes))
       val (_, jobs) = jobsOf(DedupIndex.orMembers(batch, "doc_id", dir))
-      assert(buildJobs > 0 && jobs === buildJobs)
+      assert(buildJobs === 1 && jobs === buildJobs)
       val (pruned, pruneJobs) = jobsOf(
         DedupIndex.memberPrune(spark, dir, docs, "doc_id"))
       assert(pruneJobs === 0)

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.BloomSketch
+import graft.functions.{BloomAgg, BloomSketch}
 import graft.operators.BloomPrune
 
 class BloomSpec extends SparkSpec {
@@ -25,6 +25,30 @@ class BloomSpec extends SparkSpec {
     val fps = probes.count(BloomSketch.mightContain(sketch, _, k))
     val rate = fps.toDouble / probes.size
     assert(rate < 0.03, s"fp rate $rate at sized 1% target")
+  }
+
+  test("the treeAggregate build sets exactly the bits of the BloomAgg " +
+      "aggregate, with NULL keys, an empty frame and many partitions") {
+    def viaAgg(keys: org.apache.spark.sql.DataFrame, bits: Int,
+        k: Int): Seq[Long] = {
+      val row = keys.select(col("key").cast("long").as("k"))
+        .where(col("k").isNotNull)
+        .agg(BloomAgg(bits, k)(col("k"))).head()
+      if (row.isNullAt(0)) BloomSketch.alloc(bits).toSeq
+      else row.getSeq[Long](0)
+    }
+    val withNulls = spark.range(0, 3000, 1, 7).select(
+      when(col("id") % 5 === 0, lit(null)).otherwise(col("id") * 13)
+        .as("key"))
+    val empty = withNulls.where(lit(false))
+    val allNull = withNulls.where(col("key").isNull)
+    val ints = spark.range(0, 500).select(col("id").cast("int").as("key"))
+    for ((name, keys) <- Seq("nulls" -> withNulls, "empty" -> empty,
+        "all-null" -> allNull, "int keys" -> ints);
+        (bits, k) <- Seq((640, 3), (BloomSketch.sizing(3000L, 0.02))))
+      assert(BloomPrune.build(keys, "key", bits, k).toSeq ===
+        viaAgg(keys, bits, k), s"$name at ($bits, $k)")
+    assert(BloomPrune.build(empty, "key", 640, 3).forall(_ == 0L))
   }
 
   test("sizing follows the standard bloom formulas") {

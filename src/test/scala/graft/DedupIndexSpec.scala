@@ -642,14 +642,14 @@ class DedupIndexSpec extends SparkSpec {
     withDir { dir =>
       DedupIndex.build(docs.filter(col("doc_id") < splitId),
         "text", "doc_id", k, rpb, dir)
-      // threshold 2: this append lands generation 1, the artifact now
-      // carries 2 generations, and the append itself triggers the
-      // collapse — maintenance is part of ingest, not a separate
-      // operator nobody schedules
+      // threshold 2: this append's generation 1 would be the
+      // artifact's 2nd, so the append itself merges the live tree and
+      // the batch into generation 1 — maintenance is part of ingest,
+      // not a separate operator nobody schedules
       DedupIndex.append(spark, dir,
         docs.filter(col("doc_id") >= splitId), "text", "doc_id",
         compactEvery = 2)
-      assert(ingestDirs("buckets", dir) === Seq("ingest=2"))
+      assert(ingestDirs("buckets", dir) === Seq("ingest=1"))
       // the collapsed index still equals a fresh full build
       val stored = DedupIndex.load(spark, dir).buckets
         .select("doc_id", "band", "bucket")

@@ -245,14 +245,15 @@ class IndexArtifactSpec extends SparkSpec {
       // serving is identical across the collapse — compaction is a
       // physical-layout pass, not a semantic one
       assert(served() === before)
-      // and the maintenance is WIRED INTO ingest: an append that lands
-      // the threshold-th generation triggers the collapse itself
+      // and the maintenance is WIRED INTO ingest: an append whose
+      // generation would be the threshold-th merges the live corpus
+      // and the batch into that generation itself
       VectorIndex.append(spark, dir,
         all.filter(col("vec_id") >= 400)
           .select((col("vec_id") + 10000).as("vec_id"),
             col("embedding")),
         compactEvery = 2)
-      assert(ingestDirs(dir) === Seq("ingest=4"))
+      assert(ingestDirs(dir) === Seq("ingest=3"))
       assert(served().nonEmpty)
     }
   }

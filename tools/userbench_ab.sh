@@ -20,7 +20,10 @@
 # Then each side's failed/attempted operations summed over its seeds
 # (warm-ups excluded; a run that printed no result is counted apart),
 # and `MORE FAILURES` when B's failed share, or its count of runs
-# without a result, exceeds A's.
+# without a result, exceeds A's. Between the summary and the verdicts,
+# one `OUTLIER` line per run above its side's Q3 + 1.5 x IQR on a
+# metric (sides with at least 4 correct runs); the verdicts still count
+# every run.
 #
 # Usage: tools/userbench_ab.sh <ref> <workload> <seeds> [seconds]
 #   ref       git ref for the A side (B is HEAD)
@@ -129,6 +132,22 @@ for n in names:
           f"[{b1:.4g}, {b3:.4g}]; B/A = {bm / am:.3f}; |B-A| = "
           f"{abs(bm - am) / (a3 - a1) if a3 > a1 else float('inf'):.2f}"
           f" x A's IQR; B lower on {wins}/{len(ok)} seeds")
+
+# runs far above the rest of their own side (a slow host moment, not the
+# code) widen that side's quartiles; name them so a leg is read with them
+for side in ("a", "b"):
+    runs = [(s, load(side, s)) for s in seeds]
+    runs = [(s, r) for s, r in runs if r]
+    for n in names:
+        if len(runs) < 4:
+            break
+        q1, _, q3 = statistics.quantiles([r[n] for _, r in runs], n=4,
+                                         method="inclusive")
+        fence = q3 + 1.5 * (q3 - q1)
+        for s, r in runs:
+            if r[n] > fence:
+                print(f"OUTLIER {side.upper()} seed {s} {n}: {r[n]:.4g} > "
+                      f"Q3 + 1.5 x IQR = {fence:.4g}")
 
 with open(bench) as f:
     spec = {m["name"]: m for m in json.load(f)["end_to_end"]}
