@@ -742,8 +742,9 @@ object ArtifactManifest {
     * generations plus this one reach `compactEvery` and the store is
     * not committed-empty, the pinned live set ∪ `rows` is written as
     * the ONE generation `gen` with [[compactGenerationsSized]]'s
-    * layout (sized from the live bytes, range-split on `sortWithin`
-    * past one file per partition), committed with one flip, then
+    * layout (sized from the live bytes — the batch's are unknown
+    * before its write — and range-split on `sortWithin` past one file
+    * per partition), committed with one flip, then
     * [[vacuum]]ed; the batch's rows are written once, not written,
     * committed, read back and rewritten. Otherwise a plain
     * [[writeGeneration]] append. A crash before the flip leaves `gen`
