@@ -17,6 +17,21 @@ import org.apache.spark.sql.SparkSession
   *    200 default — on a real cluster this would instead be set to
   *    ~2-3× total executor cores (or left to AQE coalescing, which stays
   *    enabled).
+  *  - `spark.sql.artifact.isolation.enabled = false` — Spark keys its
+  *    codegen cache by (class loader, code), and with isolation on each
+  *    session's tasks run in their own executor class loader. Every
+  *    `StreamExecution` run clones its session and
+  *    [[streaming.StreamingOps.streamSession]] makes a child, so each
+  *    scheduled publisher run compiled byte-identical classes again
+  *    (35 per `odm_publish` incremental run, 0.44–0.56 s of compile;
+  *    3–9 with one loader). The engine adds no session artifacts (no
+  *    `addArtifact`/`addJar`), so one shared loader loses nothing.
+  *  - `spark.sql.codegen.cache.maxEntries = 1000` — the default 100 is
+  *    below the working set (131 unique classes in one `qc_edit`
+  *    benchmark run, 168 in `corpus_ingest`), so every cycle compiled
+  *    evicted classes again (133 compiles in a `corpus_ingest` cycle,
+  *    26 at 1000). A static conf: it takes effect only when set before
+  *    the JVM's first codegen.
   */
 object Sessions {
   def builder(appName: String, cpus: String): SparkSession.Builder =
@@ -48,6 +63,8 @@ object Sessions {
       // engine caps its own pushed sets at the same value
       // (DedupIndex.PushMaxValues).
       .config("spark.sql.parquet.pushdown.inFilterThreshold", "1024")
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
 
   def local(appName: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")

@@ -243,6 +243,19 @@ object LayoutOps {
     fs.delete(old, true)
   }
 
+  /** Delete generation directory `gp` when it holds no data: every
+    * entry left is hidden from Spark's file listing (`_` or `.`
+    * prefix). A generation written into its own directory
+    * ([[writeGenerationPacked]]) keeps its `_SUCCESS` marker there
+    * after a takedown empties its last partition.
+    */
+  private def dropIfDataless(fs: org.apache.hadoop.fs.FileSystem,
+      gp: org.apache.hadoop.fs.Path): Unit =
+    if (fs.exists(gp) && fs.listStatus(gp).forall { st =>
+        val n = st.getPath.getName
+        n.startsWith("_") || n.startsWith(".")
+      }) fs.delete(gp, true)
+
   /** ONE packed generation write — the shared recipe of
     * [[compactGenerations]]'s sortWithin branch and
     * [[ArtifactManifest.compactGenerations]], kept in one place
@@ -554,12 +567,10 @@ object LayoutOps {
         require(fs.delete(dead, true),
           s"deleteKeysPartitioned: failed to remove emptied " +
             s"partition $dead — rows NOT removed")
-        // a generation whose every partition emptied leaves a bare
-        // ingest= dir behind — drop it so the generation listing
-        // reflects live data only
-        val gp = new org.apache.hadoop.fs.Path(s"$dir/ingest=$g")
-        if (fs.exists(gp) && fs.listStatus(gp).isEmpty)
-          fs.delete(gp, true)
+        // a generation whose every partition emptied leaves an
+        // ingest= dir with no data behind — drop it so the generation
+        // listing reflects live data only
+        dropIfDataless(fs, new org.apache.hadoop.fs.Path(s"$dir/ingest=$g"))
       }
     }
   }
@@ -684,11 +695,8 @@ object LayoutOps {
           "— partition-path resolution failed; rows NOT removed")
       renameAside(live, g, p)
     }
-    for (g <- (stagedPairs ++ affected).map(_._1).distinct) {
-      val gp = new org.apache.hadoop.fs.Path(s"$dir/ingest=$g")
-      if (fs.exists(gp) && fs.listStatus(gp).isEmpty)
-        fs.delete(gp, true)
-    }
+    for (g <- (stagedPairs ++ affected).map(_._1).distinct)
+      dropIfDataless(fs, new org.apache.hadoop.fs.Path(s"$dir/ingest=$g"))
     fs.delete(sp, true)
   }
 

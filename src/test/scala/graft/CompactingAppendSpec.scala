@@ -224,6 +224,30 @@ class CompactingAppendSpec extends SparkSpec {
     }
   }
 
+  test("a total takedown of a merged generation leaves a committed-" +
+      "empty pin on both artifacts") {
+    withTempDir("graft-merge-takedown") { root =>
+      val (ddir, vdir) = (s"$root/dedup", s"$root/vec")
+      DedupIndex.build(docs.filter(col("doc_id") < splitId), "text",
+        "doc_id", k, rpb, ddir)
+      VectorIndex.build(vecs.filter(col("vec_id") < splitId), dim, steps,
+        sub, subDim, pk, vdir, gateBits = Some(4))
+      // a due zero-row append rewrites the live set as generation 1
+      DedupIndex.append(spark, ddir, docs.where(lit(false)), "text",
+        "doc_id", compactEvery = 2)
+      VectorIndex.append(spark, vdir, vecs.where(lit(false)),
+        compactEvery = 2)
+      assert(pinOf(s"$ddir/buckets").generations === Seq(1L))
+      assert(pinOf(s"$vdir/corpus").generations === Seq(1L))
+      DedupIndex.delete(spark, ddir, docs.select("doc_id"))
+      VectorIndex.delete(spark, vdir, vecs.select("vec_id"))
+      assert(pinOf(s"$ddir/buckets").generations.isEmpty)
+      assert(pinOf(s"$vdir/corpus").generations.isEmpty)
+      assert(gens(s"$ddir/buckets").isEmpty && gens(s"$vdir/corpus").isEmpty)
+      assert(bucketRows(ddir).isEmpty && corpusRows(vdir).isEmpty)
+    }
+  }
+
   test("a merging append onto a legacy unstamped store loads, passes " +
       "the geometry check and stores the two-step shape") {
     def legacy(dir: String): Unit = {

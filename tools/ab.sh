@@ -1,24 +1,29 @@
 #!/usr/bin/env bash
-# Interleaved worktree A/B — the bench-regression triage ritual as a
+# Interleaved A/B — the bench-regression triage ritual as a
 # tool. Three rounds in a row (r15 s8, r16 st11, the r16 verdict's
 # st8/st17) burned hours hand-deriving "ambient scheduling band, not
 # code": identical code swung 3-4x across invocations minutes apart on
 # this box. This script settles any claimed regression mechanically:
-# check out the reference ref in a worktree, run the SAME query list
+# export the reference ref, run the SAME query list
 # through graft.Bench in A,B,A,B interleaved legs (so both sides
 # sample the same ambient), and print the per-leg table. If the A and
 # B bands overlap, the delta is environment; only a separation that
 # survives every interleaved leg is a code signal.
 #
+# The A side is exported with `git archive` into a fresh directory
+# under $TMPDIR (default /tmp), removed on exit with the leg results.
+#
 # Usage: tools/ab.sh <ref> <query[,query,...]> [pairs] [sfdir]
 #   ref      git ref for the A side (B side is the current worktree)
-#   queries  comma-separated SPARK_GRAFT_ONLY list
+#   queries  comma-separated SPARK_GRAFT_ONLY list of full query names
+#            (st8_stream_join, not st8); a leg that ran no query stops
+#            the script
 #   pairs    number of A,B leg pairs (default 2)
 #   sfdir    data dir (default $SPARK_GRAFT_SF_DIR or testdata/sf0.1)
 #
 # Each leg is an ISOLATED JVM (own sbt runMain) with best-of-2 inside
 # graft.Bench, exactly like the driver's sweep. Expect ~1 min of sbt
-# compile on the A worktree the first time.
+# compile of the A copy.
 set -euo pipefail
 
 REF="${1:?usage: tools/ab.sh <ref> <queries> [pairs] [sfdir]}"
@@ -28,15 +33,9 @@ SFDIR="${4:-${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}}"
 
 ROOT="$(git rev-parse --show-toplevel)"
 SHORT="$(git rev-parse --short "$REF")"
-WT="/tmp/graft-ab-$SHORT"
-
-cleanup() {
-  git -C "$ROOT" worktree remove --force "$WT" 2>/dev/null || true
-}
-if [ ! -d "$WT" ]; then
-  trap cleanup EXIT
-  git -C "$ROOT" worktree add --detach "$WT" "$REF" >/dev/null
-fi
+WT="$(mktemp -d "${TMPDIR:-/tmp}/graft-ab-$SHORT.XXXXXX")"
+trap 'rm -rf "$WT"' EXIT
+git -C "$ROOT" archive "$REF" | tar -x -C "$WT"
 
 run_leg() { # $1 = dir, $2 = label, $3 = outfile
   ( cd "$1" && SPARK_GRAFT_SF_DIR="$SFDIR" SPARK_GRAFT_ONLY="$QUERIES" \
@@ -44,6 +43,10 @@ run_leg() { # $1 = dir, $2 = label, $3 = outfile
     | grep '"metric"' | tail -1 | sed 's/^.*{"metric"/{"metric"/' ) \
     > "$3" || true
   echo "  [$2] $(cat "$3")"
+  if grep -q '"n_queries":0,' "$3"; then
+    echo "ab.sh: no query matched $QUERIES" >&2
+    exit 1
+  fi
 }
 
 # pre-compile both sides OUTSIDE the timed legs
@@ -51,7 +54,8 @@ echo "compiling A=$SHORT and B=HEAD ..."
 ( cd "$WT" && sbt -batch compile >/dev/null 2>&1 )
 ( cd "$ROOT" && sbt -batch compile >/dev/null 2>&1 )
 
-TMP="$(mktemp -d)"
+TMP="$WT/legs"
+mkdir -p "$TMP"
 for i in $(seq 1 "$PAIRS"); do
   echo "leg pair $i/$PAIRS (A=$SHORT, B=HEAD, interleaved):"
   run_leg "$WT"   "A$i" "$TMP/a$i.json"
