@@ -1,7 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.InterpretedOrdering
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructType, TimestampType}
 
 import graft.io.CsvHeaderSink
 import graft.operators.PivotOps
@@ -14,13 +21,11 @@ import graft.operators.PivotOps
   *
   * Two write paths:
   *  - [[publishChunks]] — faithful: one single-file CSV (with `#`
-  *    metadata header) per chunk key. Chunk keys are enumerated from a
-  *    small distinct() (the catalog is dim-sized). A published series
-  *    file is small by construction and written by one task, so each
-  *    chunk is shuffled to ONE partition before its pivot and sorted
-  *    within it: one exchange and one write per chunk, no
-  *    range-sampling job. Chunks are independent, so a driver thread
-  *    pool runs them concurrently.
+  *    metadata header) per chunk key, all chunks rendered by ONE query.
+  *    Each chunk lies inside one hash partition of the chunk keys, so
+  *    the driver streams the result partition by partition and writes
+  *    each file as its rows pass; the published bytes cross the driver
+  *    once.
   *  - [[publishPartitioned]] — scale: one `partitionBy(chunk keys)`
   *    parquet/csv write, all chunks in a single distributed job. This is
   *    the 100 TB path; the faithful path exists for byte-format parity.
@@ -61,8 +66,8 @@ object Publish {
     * ('%' then '_' then '/') BEFORE joining with '_', so values
     * containing the separator (the reference's site codes do, e.g.
     * "LR_Mendon") cannot alias another chunk's path. Without this, two
-    * distinct chunk keys could map to one file — which under the
-    * parallel writer would be a concurrent-write race on the same CSV.
+    * distinct chunk keys could map to one file, and the later chunk
+    * would overwrite or append to the earlier one's CSV.
     * '/' must be escaped for a different reason: un-escaped it nests
     * the file OUTSIDE the flat output layout (and "../x" would escape
     * outDir entirely), while the uploader keys remote files by
@@ -74,82 +79,96 @@ object Publish {
         .replace("/", "%2F"))
       .mkString("_") + ".csv"
 
-  /** One chunk's wide frame: filter → one partition → pivot → sentinel
-    * fill → sort within that partition. The single partition satisfies
-    * the pivot's grouping without a second exchange, and sorting it is a
-    * total order, so the sink's `coalesce(1)` writes it as is.
+  /** Faithful per-chunk publication with incremental resume. Returns
+    * (chunkValue, path, appended) for every chunk of `fact`, in Spark's
+    * ascending order of the chunk-key values.
+    *
+    * One query per call: the fact is hash-partitioned by the chunk
+    * keys, pivoted on (chunk keys, index) — a grouping that partitioning
+    * already satisfies, so no second exchange — sentinel-filled, sorted
+    * within each partition by (chunk keys, index), and each row rendered
+    * to its CSV line in the executors. `toLocalIterator` streams the
+    * result one partition at a time; every chunk lies inside one
+    * partition, contiguous and in index order, so the driver writes each
+    * chunk file as its rows pass: [[CsvHeaderSink.tailProbe]], then the
+    * rows strictly newer than the tail appended (none: the file is left
+    * as it is), or, without a tail, the header, the column-header line
+    * and every row. Each published byte crosses the driver once.
+    *
+    * NULL chunk keys are refused in the shuffle's map stage, which has
+    * read every input row before the first result partition reaches the
+    * driver, so no file is written. A chunk that fails (its header, its
+    * file) does not stop the others: every chunk settles, then the first
+    * failure in chunk order is rethrown.
     */
-  def wideChunk(fact: DataFrame, spec: ChunkSpec,
-      chunkValue: Seq[Any]): DataFrame = {
-    val filtered = spec.chunkKeys.zip(chunkValue).foldLeft(fact) {
-      case (df, (k, v)) => df.filter(col(k) === lit(v))
-    }.repartition(1)
+  def publishChunks(spark: SparkSession, fact: DataFrame, spec: ChunkSpec,
+      outDir: String, headerFor: Seq[Any] => Seq[String])
+      : Seq[(Seq[Any], String, Boolean)] = {
+    val n = spec.chunkKeys.size
+    val keys = spec.chunkKeys.map(col)
+    val nullKeys = s"publishChunks: NULL in chunk key(s) " +
+      s"${spec.chunkKeys.mkString(",")}; filter or fill them first"
+    val guarded = spec.chunkKeys.foldLeft(fact) { (df, k) =>
+      df.withColumn(k, coalesce(col(k), raise_error(lit(nullKeys))))
+    }
     // duplicate cells average as exact integer cents (centsOf →
     // centsMean): deterministic under any partition order, where the
     // old round(avg(double), 2) default was the playbook's
     // engine-round trap
-    val wide = PivotOps.pivotWide(filtered, Seq(col(spec.indexCol)),
-      col(spec.pivotKey), spec.domain, col(spec.valueCol),
-      v => PivotOps.centsMean(PivotOps.centsOf(v)))
-    PivotOps.fillSentinels(wide, spec.sentinels)
-      .sortWithinPartitions(col(spec.indexCol))
-  }
+    val wide = PivotOps.fillSentinels(
+      PivotOps.pivotWide(guarded.repartition(keys: _*),
+        keys :+ col(spec.indexCol), col(spec.pivotKey), spec.domain,
+        col(spec.valueCol), v => PivotOps.centsMean(PivotOps.centsOf(v))),
+      spec.sentinels)
+      .sortWithinPartitions(keys :+ col(spec.indexCol): _*)
+    val data = StructType(wide.schema.fields.drop(n))
+    val lines = wide.select(keys ++ Seq(
+      unix_micros(col(spec.indexCol).cast(TimestampType)),
+      CsvHeaderSink.csvLine(data.fields.toSeq)): _*)
+    val keySchema = StructType(wide.schema.fields.take(n))
+    val toKey = CatalystTypeConverters.createToCatalystConverter(keySchema)
+    val order = InterpretedOrdering.forSchema(keySchema.map(_.dataType))
+    def keyOf(r: Row) =
+      toKey(Row.fromSeq(r.toSeq.take(n))).asInstanceOf[InternalRow]
+    val columnLine = CsvHeaderSink.columnHeader(data)
 
-  /** Faithful per-chunk publication with incremental resume. Returns the
-    * list of (chunkValue, path, appended) actually written, in chunk
-    * order.
-    *
-    * Chunks are independent Spark jobs, so they run on a bounded driver
-    * thread pool (`parallelism`, default 4): the scheduler interleaves
-    * their stages across executor cores instead of serializing job
-    * barriers — on a cluster this is the difference between one chunk's
-    * tail latency and the sum of all of them. Spark job submission is
-    * thread-safe; results are re-ordered to chunk order so output is
-    * deterministic regardless of completion order. Every chunk has
-    * settled before the call returns: a failure is rethrown (the first
-    * in chunk order) only after the sibling writes have finished, so no
-    * write outlives the call or the caller's cleanup.
-    */
-  def publishChunks(spark: SparkSession, fact: DataFrame, spec: ChunkSpec,
-      outDir: String, headerFor: Seq[Any] => Seq[String],
-      parallelism: Int = 4): Seq[(Seq[Any], String, Boolean)] = {
-    val chunkVals = fact
-      .select(spec.chunkKeys.map(col): _*).distinct()
-      .coalesce(1).sortWithinPartitions(spec.chunkKeys.map(col): _*)
-      .collect().map(_.toSeq).toSeq
-    // fail loudly on NULL chunk keys: the filename composition would
-    // NPE inside a Future, and wideChunk's `===` filter can never
-    // match a null anyway — rows with null keys are unpublishable
-    // under this layout, which the caller must resolve, not discover
-    // as a concurrency stack trace
-    val nullChunks = chunkVals.filter(_.exists(_ == null))
-    require(nullChunks.isEmpty,
-      s"publishChunks: NULL in chunk key(s) ${spec.chunkKeys.mkString(",")} " +
-        s"for ${nullChunks.size} chunk value(s); filter or fill them first")
-    import java.util.concurrent.Executors
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = Executors.newFixedThreadPool(
-      math.max(1, math.min(parallelism, chunkVals.size)))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val futures = chunkVals.map { cv =>
-        Future {
-          val path = s"$outDir/${chunkFileName(cv)}"
-          val wide = wideChunk(fact, spec, cv)
-          CsvHeaderSink.tailProbe(spark, path, spec.indexCol) match {
-            case Some(lastTs) =>
-              val fresh = wide.filter(col(spec.indexCol) > lit(lastTs))
-              CsvHeaderSink.append(fresh, path)
-              (cv, path, true)
-            case None =>
-              CsvHeaderSink.write(wide, headerFor(cv), path)
-              (cv, path, false)
-          }
-        }
+    def publishOne(cv: Seq[Any], rows: Iterator[Row]) = {
+      val path = s"$outDir/${chunkFileName(cv)}"
+      CsvHeaderSink.tailProbe(spark, path, spec.indexCol) match {
+        case Some(tail) =>
+          val after = DateTimeUtils.fromJavaTimestamp(tail)
+          val fresh = rows.filter(r => !r.isNullAt(n) && r.getLong(n) > after)
+          if (fresh.hasNext) CsvHeaderSink.writeLines(path, "",
+            fresh.map(_.getString(n + 1)), append = true)
+          (cv, path, true)
+        case None =>
+          CsvHeaderSink.writeLines(path,
+            headerFor(cv).map(l => s"# $l\n").mkString + columnLine,
+            rows.map(_.getString(n + 1)))
+          (cv, path, false)
       }
-      futures.map(Await.ready(_, Duration.Inf).value.get).map(_.get)
-    } finally pool.shutdown()
+    }
+
+    val settled = Seq.newBuilder[(InternalRow, Try[(Seq[Any], String, Boolean)])]
+    try {
+      val it = lines.toLocalIterator().asScala.buffered
+      while (it.hasNext) {
+        val key = keyOf(it.head)
+        val rows = new Iterator[Row] {
+          def hasNext = it.hasNext && order.equiv(keyOf(it.head), key)
+          def next() = it.next()
+        }
+        val cv = it.head.toSeq.take(n)
+        settled += key -> Try(publishOne(cv, rows))
+        rows.foreach(_ => ()) // a failed chunk's remaining rows
+      }
+    } catch {
+      case e: Exception if Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).exists(t =>
+            Option(t.getMessage).exists(_.contains(nullKeys))) =>
+        throw new IllegalArgumentException(nullKeys, e)
+    }
+    settled.result().sortWith((a, b) => order.lt(a._1, b._1)).map(_._2.get)
   }
 
   /** §3.1 end-to-end including the upload leg: publish all chunks, then
@@ -162,10 +181,9 @@ object Publish {
   def publishAndUpload(spark: SparkSession, fact: DataFrame,
       spec: ChunkSpec, outDir: String,
       headerFor: Seq[Any] => Seq[String],
-      uploader: graft.io.ResourceUploader, resourceId: String,
-      parallelism: Int = 4): Seq[(Seq[Any], String, Boolean)] = {
-    val written =
-      publishChunks(spark, fact, spec, outDir, headerFor, parallelism)
+      uploader: graft.io.ResourceUploader, resourceId: String)
+      : Seq[(Seq[Any], String, Boolean)] = {
+    val written = publishChunks(spark, fact, spec, outDir, headerFor)
     uploader.uploadFiles(resourceId, written.map(_._2))
     uploader.setPublic(resourceId)
     written

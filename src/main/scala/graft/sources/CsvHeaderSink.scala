@@ -1,14 +1,15 @@
 package graft.io
 
-import java.io.{BufferedOutputStream, FileOutputStream}
+import java.io.{BufferedOutputStream, CharArrayWriter}
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import com.univocity.parsers.csv.CsvParser
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType, TimestampNTZType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import scala.jdk.CollectionConverters._
@@ -21,22 +22,23 @@ import scala.jdk.CollectionConverters._
   * last written timestamp (parseCSVData/getLastLine,
   * DatasetUtilities.py:537-565).
   *
-  * Scale design: ONE output file is inherently serial, so a single call
-  * writes through `coalesce(1)` — correct for the reference's per-series
-  * files, which are individually small. Parallelism lives ACROSS files:
-  * the publish pipeline launches one independent Spark job per chunk
-  * (see [[graft.pipeline.Publish]]), and the partitioned bulk path uses
+  * Scale design: the executors render every data row to its CSV line
+  * ([[csvLine]], Spark's own CSV generator) and the driver streams the
+  * lines into the file through [[writeLines]], one result partition at
+  * a time, so each published byte crosses the driver once and no Spark
+  * write, temp directory or commit protocol runs per file. The publish
+  * pipeline renders all chunks in one query (see
+  * [[graft.pipeline.Publish]]), and the partitioned bulk path uses
   * `partitionBy` so a 1000-executor cluster writes all series at once.
   */
 object CsvHeaderSink {
 
-  /** K1 — write `df` as a single CSV file at `out`, preceded by
-    * `headerLines` each prefixed `# `. Ordering inside the file is the
-    * caller's: `coalesce(1)` preserves the order of a globally sorted
-    * parent or of a single partition sorted within itself.
-    * The file is staged next to the target and moved in atomically, so
-    * a failure mid-write never leaves a truncated deliverable; staging
-    * and the Spark temp dir are released on every path.
+  /** K1 — write `df` as one CSV file at `out`, preceded by
+    * `headerLines` each prefixed `# `. Rows are written in the order
+    * `toLocalIterator` returns them: that of a globally sorted parent or
+    * of partitions each sorted within itself. The file is staged next to
+    * the target and moved in atomically, so a failure mid-write never
+    * leaves a truncated deliverable.
     */
   def write(df: DataFrame, headerLines: Seq[String], out: String): Unit =
     writeComposed(df, headerLines.map(l => s"# $l\n").mkString, out)
@@ -47,107 +49,106 @@ object CsvHeaderSink {
     * comma-value lines, trailing spaces) that per-line `# ` prefixing
     * would double or lose.
     */
-  /** Render every timestamp column the way the reference's pandas
-    * `to_csv` (str(Timestamp)) does: space-separated naive local
-    * datetime, fraction printed only when nonzero and then as six
-    * digits. This is also the RESUME correctness fix: Spark's default
-    * CSV timestampFormat truncates to milliseconds, so a published
-    * sub-millisecond tail read back by [[tailProbe]] compared low and
-    * the strictly-newer filter re-published the same row on every
-    * resume.
-    */
-  private def pandasTs(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
-    df.schema.fields.foldLeft(df) { (d, f) =>
-      f.dataType match {
-        case TimestampType | TimestampNTZType =>
-          val c = col(f.name)
-          d.withColumn(f.name,
-            when(unix_micros(c.cast(TimestampType)) % 1000000L === 0L,
-              date_format(c, "yyyy-MM-dd HH:mm:ss"))
-            .otherwise(date_format(c, "yyyy-MM-dd HH:mm:ss.SSSSSS")))
-        case _ => d
-      }
-    }
-  }
-
-  /** The format cannot represent a data row whose FIRST field starts
-    * with '#': every read path classifies such lines as metadata (the
-    * reference format reserves leading `#`, and its comma-value form
-    * is whole-line quoted, so `"#` is reserved too) and would
-    * silently drop the row from read() and tailProbe(). Real
-    * deliverables lead with a timestamp column, where this guard is a
-    * type check and costs nothing; a string-led frame pays one
-    * column-pruned emptiness check for the loud error.
-    */
-  private def requireNoHashLeadingData(df: DataFrame): Unit =
-    df.schema.headOption
-      .filter(_.dataType == org.apache.spark.sql.types.StringType)
-      .foreach { f =>
-        require(df.filter(col(f.name).startsWith("#")).isEmpty,
-          s"CsvHeaderSink: data rows whose first column `${f.name}` " +
-            "starts with '#' cannot round-trip the header format " +
-            "(reads drop them as metadata lines); clean them first")
-      }
-
   def writeComposed(df: DataFrame, headerText: String,
-      out: String): Unit = {
-    requireNoHashLeadingData(df)
-    val tmp = Files.createTempDirectory("csvsink")
-    try {
-      pandasTs(df).coalesce(1).write.mode("overwrite")
-        .option("header", "true").csv(tmp.toString)
-      val part = firstPart(tmp.toString)
-      val target = Paths.get(out)
-      if (target.getParent != null) Files.createDirectories(target.getParent)
-      val staged = stagedSibling(target)
-      try {
-        val os = new BufferedOutputStream(
-          new FileOutputStream(staged.toFile))
-        try {
-          os.write(headerText.getBytes(StandardCharsets.UTF_8))
-          Files.copy(part, os)
-        } finally os.close()
-        moveInto(staged, target)
-      } finally Files.deleteIfExists(staged)
-    } finally deleteRecursively(tmp)
-  }
+      out: String): Unit =
+    writeLines(out, headerText + columnHeader(df.schema), rendered(df))
 
   /** K2 — append rows (no header lines, no column header) to an existing
     * CSV file (created if missing). The existing content plus the new
     * rows are staged as a sibling file and moved in atomically — an
     * exception mid-append leaves the target exactly as it was, never
-    * partially appended. Per-series deliverables are individually small
-    * (see the scale note above), so re-staging the file is O(file), not
-    * O(corpus); concurrent appends to ONE file are out of contract
-    * (single-writer per deliverable, as in the reference's
-    * AppendSeriesToFile).
+    * partially appended. Per-series deliverables are individually small,
+    * so re-staging the file is O(file), not O(corpus); concurrent
+    * appends to ONE file are out of contract (single-writer per
+    * deliverable, as in the reference's AppendSeriesToFile).
     */
-  def append(df: DataFrame, out: String): Unit = {
-    requireNoHashLeadingData(df)
-    val tmp = Files.createTempDirectory("csvappend")
+  def append(df: DataFrame, out: String): Unit =
+    // appending to a MISSING target CREATES the file — it must get
+    // the column-header line, or read()/tailProbe() would promote
+    // the first data row to column names (tailProbe then returns
+    // None and resume logic rewrites the file instead of appending)
+    if (Files.exists(Paths.get(out)))
+      writeLines(out, "", rendered(df), append = true)
+    else writeComposed(df, "", out)
+
+  /** One data row as its CSV line (no line separator), rendered by
+    * Spark's CSV generator with default options — the bytes Spark's CSV
+    * writer emits for the row. Timestamp columns are rendered the way
+    * the reference's pandas `to_csv` (str(Timestamp)) does:
+    * space-separated naive local datetime, fraction printed only when
+    * nonzero and then as six digits. That is also the RESUME
+    * correctness fix: Spark's default CSV timestampFormat truncates to
+    * milliseconds, so a published sub-millisecond tail read back by
+    * [[tailProbe]] compared low and the strictly-newer filter
+    * re-published the same row on every resume.
+    */
+  private[graft] def csvLine(fields: Seq[StructField]): Column =
+    to_csv(struct(fields.map { f =>
+      val c = col(s"`${f.name.replace("`", "``")}`")
+      f.dataType match {
+        case TimestampType | TimestampNTZType =>
+          when(unix_micros(c.cast(TimestampType)) % 1000000L === 0L,
+            date_format(c, "yyyy-MM-dd HH:mm:ss"))
+            .otherwise(date_format(c, "yyyy-MM-dd HH:mm:ss.SSSSSS"))
+        case _ => c
+      }
+    }: _*))
+
+  /** The column-header line (with its line separator) that Spark's CSV
+    * writer emits for `schema`, rendered on the driver by the same
+    * generator. */
+  private[graft] def columnHeader(schema: StructType): String = {
+    val w = new CharArrayWriter
+    val gen = new UnivocityGenerator(schema, w,
+      new CSVOptions(Map.empty[String, String], false, "UTC"))
+    gen.writeHeaders()
+    gen.flush()
+    w.toString
+  }
+
+  private def rendered(df: DataFrame): Iterator[String] =
+    df.select(csvLine(df.schema.fields.toSeq)).as(Encoders.STRING)
+      .toLocalIterator().asScala
+
+  /** The format cannot represent a data row whose FIRST field starts
+    * with '#': every read path classifies such lines as metadata (the
+    * reference format reserves leading `#`, and its comma-value form
+    * is whole-line quoted, so `"#` is reserved too) and would
+    * silently drop the row from read() and tailProbe(). A rendered line
+    * is such a line exactly when [[isCommentLine]] holds for it, so the
+    * check is one prefix test per line on the driver, before the staged
+    * file is moved in.
+    */
+  private def requireNoHashLeadingData(line: String): Unit =
+    require(!isCommentLine(line),
+      "CsvHeaderSink: data rows whose first field starts with '#' " +
+        "cannot round-trip the header format (reads drop them as " +
+        "metadata lines); clean them first")
+
+  /** Write `head` and then each of `lines` (rendered by [[csvLine]]) to
+    * `out`, after the target's current content when `append` is set.
+    * Staged as a sibling and moved in atomically: an exception, from the
+    * iterator too, leaves the target as it was, and the stage is
+    * released on every path.
+    */
+  private[graft] def writeLines(out: String, head: String,
+      lines: Iterator[String], append: Boolean = false): Unit = {
+    val target = Paths.get(out)
+    if (target.getParent != null) Files.createDirectories(target.getParent)
+    val staged = stagedSibling(target)
     try {
-      val target = Paths.get(out)
-      // appending to a MISSING target CREATES the file — it must get
-      // the column-header line, or read()/tailProbe() would promote
-      // the first data row to column names (tailProbe then returns
-      // None and resume logic rewrites the file instead of appending)
-      pandasTs(df).coalesce(1).write.mode("overwrite")
-        .option("header", (!Files.exists(target)).toString)
-        .csv(tmp.toString)
-      val part = firstPart(tmp.toString)
-      if (target.getParent != null) Files.createDirectories(target.getParent)
-      val staged = stagedSibling(target)
+      val os = new BufferedOutputStream(Files.newOutputStream(staged))
       try {
-        val os = Files.newOutputStream(staged,
-          StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-        try {
-          if (Files.exists(target)) Files.copy(target, os)
-          Files.copy(part, os)
-        } finally os.close()
-        moveInto(staged, target)
-      } finally Files.deleteIfExists(staged)
-    } finally deleteRecursively(tmp)
+        if (append && Files.exists(target)) Files.copy(target, os)
+        os.write(head.getBytes(StandardCharsets.UTF_8))
+        lines.foreach { l =>
+          requireNoHashLeadingData(l)
+          os.write(l.getBytes(StandardCharsets.UTF_8))
+          os.write('\n')
+        }
+      } finally os.close()
+      moveInto(staged, target)
+    } finally Files.deleteIfExists(staged)
   }
 
   /** Read a published `#`-header CSV (or a glob/directory of them) back
@@ -271,31 +272,4 @@ object CsvHeaderSink {
       case _: java.nio.file.AtomicMoveNotSupportedException =>
         Files.move(staged, target, StandardCopyOption.REPLACE_EXISTING)
     }
-
-  // Files.list returns a Stream backed by an open directory fd — close
-  // it or leak one per call (publishChunks runs one write per chunk per
-  // micro-batch under StreamingPublish; thousands of leaked fds →
-  // EMFILE on a long-lived driver). Same discipline as Uploader.
-
-  private def firstPart(dir: String): Path = {
-    val s = Files.list(Paths.get(dir))
-    try s.iterator().asScala
-      .filter(_.getFileName.toString.startsWith("part-"))
-      .toSeq.sortBy(_.getFileName.toString).headOption
-      .getOrElse(throw new IllegalStateException(s"no part file in $dir"))
-    finally s.close()
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) {
-      // materialize before recursing — don't delete under an open
-      // directory stream
-      val children = {
-        val s = Files.list(p)
-        try s.iterator().asScala.toList finally s.close()
-      }
-      children.foreach(deleteRecursively)
-    }
-    Files.deleteIfExists(p)
-  }
 }

@@ -24,6 +24,10 @@ import graft.pipeline.Publish
   * publish a partial cell average that append can never amend — CSV
   * appends can't rewrite rows). Ingest that can't guarantee this
   * should land in a staging table and publish via the batch path.
+  *
+  * Each micro-batch is one `publishChunks` query: the batch is read
+  * once, with no cache, each chunk's rows stay inside one partition,
+  * and the published bytes cross the driver once.
   */
 object StreamingPublish {
 
@@ -32,18 +36,9 @@ object StreamingPublish {
       headerFor: Seq[Any] => Seq[String], checkpoint: String): Unit = {
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // persist: publishChunks reads the batch once to enumerate its
-        // chunks and once per chunk, so the cache (filled by the
-        // enumeration) keeps the source files to one scan per trigger.
-        // An empty batch enumerates zero chunks. publishChunks returns
-        // only after every chunk write has settled, so the unpersist
-        // never races one.
-        batch.persist()
-        try {
-          Publish.publishChunks(batch.sparkSession, batch, spec, outDir,
-            headerFor)
-          ()
-        } finally batch.unpersist()
+        Publish.publishChunks(batch.sparkSession, batch, spec, outDir,
+          headerFor)
+        ()
       }
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())

@@ -18,7 +18,9 @@ import graft.streaming.StreamingPublish
   * exactly. The scenario covers a resumed reference-format file whose
   * header holds the quoted comma-value line, a sub-millisecond tail
   * re-delivered by a stream, a chunk created by a stream, and string
-  * chunk keys containing `_` and `/` (percent-escaped file names).
+  * chunk keys containing `_` and `/` (percent-escaped file names). It
+  * runs at 1, 4 and 8 shuffle partitions: the bytes must not depend on
+  * how the chunks share partitions.
   *
   * The golden text lists every output file in name order as
   * `### <name> <bytes>` followed by the file's content. To regenerate
@@ -96,8 +98,10 @@ class PublishGoldenSpec extends SparkSpec {
     // header carries the whole-line-quoted comma-value form
     val legacy = Seq[Any]("Logan", 0)
     CsvHeaderSink.writeComposed(
-      Publish.wideChunk(base.filter(col("t") <= "2024-01-01 00:15:00"),
-        spec, legacy),
+      Seq(("2024-01-01 00:00:00", 4.0, -9999.0, -1.0),
+        ("2024-01-01 00:15:00", 4.5, -9999.0, -1.0))
+        .toDF("t", "temp", "ph", "do")
+        .withColumn("t", col("t").cast("timestamp")),
       FileHeader.line("SiteCode", "Logan") +
         FileHeader.line("SiteName", "Logan, UT"),
       s"$out/${Publish.chunkFileName(legacy)}")
@@ -119,16 +123,22 @@ class PublishGoldenSpec extends SparkSpec {
   }
 
   test("publication bytes match the pinned golden: full publication, " +
-      "a resumed quoted-header file, two streamed increments") {
-    withTempDir("graft-golden") { work =>
-      val rendered = publishScenario(work)
-      sys.env.get("GRAFT_GOLDEN_OUT").foreach(f =>
-        Files.write(Paths.get(f), rendered.getBytes(StandardCharsets.UTF_8)))
-      val in = getClass.getResourceAsStream("/publish_golden.txt")
-      assert(in != null, "missing resource publish_golden.txt")
-      val golden = try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-        finally in.close()
-      assert(rendered === golden)
-    }
+      "a resumed quoted-header file, two streamed increments, " +
+      "at 1, 4 and 8 shuffle partitions") {
+    val in = getClass.getResourceAsStream("/publish_golden.txt")
+    assert(in != null, "missing resource publish_golden.txt")
+    val golden = try new String(in.readAllBytes(), StandardCharsets.UTF_8)
+      finally in.close()
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    try Seq(1, 4, 8).foreach { p =>
+      spark.conf.set(key, p.toString)
+      withTempDir("graft-golden") { work =>
+        val rendered = publishScenario(work)
+        if (p == 1) sys.env.get("GRAFT_GOLDEN_OUT").foreach(f => Files.write(
+          Paths.get(f), rendered.getBytes(StandardCharsets.UTF_8)))
+        assert(rendered === golden, s"at $p shuffle partitions")
+      }
+    } finally spark.conf.set(key, before)
   }
 }

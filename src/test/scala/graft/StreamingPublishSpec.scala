@@ -1,7 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.operators.EditOps
 import graft.pipeline.Publish
@@ -37,6 +40,47 @@ class StreamingPublishSpec extends SparkSpec {
     val sizeBefore = (Files.size(f0), Files.size(f1))
     StreamingPublish.run(stream, spec, outDir, cv => Seq("unused"), ckpt)
     assert((Files.size(f0), Files.size(f1)) === sizeBefore)
+  }
+
+  test("an AvailableNow run reads its batch once: no persisted RDD, " +
+      "at most 3 jobs for a 2-chunk batch") {
+    withTempDir("spub-jobs") { work =>
+      val src = s"$work/src"
+      Seq((0L, "2024-01-01 00:00:00", "click", 100L),
+        (0L, "2024-01-01 00:15:00", "view", 250L),
+        (1L, "2024-01-01 00:00:00", "click", 300L),
+        (1L, "2024-01-01 00:30:00", "error", 50L))
+        .toDF("ubucket", "ts", "event_type", "cents")
+        .withColumn("ts", col("ts").cast("timestamp"))
+        .coalesce(1).write.parquet(src)
+      val spec = Publish.ChunkSpec(Seq("ubucket"), "ts", "event_type",
+        "cents", Seq("click", "error", "view"), -9999.0)
+      val sc = spark.sparkContext
+      val jobs = new AtomicInteger
+      val cached = new AtomicBoolean
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties)
+              .exists(_.getProperty("sql.streaming.queryId") != null)) {
+            jobs.incrementAndGet()
+            if (e.stageInfos.exists(_.rddInfos.exists(_.storageLevel.isValid)))
+              cached.set(true)
+          }
+      }
+      val persistedBefore = sc.getPersistentRDDs.keySet
+      sc.addSparkListener(l)
+      try {
+        StreamingPublish.run(spark.readStream.schema(
+            spark.read.parquet(src).schema).parquet(src),
+          spec, s"$work/out", cv => Seq(s"Bucket: ${cv.mkString}"),
+          s"$work/ckpt")
+        TestBus.drain(sc)
+      } finally sc.removeSparkListener(l)
+      assert(Files.readAllLines(Paths.get(s"$work/out/1.csv")).size === 4)
+      assert(!cached.get, "a job of the run read a persisted RDD")
+      assert(sc.getPersistentRDDs.keySet === persistedBefore)
+      assert(jobs.get <= 3, s"${jobs.get} jobs for a 2-chunk batch")
+    }
   }
 
   test("per-run drift correction corrects each run from its own start") {
