@@ -24,14 +24,16 @@ import org.apache.spark.sql.SparkSession
   *    [[streaming.StreamingOps.streamSession]] makes a child, so each
   *    scheduled publisher run compiled byte-identical classes again
   *    (35 per `odm_publish` incremental run, 0.44–0.56 s of compile;
-  *    3–9 with one loader). The engine adds no session artifacts (no
+  *    0 with one loader). The engine adds no session artifacts (no
   *    `addArtifact`/`addJar`), so one shared loader loses nothing.
-  *  - `spark.sql.codegen.cache.maxEntries = 1000` — the default 100 is
+  *  - `spark.sql.codegen.cache.maxEntries = 2000` — the default 100 is
   *    below the working set (131 unique classes in one `qc_edit`
   *    benchmark run, 168 in `corpus_ingest`), so every cycle compiled
   *    evicted classes again (133 compiles in a `corpus_ingest` cycle,
-  *    26 at 1000). A static conf: it takes effect only when set before
-  *    the JVM's first codegen.
+  *    26 at 1000). One `graft.Bench` run at sf0.01 compiles about 1060
+  *    unique sources, past 1000: 156 compiles repeated a source on the
+  *    same side (driver or task) at 1000, none at 2000. A static conf:
+  *    it takes effect only when set before the JVM's first codegen.
   */
 object Sessions {
   def builder(appName: String, cpus: String): SparkSession.Builder =
@@ -64,7 +66,7 @@ object Sessions {
       // (DedupIndex.PushMaxValues).
       .config("spark.sql.parquet.pushdown.inFilterThreshold", "1024")
       .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
 
   def local(appName: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")

@@ -112,9 +112,7 @@ object Publish {
       df.withColumn(k, coalesce(col(k), raise_error(lit(nullKeys))))
     }
     // duplicate cells average as exact integer cents (centsOf →
-    // centsMean): deterministic under any partition order, where the
-    // old round(avg(double), 2) default was the playbook's
-    // engine-round trap
+    // centsMean): deterministic under any partition order
     val wide = PivotOps.fillSentinels(
       PivotOps.pivotWide(guarded.repartition(keys: _*),
         keys :+ col(spec.indexCol), col(spec.pivotKey), spec.domain,
@@ -149,7 +147,8 @@ object Publish {
       }
     }
 
-    val settled = Seq.newBuilder[(InternalRow, Try[(Seq[Any], String, Boolean)])]
+    val settled =
+      Seq.newBuilder[(InternalRow, Try[(Seq[Any], String, Boolean)])]
     try {
       val it = lines.toLocalIterator().asScala.buffered
       while (it.hasNext) {

@@ -393,10 +393,12 @@ class IoPublishSpec extends SparkSpec {
       .withColumn("v", lit(1.0))
     val badSpec = Publish.ChunkSpec(Seq("sid"), "t", "pv", "v",
       Seq("x", "y"), -9999.0)
+    val dir = tmpDir()
     val e = intercept[IllegalArgumentException] {
-      Publish.publishChunks(spark, bad, badSpec, tmpDir(),
-        _ => Seq("h"))
+      Publish.publishChunks(spark, bad, badSpec, dir, _ => Seq("h"))
     }
     assert(e.getMessage.contains("NULL in chunk key"))
+    val s = Files.list(Paths.get(dir))
+    try assert(s.count() === 0L) finally s.close()
   }
 }
