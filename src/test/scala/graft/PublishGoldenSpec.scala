@@ -123,8 +123,7 @@ class PublishGoldenSpec extends SparkSpec {
   }
 
   test("publication bytes match the pinned golden: full publication, " +
-      "a resumed quoted-header file, two streamed increments, " +
-      "at 1, 4 and 8 shuffle partitions") {
+      "a resumed quoted-header file, two streamed increments") {
     val in = getClass.getResourceAsStream("/publish_golden.txt")
     assert(in != null, "missing resource publish_golden.txt")
     val golden = try new String(in.readAllBytes(), StandardCharsets.UTF_8)
