@@ -1640,21 +1640,21 @@ object ScaleProbe {
         (pmod(hash(col("id") + 7), lit(1000000))).as("k2"),
         col("id").as("payload"))
       time("zorder write (20M, 2 cols)", n) {
-        graft.operators.LayoutOps.zorderWrite(zdf, Seq("k1", "k2"),
-          32, s"$zRoot/z")
+        graft.operators.ArtifactManifest.clusterBuild(zdf, s"$zRoot/z",
+          Seq("k1", "k2"), 32, zorder = true)
       }
       time("flat write (20M)", n) {
         zdf.repartition(32).write.mode("overwrite")
           .parquet(s"$zRoot/flat")
       }
-      def slice(dir: String) = spark.read.parquet(dir)
-        .filter(col("k2") >= 10000 && col("k2") < 40000)
+      def slice(df: org.apache.spark.sql.DataFrame) =
+        df.filter(col("k2") >= 10000 && col("k2") < 40000)
       time("k2-slice scan, zordered (3% of domain)", n) {
-        slice(s"$zRoot/z").write.format("noop")
-          .mode("overwrite").save()
+        slice(graft.operators.ArtifactManifest.frame(spark, s"$zRoot/z"))
+          .write.format("noop").mode("overwrite").save()
       }
       time("k2-slice scan, flat", n) {
-        slice(s"$zRoot/flat").write.format("noop")
+        slice(spark.read.parquet(s"$zRoot/flat")).write.format("noop")
           .mode("overwrite").save()
       }
       val zp = new org.apache.hadoop.fs.Path(zRoot)

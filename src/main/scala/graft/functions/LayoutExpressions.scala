@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
   * (upper-bound binary search), i.e. a value below the first cut is
   * bucket 0 and one above the last cut is bucket |cuts|.
   *
-  * Exists for [[graft.operators.LayoutOps.zorderWrite]]'s per-column
+  * Exists for [[graft.operators.LayoutOps.zorderFrame]]'s per-column
   * quantile bucketization. The composable alternative
   * `size(filter(cuts, c -> c <= v))` is a higher-order function —
   * interpreted lambda evaluation per ELEMENT, outside whole-stage

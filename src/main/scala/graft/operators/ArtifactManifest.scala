@@ -112,7 +112,7 @@ object ArtifactManifest {
     }
 
   /** Raw listing text per generation — one metadata walk, shared by
-    * [[fullSignature]] (digest of the join) and the per-generation
+    * [[fullSignatureOf]] (digest of the join) and the per-generation
     * digest map (digest of each) so no caller lists a subtree twice.
     */
   private def rawListings(s: SparkSession, dir: String,
@@ -140,14 +140,10 @@ object ArtifactManifest {
   private def digestsOf(raw: Map[Long, String]): Map[Long, String] =
     raw.map { case (g, l) => g -> contentDigestOfListing(l) }
 
+  /** Full content signature over a generation set. */
   private def fullSignatureOf(raw: Map[Long, String],
       gens: Seq[Long]): String =
     md5(gens.sorted.map(raw).mkString("\n\n"))
-
-  /** Full content signature over a generation set. */
-  private def fullSignature(s: SparkSession, dir: String,
-      gens: Seq[Long]): String =
-    fullSignatureOf(rawListings(s, dir, gens), gens)
 
   /** Highest committed manifest, if the artifact has any. */
   def latest(s: SparkSession, dir: String): Option[Pin] = {
@@ -464,7 +460,7 @@ object ArtifactManifest {
     * previous one incrementally (hash-chained with the new
     * generation's listing), so a per-batch streaming append pays one
     * small-directory listing, not a full artifact walk. Chained
-    * signatures are a DISTINCT namespace from [[fullSignature]]'s
+    * signatures are a DISTINCT namespace from [[fullSignatureOf]]'s
     * (same live set, different digest) — both serve change detection
     * (compare like with like), neither is a content address.
     *
@@ -630,10 +626,9 @@ object ArtifactManifest {
     }
 
   /** Generation compaction under the manifest: collapse the LIVE
-    * generation set into one NEW generation and flip the manifest —
-    * the reader-safe successor of [[LayoutOps.compactGenerations]]'s
-    * stage-and-swap (which renames the directory readers are inside).
-    * Steps:
+    * generation set into one NEW generation and flip the manifest. No
+    * directory a reader is inside is renamed or rewritten, so a reader
+    * pinned before the flip keeps serving its generation set. Steps:
     *
     *  1. read the PINNED live set (a crashed append's uncommitted
     *     generation is not compacted in — it stays orphaned for
@@ -649,11 +644,13 @@ object ArtifactManifest {
     *  4. [[vacuum]] (skippable with `vacuum = false` while readers
     *     may still hold pre-flip pins — run it after their lease).
     *
-    * `sortWithin` re-sorts rows inside each rewritten file (see
-    * [[LayoutOps.compactGenerations]]); the partition column leads
-    * the sort so the partitioned write's required ordering is already
-    * satisfied and its own (unstable) sort never runs. Returns the
-    * surviving generation.
+    * `sortWithin` re-sorts rows inside each rewritten file, for
+    * artifacts whose partitions carry a meaningful row order (the
+    * gate stores' bucket column); the partition column leads the sort
+    * so the partitioned write's required ordering is already satisfied
+    * and its own (unstable) sort never runs
+    * ([[LayoutOps.writeGenerationPacked]]). Returns the surviving
+    * generation.
     */
   def compactGenerations(s: SparkSession, dir: String, partCol: String,
       filesPerPartition: Int = 1, sortWithin: Seq[String] = Nil,
@@ -813,9 +810,10 @@ object ArtifactManifest {
   }
 
   /** The clustered plan for one generation of a VERSIONED clustered
-    * fact, geometry-validated: range cluster for one key, Morton
-    * z-order for several (see [[LayoutOps.clusterWrite]] /
-    * [[LayoutOps.zorderWrite]] for the layout rationale).
+    * fact, geometry-validated: range cluster for one key
+    * ([[LayoutOps.clusterFrame]]), Morton z-order for several
+    * ([[LayoutOps.zorderFrame]], which states the layout rationale).
+    * The one place the clustering geometry is checked.
     */
   private def clusteredFrame(df: DataFrame, cols: Seq[String],
       partitions: Int, zorder: Boolean, bits: Int): DataFrame = {
@@ -857,16 +855,12 @@ object ArtifactManifest {
 
   /** Build a VERSIONED clustered fact artifact: one fresh generation
     * holds the clustered (range or z-order) tree, and the manifest
-    * pins it —
-    * the manifest-governed successor of a flat
-    * [[LayoutOps.clusterWrite]] directory. Readers go through
-    * [[frame]], so [[compactClusteredGenerations]] can re-cluster
-    * WITHOUT the [[LayoutOps.swapInto]] rename window a flat
-    * directory's in-place compaction needs: a reader loaded
-    * pre-compaction keeps serving its pinned generation through the
-    * flip. Row-group skipping is unchanged — the clustered files sit
-    * inside the generation directory and pushed predicates prune
-    * their row groups exactly as in the flat layout.
+    * pins it. Readers go through [[frame]], so
+    * [[compactClusteredGenerations]] re-clusters without renaming a
+    * directory a reader is inside: a reader loaded pre-compaction
+    * keeps serving its pinned generation through the flip. The
+    * clustered files sit inside the generation directory, and pushed
+    * predicates prune their row groups.
     */
   def clusterBuild(df: DataFrame, dir: String, cols: Seq[String],
       partitions: Int, zorder: Boolean = false, bits: Int = 8,
@@ -925,10 +919,11 @@ object ArtifactManifest {
   }
 
   /** Re-cluster the LIVE generations of a [[clusterBuild]] artifact
-    * into one new generation and flip the manifest — the reader-safe
-    * successor of [[LayoutOps.compactClusteredInPlace]], which
-    * rewrites through a [[LayoutOps.swapInto]] rename window a
-    * concurrent reader can straddle. Appends degrade a clustered
+    * into one new generation and flip the manifest; a reader pinned
+    * before the flip keeps its files until [[vacuum]]. A plain
+    * repartition would keep the rows but interleave them, so every
+    * row group's min/max would span the full key range; this pass
+    * re-runs the cluster plan instead. Appends degrade a clustered
     * fact in BOTH dimensions (each generation adds files, and each
     * clusters only its own rows, so cross-generation key ranges
     * overlap and row-group skipping decays); this pass re-derives the

@@ -616,7 +616,7 @@ object DedupIndex {
     * SUPERSET of the (band, bucket) touched set, and the gate's
     * (band, bucket) equi-join drops the stragglers — result-
     * invisible by construction. Against the bucket-sorted band files
-    * ([[build]]/[[appendWith]]'s layout), the parquet reader skips
+    * ([[build]]/[[appendBatch]]'s layout), the parquet reader skips
     * row groups/pages holding only un-touched buckets, so the
     * stored-side read tracks the batch's COLLISION SURFACE, not the
     * corpus (ScaleProbe `text gate scan`). The driver collect is
@@ -828,13 +828,14 @@ object DedupIndex {
   }
 
   /** Append one ingest GENERATION under already-known banding
-    * geometry — the ingest-loop fast path (geometry is frozen, so a
-    * stream reads `params` once, not per batch). The generation is a
-    * partition column and the write is a DYNAMIC partition overwrite:
-    * re-running the same generation (a replayed micro-batch after a
-    * crash) replaces its own partitions instead of double-appending —
-    * per-batch ingest is idempotent, which is what turns the stream's
-    * at-least-once replay into effectively-once index maintenance.
+    * geometry, merging the live tree into it when it is the
+    * `compactEvery`-th ([[ArtifactManifest.appendGeneration]]). The
+    * generation is a partition column and the write is a DYNAMIC
+    * partition overwrite: re-running the same generation (a replayed
+    * micro-batch after a crash) replaces its own partitions instead of
+    * double-appending — per-batch ingest is idempotent, which is what
+    * turns the stream's at-least-once replay into effectively-once
+    * index maintenance.
     *
     * SINGLE-WRITER contract: generation assignment is not
     * coordinated — two concurrent appenders picking the same
@@ -844,18 +845,9 @@ object DedupIndex {
     * guarantee this — foreachBatch is serial), or front the artifact
     * with a table format that has a transaction log.
     */
-  def appendWith(k: Int, rowsPerBand: Int, dir: String,
+  private[graft] def appendBatch(k: Int, rowsPerBand: Int, dir: String,
       newDocs: DataFrame, textCol: String, idCol: String,
-      generation: Long): Unit =
-    appendBatch(k, rowsPerBand, dir, newDocs, textCol, idCol, generation,
-      compactEvery = Int.MaxValue)
-
-  /** [[appendWith]], merging the live tree into the generation when
-    * it is the `compactEvery`-th ([[ArtifactManifest.appendGeneration]]).
-    */
-  private def appendBatch(k: Int, rowsPerBand: Int, dir: String,
-      newDocs: DataFrame, textCol: String, idCol: String,
-      generation: Long, compactEvery: Int): Unit = {
+      generation: Long, compactEvery: Int = Int.MaxValue): Unit = {
     // membership FIRST: a crash between the two writes must leave the
     // sketch a superset (see the membership-sketch block above)
     orMembers(newDocs, idCol, dir)

@@ -3,131 +3,59 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Physical data-layout management — the write-side half of scan
-  * performance at 100 TB. Partition pruning (BucketedIO, the
-  * cell-partitioned indexes) covers directory-level skipping; these
-  * ops cover the two layers below it:
+/** Physical data layout below partition pruning. Every writer of these
+  * layouts goes through [[ArtifactManifest]], so each rewrite lands in
+  * a fresh generation and readers switch at one manifest flip.
   *
-  *  - [[clusterWrite]]: range-cluster rows so parquet ROW-GROUP
-  *    min/max stats become selective — a pushed range predicate then
-  *    skips whole row groups inside every file (the sort-key
-  *    clustering every lakehouse exposes as OPTIMIZE ... ZORDER /
-  *    cluster-by; for 1-2 predicate columns a plain range sort gives
-  *    the same skipping without the space-filling-curve machinery).
-  *    Spec-measured: the same pushed filter reads a fraction of the
-  *    rows from a clustered layout vs an unclustered one.
+  *  - [[clusterFrame]] / [[zorderFrame]]: the clustering plans. Rows
+  *    are range-clustered on one key, or laid on a Morton curve over
+  *    several, so parquet ROW-GROUP min/max stats become selective and
+  *    a pushed predicate on a cluster column skips whole row groups
+  *    inside every file (the OPTIMIZE ... ZORDER / cluster-by layout
+  *    of the lakehouse formats). [[ArtifactManifest.clusterBuild]],
+  *    `clusterAppend` and `compactClusteredGenerations` write them.
+  *  - [[writeGenerationPacked]], [[ingestGenerations]] and
+  *    [[partitionValueCount]]: the generation layout and the
+  *    driver-side listings of the `(ingest, …)`-partitioned index
+  *    stores.
+  *  - [[deleteKeysPartitioned]] and the staged takedown: remove rows by
+  *    key, rewriting only the partitions that hold a tombstoned key.
+  *  - [[sibling]] / [[swapInto]]: stage a tree beside a directory and
+  *    swap it in, so the path is never the only missing copy.
   *
-  *  - [[compact]]: bin-pack a directory of small files into few large
-  *    ones. Streaming sinks and per-batch appends (the ingest gates'
-  *    decision logs, the index's per-batch bucket files) accrete
-  *    files; at scale, file COUNT — listing, open cost, one task per
-  *    tiny split — degrades scans long before data size does.
-  *    Content-preserving by construction (one repartition, no
-  *    column touches).
-  *
-  * Both are one distributed job with no driver-side row handling.
+  * Each plan is one distributed job with no driver-side row handling.
   */
 object LayoutOps {
 
-  /** Write `df` range-clustered on `cols`: rows shuffle into
-    * `partitions` contiguous key ranges (one output file each) and
-    * sort within each, so every row group's min/max on `cols` spans a
-    * narrow slice. `extraWriteOpts` passes parquet writer knobs (e.g.
-    * a small `parquet.block.size` to force many row groups in tests).
-    */
-  def clusterWrite(df: DataFrame, cols: Seq[String], partitions: Int,
-      dir: String, extraWriteOpts: Map[String, String] = Map.empty): Unit = {
-    require(cols.nonEmpty && partitions >= 1,
-      s"clusterWrite: need cluster columns and partitions >= 1 " +
-        s"(got $cols, $partitions)")
-    requireNotSelfOverwrite(df, dir, "clusterWrite")
-    clusterFrame(df, cols, partitions)
-      .write.options(extraWriteOpts).mode("overwrite").parquet(dir)
-  }
-
-  /** The range-cluster plan shared by [[clusterWrite]] and
-    * [[compactClustered]]: one range shuffle + in-partition sort.
+  /** The range-cluster plan: one range shuffle on `cols` into
+    * `partitions` contiguous key ranges, sorted within each, so every
+    * row group's min/max on `cols` spans a narrow slice.
     */
   private[operators] def clusterFrame(df: DataFrame, cols: Seq[String],
       partitions: Int): DataFrame =
     df.repartitionByRange(partitions, cols.map(col): _*)
       .sortWithinPartitions(cols.map(col): _*)
 
-  /** An overwrite into a directory the frame READS destroys the
-    * source mid-job (the overwrite deletes `dir` before the write
-    * job's scan runs — nothing is written and the input is gone).
-    * [[compact]] guards its explicit src/dst pair; the clustered
-    * writes take an arbitrary frame, so the guard checks the frame's
-    * resolved input files against the target.
-    */
-  private def requireNotSelfOverwrite(df: DataFrame, dir: String,
-      op: String): Unit = {
-    val target = new org.apache.hadoop.fs.Path(dir)
-    val fs = target.getFileSystem(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    val q = fs.makeQualified(target).toString
-    // prefix OR exact match: a SINGLE-FILE parquet source given as
-    // the target is equal to q, not under q + "/" — without the
-    // equality leg the guard waves through the one case that
-    // destroys the only copy
-    val hit = df.inputFiles.find { f =>
-      val qf = fs.makeQualified(new org.apache.hadoop.fs.Path(f))
-        .toString
-      qf == q || qf.startsWith(q + "/")
-    }
-    require(hit.isEmpty,
-      s"$op: the input frame reads from the overwrite target $dir " +
-        s"(e.g. ${hit.getOrElse("")}) — the overwrite would destroy " +
-        "the source before the write job scans it; write to a " +
-        "sibling and swap instead")
-  }
-
-  /** Write `df` clustered on a Z-ORDER (Morton) curve over `cols` —
-    * the multi-column generalization of [[clusterWrite]]: range
-    * clustering serves predicates on its leading column only, while
-    * interleaving the bits of per-column QUANTILE buckets gives every
-    * row group a narrow min/max envelope on EVERY z-column, so pushed
-    * predicates on any of them (or any combination) skip row groups.
-    * This is the lakehouse OPTIMIZE ... ZORDER BY write path.
+  /** The Z-ORDER (Morton) plan over `cols`. A range cluster serves
+    * predicates on its leading column only; interleaving the bits of
+    * per-column QUANTILE buckets gives every row group a narrow
+    * min/max envelope on EVERY z column, so pushed predicates on any
+    * of them (or any combination) skip row groups.
     *
-    * Quantile buckets, not value-range buckets: computed from one
-    * `percentile_approx` aggregation pass (driver receives
-    * `2^bits - 1` cut points per column — dim-sized), they stay
-    * balanced under arbitrarily skewed value distributions, which is
-    * what a 100 TB column looks like. The interleave itself is a pure
-    * bit expression (shift/and/or — codegen-friendly, no UDF), and
-    * the write is one range-shuffle on the z-value: `partitions`
-    * contiguous curve segments, sorted within each so row-group
-    * boundaries cut the curve into spatially-local tiles.
-    *
-    * Content-preserving by construction (the working columns are
-    * collision-free generated names, dropped after the sort, which
-    * adds no exchange). `bits` per column, capped at 16: beyond that
-    * the cut array per column (2^bits − 1 doubles) stops being
-    * dim-sized and the curve resolution long exceeds what row-group
-    * min/max stats can use; `cols.size * bits` must also fit a long.
-    */
-  def zorderWrite(df: DataFrame, cols: Seq[String], partitions: Int,
-      dir: String, bits: Int = 8,
-      extraWriteOpts: Map[String, String] = Map.empty): Unit = {
-    require(cols.size >= 2,
-      s"zorderWrite: z-order needs >= 2 columns (got $cols) — use " +
-        "clusterWrite for a single cluster key")
-    require(bits >= 1 && bits <= 16,
-      s"zorderWrite: bits must be in [1, 16] (got $bits)")
-    require(cols.size * bits <= 63,
-      s"zorderWrite: ${cols.size} cols x $bits bits must fit a long")
-    require(partitions >= 1, s"zorderWrite: partitions >= 1")
-    requireNotSelfOverwrite(df, dir, "zorderWrite")
-    zorderFrame(df, cols, partitions, bits)
-      .write.options(extraWriteOpts).mode("overwrite").parquet(dir)
-  }
-
-  /** The z-order plan shared by [[zorderWrite]] and
-    * [[compactClustered]]: quantile cuts → per-column buckets → Morton
-    * interleave → one range shuffle on the z value, sorted within each
-    * partition, working columns dropped. Geometry preconditions are
-    * the callers' (both `require` before reaching here).
+    * Quantile buckets, not value-range buckets: one
+    * `percentile_approx` pass brings `2^bits - 1` cut points per
+    * column to the driver (dim-sized), and they stay balanced under
+    * arbitrarily skewed value distributions. The interleave is a pure
+    * bit expression (shift/and/or, no UDF), and the plan is one range
+    * shuffle on the z value: `partitions` contiguous curve segments,
+    * sorted within each, so row-group boundaries cut the curve into
+    * spatially-local tiles. The working columns are collision-free
+    * generated names dropped after the sort, so content is preserved.
+    * `bits` per column is capped at 16: beyond that the cut array per
+    * column stops being dim-sized and the curve resolution exceeds
+    * what row-group stats can use; `cols.size * bits` must also fit a
+    * long. The caller validates that geometry
+    * ([[ArtifactManifest.clusterBuild]] and its siblings).
     */
   private[operators] def zorderFrame(df: DataFrame, cols: Seq[String],
       partitions: Int, bits: Int): DataFrame = {
@@ -142,7 +70,7 @@ object LayoutOps {
     val cuts: Map[String, Seq[Double]] = cols.zipWithIndex.map {
       case (c, i) =>
         require(!cutRow.isNullAt(i),
-          s"zorderWrite: column `$c` has no non-null values (or the " +
+          s"z-order: column `$c` has no non-null values (or the " +
             "input is empty) — no quantile cuts to cluster on")
         // non-finite cuts (a column containing ±Infinity) are useless
         // as bucket boundaries AND unrepresentable as SQL literals;
@@ -151,7 +79,7 @@ object LayoutOps {
         c -> cutRow.getSeq[Double](i).filter(java.lang.Double.isFinite)
     }.toMap
     require(cuts.values.forall(_.nonEmpty),
-      s"zorderWrite: a z column's quantile cuts are all non-finite — " +
+      s"z-order: a z column's quantile cuts are all non-finite — " +
         s"cannot cluster on it (cuts per column: " +
         s"${cuts.view.mapValues(_.size).toMap})")
     // bucket of v in [0, 2^bits): count of cuts <= v — the native
@@ -205,6 +133,18 @@ object LayoutOps {
       .drop(zc +: bcols.map(_._2): _*)
   }
 
+  /** Sibling path `<name><suffix>` of `dir`, via Path normalization —
+    * naive string concatenation under a trailing-slash `dir` would
+    * yield a CHILD of the live tree ("dir/__compact"), which
+    * [[swapInto]]'s rename-aside then carries away with the live
+    * data, stranding the staged rewrite.
+    */
+  private[operators] def sibling(dir: String,
+      suffix: String): org.apache.hadoop.fs.Path = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    new org.apache.hadoop.fs.Path(p.getParent, p.getName + suffix)
+  }
+
   /** Swap a fully-written staging tree into place at `dir` without a
     * window where the artifact path is the only missing copy. The
     * naive `delete(dir); rename(staging, dir)` order loses the only
@@ -218,18 +158,6 @@ object LayoutOps {
     * dirs). Not atomic on a plain filesystem — same SINGLE-WRITER
     * maintenance-window contract as every artifact mutation.
     */
-  /** Sibling path `<name><suffix>` of `dir`, via Path normalization —
-    * naive string concatenation under a trailing-slash `dir` would
-    * yield a CHILD of the live tree ("dir/__compact"), which
-    * [[swapInto]]'s rename-aside then carries away with the live
-    * data, stranding the staged rewrite.
-    */
-  private[operators] def sibling(dir: String,
-      suffix: String): org.apache.hadoop.fs.Path = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    new org.apache.hadoop.fs.Path(p.getParent, p.getName + suffix)
-  }
-
   private[operators] def swapInto(fs: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path,
       staging: org.apache.hadoop.fs.Path): Unit = {
@@ -256,15 +184,14 @@ object LayoutOps {
         n.startsWith("_") || n.startsWith(".")
       }) fs.delete(gp, true)
 
-  /** ONE packed generation write — the shared recipe of
-    * [[compactGenerations]]'s sortWithin branch and
-    * [[ArtifactManifest.compactGenerations]], kept in one place
-    * because its ordering argument is subtle: the write targets the
-    * generation directory EXPLICITLY and partitions by `partCol`
-    * alone, so the partitioned writer's required ordering is just
-    * (partCol) — which the (partCol, sortWithin…) sort already
-    * satisfies, and the writer's own UNSTABLE sort (which would
-    * destroy any secondary order) never runs. The salt is a whole-row
+  /** ONE packed generation write — the recipe of
+    * [[ArtifactManifest.compactGenerations]] and the merging appends,
+    * kept in one place because its ordering argument is subtle: the
+    * write targets the generation directory EXPLICITLY and partitions
+    * by `partCol` alone, so the partitioned writer's required ordering
+    * is just (partCol) — which the (partCol, sortWithin…) sort
+    * already satisfies, and the writer's own UNSTABLE sort (which
+    * would destroy any secondary order) never runs. The salt is a whole-row
     * hash: deterministic for a given row set, evenly spread; size
     * `filesPerPartition` to largest-partition-bytes /
     * parquet-target-file-size at scale.
@@ -308,7 +235,7 @@ object LayoutOps {
     * aggregation would schedule a task per corpus file, which on a
     * 100 TB index is a full footer sweep to compute one integer.
     * Shared by both index artifacts' generation assignment and by
-    * [[compactGenerations]].
+    * [[ArtifactManifest]]'s compactions.
     */
   private[operators] def ingestGenerations(s: SparkSession,
       partitionedDir: String): Seq[Long] = {
@@ -345,81 +272,6 @@ object LayoutOps {
       .toSet.size
   }
 
-  /** Collapse every ingest generation of an `(ingest, partCol)`-
-    * partitioned artifact subtree into ONE — the maintenance pass the
-    * append-mode index artifacts need: each appended generation adds
-    * at least one file per `partCol` value, so after G appends a probe
-    * of one partition opens G small files; at real ingest rates file
-    * COUNT is the first operational fire (listing, open cost, one
-    * scan task per tiny split), long before data size. The rewrite
-    * shuffles once on `partCol` (each partition value lands in one
-    * task → one file), keeps the MAX generation number so the next
-    * append's `max+1` assignment stays monotone (a consolidated
-    * artifact can never hand out a generation some earlier append
-    * already used), stages the result as a sibling, and swaps via
-    * [[swapInto]] (live tree aside → staging in → old tree deleted,
-    * so the artifact path is never the only missing copy). The swap
-    * is not atomic on a plain filesystem — same SINGLE-WRITER
-    * contract as the appends: compaction is a maintenance window of
-    * the one ingest writer, not a concurrent job (a table format's
-    * transaction log is what buys concurrent readers).
-    *
-    * Returns the surviving generation number. Content-preserving by
-    * construction (one repartition, no column touches) and
-    * probe-identical by spec.
-    */
-  def compactGenerations(s: SparkSession, dir: String,
-      partCol: String, filesPerPartition: Int = 1,
-      sortWithin: Seq[String] = Nil): Long = {
-    require(filesPerPartition >= 1,
-      s"compactGenerations: filesPerPartition >= 1 " +
-        s"(got $filesPerPartition)")
-    // complete a crashed staged takedown BEFORE the rewrite: its
-    // marked staging tree references pre-compaction partitions, and
-    // the swap below would otherwise strand it next to the new tree
-    // for a later recovery to wrongly adopt (see
-    // deleteKeysPartitioned's recover-first rationale)
-    recoverStagedTakedown(s, dir, partCol)
-    val gens = ingestGenerations(s, dir)
-    require(gens.nonEmpty,
-      s"compactGenerations: $dir has no ingest= partitions — not a " +
-        "built artifact")
-    val keep = gens.max
-    val dp = new org.apache.hadoop.fs.Path(dir)
-    val sp = sibling(dir, "__compact")
-    val staging = sp.toString
-    val fs = dp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(sp, true) // leftover staging from a crashed pass
-    // one writer task per (partition value, salt): at bench scale
-    // filesPerPartition = 1 is right (few files IS the goal), but a
-    // 100 TB artifact's largest partition through ONE task is an
-    // outage — size filesPerPartition to largest-partition-bytes /
-    // parquet-target-file-size. The salt is a whole-row hash:
-    // deterministic for a given row set, evenly spread.
-    // ONE recipe for both the plain and sortWithin rewrites:
-    // writeGenerationPacked targets the `ingest=<keep>` directory
-    // explicitly and partitions by `partCol` alone, so the writer's
-    // required ordering is satisfiable and a secondary `sortWithin`
-    // order survives (a sort prepended to an (ingest, partCol)-
-    // partitioned write would be useless: `ingest` is constant here,
-    // the optimizer folds it out, and the writer's own UNSTABLE sort
-    // would destroy the secondary order). `sortWithin` is for
-    // artifacts whose partitions carry a meaningful row order (a
-    // clustered lookup column); the index artifacts' probes are
-    // whole-partition reads and pass Nil. For range/z-CLUSTERED fact
-    // directories (not ingest-partitioned) use [[compactClustered]].
-    // The commit marker lands inside the ingest dir, so the
-    // artifact-root `_SUCCESS` the build left is re-created at the
-    // staging root before the swap.
-    writeGenerationPacked(s.read.parquet(dir).drop("ingest"),
-      partCol, filesPerPartition, sortWithin,
-      s"$staging/ingest=$keep")
-    fs.create(new org.apache.hadoop.fs.Path(sp, "_SUCCESS"), true)
-      .close()
-    swapInto(fs, dp, sp)
-    keep
-  }
-
   /** Delete rows by key from an `(ingest, partCol)`-partitioned
     * artifact subtree, rewriting ONLY the partitions that contain a
     * tombstoned key — the physical half of the index takedown path
@@ -441,7 +293,8 @@ object LayoutOps {
     * Generation numbering is untouched (deletes happen in place
     * within each generation), so append monotonicity survives. Bulk
     * takedowns leave small rewritten files behind; run
-    * [[compactGenerations]] after, exactly like an append burst.
+    * [[ArtifactManifest.compactGenerations]] after, exactly like an
+    * append burst.
     * Same single-writer contract as every artifact mutation.
     *
     * `tombs` must be an EXTERNAL input (a takedown feed, a collected
@@ -746,103 +599,4 @@ object LayoutOps {
     fs.delete(sp, true)
   }
 
-  /** Rewrite `srcDir` as `targetFiles` parquet files in `dstDir`.
-    * Round-robin repartition packs evenly regardless of input file
-    * sizes; rows are untouched.
-    */
-  def compact(s: SparkSession, srcDir: String, dstDir: String,
-      targetFiles: Int): Unit = {
-    require(targetFiles >= 1,
-      s"compact: targetFiles >= 1 (got $targetFiles)")
-    // compare resolved paths, not spellings: a trailing slash or a
-    // relative alias of the same dir would pass a string check and
-    // the overwrite would destroy the source mid-read
-    val (srcP, dstP) = (
-      new org.apache.hadoop.fs.Path(srcDir),
-      new org.apache.hadoop.fs.Path(dstDir))
-    val fs = srcP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(fs.makeQualified(srcP) != fs.makeQualified(dstP),
-      "compact: dstDir must differ from srcDir (the rewrite reads " +
-        "srcDir while writing)")
-    val rows = s.read.parquet(srcDir)
-    // equality alone misses dstDir being an ANCESTOR of srcDir — the
-    // overwrite would delete the whole dst tree, source included,
-    // before the scan runs; the input-file prefix guard catches any
-    // containment
-    requireNotSelfOverwrite(rows, dstDir, "compact")
-    rows.repartition(targetFiles)
-      .write.mode("overwrite").parquet(dstDir)
-  }
-
-  /** LAYOUT-PRESERVING compaction: rewrite `srcDir` into `dstDir` as
-    * `partitions` files RE-CLUSTERED on `cols` — the maintenance pass
-    * a [[clusterWrite]]/[[zorderWrite]] fact directory needs once it
-    * accretes appends. [[compact]]'s round-robin repartition is
-    * content-preserving but CLUSTERING-DESTROYING: it interleaves rows
-    * arbitrarily, so every rewritten row group's min/max spans the full
-    * key range and the row-group skipping the clustered write bought is
-    * silently gone. This op re-runs the cluster plan instead (the
-    * OPTIMIZE-with-resort every lakehouse pairs with small-file
-    * compaction), so post-compaction scans skip exactly as a fresh
-    * clustered write's do — spec-held via scan metrics, not plan
-    * strings. `zorder = true` re-clusters on the Morton curve over
-    * `cols` (required for >1 predicate column); quantile cuts are
-    * re-derived from the CURRENT contents, so the curve reflects the
-    * data after the appends, not the original write's distribution.
-    * Cost: one quantile pass (z only) + one range shuffle + write —
-    * same as the original clustered write over the same rows.
-    */
-  def compactClustered(s: SparkSession, srcDir: String, dstDir: String,
-      cols: Seq[String], partitions: Int, zorder: Boolean = false,
-      bits: Int = 8,
-      extraWriteOpts: Map[String, String] = Map.empty): Unit = {
-    require(cols.nonEmpty && partitions >= 1,
-      s"compactClustered: need cluster columns and partitions >= 1 " +
-        s"(got $cols, $partitions)")
-    if (zorder) {
-      require(cols.size >= 2,
-        s"compactClustered: z-order needs >= 2 columns (got $cols) — " +
-          "zorder = false range-clusters on a single key")
-      require(bits >= 1 && bits <= 16,
-        s"compactClustered: bits must be in [1, 16] (got $bits)")
-      require(cols.size * bits <= 63,
-        s"compactClustered: ${cols.size} cols x $bits bits must fit " +
-          "a long")
-    }
-    val (srcP, dstP) = (
-      new org.apache.hadoop.fs.Path(srcDir),
-      new org.apache.hadoop.fs.Path(dstDir))
-    val fs = srcP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(fs.makeQualified(srcP) != fs.makeQualified(dstP),
-      "compactClustered: dstDir must differ from srcDir (the rewrite " +
-        "reads srcDir while writing) — use compactClusteredInPlace " +
-        "for an in-place rewrite")
-    val rows = s.read.parquet(srcDir)
-    requireNotSelfOverwrite(rows, dstDir, "compactClustered")
-    (if (zorder) zorderFrame(rows, cols, partitions, bits)
-      else clusterFrame(rows, cols, partitions))
-      .write.options(extraWriteOpts).mode("overwrite").parquet(dstDir)
-  }
-
-  /** [[compactClustered]] back into the SAME directory — the shape the
-    * append-then-compact lifecycle actually wants (the clustered fact
-    * dir keeps its path; readers re-list it). Stages the re-clustered
-    * rewrite as a sibling, then swaps via [[swapInto]] (live aside →
-    * staging in → old deleted), so the directory is never the only
-    * missing copy and a crash leaves either the old tree live or
-    * recoverable by one rename. Same SINGLE-WRITER maintenance-window
-    * contract as [[compactGenerations]].
-    */
-  def compactClusteredInPlace(s: SparkSession, dir: String,
-      cols: Seq[String], partitions: Int, zorder: Boolean = false,
-      bits: Int = 8,
-      extraWriteOpts: Map[String, String] = Map.empty): Unit = {
-    val dp = new org.apache.hadoop.fs.Path(dir)
-    val sp = sibling(dir, "__compact")
-    val fs = dp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(sp, true) // leftover staging from a crashed pass
-    compactClustered(s, dir, sp.toString, cols, partitions, zorder,
-      bits, extraWriteOpts)
-    swapInto(fs, dp, sp)
-  }
 }

@@ -89,13 +89,6 @@ object PartitionedCdc {
   // fence (commitManifest) remains the correctness backstop for
   // lease-steal races and legacy callers.
 
-  def acquireLease(s: SparkSession, root: String): WriterLease.Lease =
-    WriterLease.acquire(s, root)
-
-  def releaseLease(s: SparkSession,
-      lease: WriterLease.Lease): Unit =
-    WriterLease.release(s, lease)
-
   private def withWriterLease[A](s: SparkSession, root: String)(
       f: => A): A =
     WriterLease.withLease(s, root)(f)

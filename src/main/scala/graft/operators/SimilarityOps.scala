@@ -90,13 +90,24 @@ object SimilarityOps {
     * either way (the cache only changes where bytes are read from);
     * `graft.train.cacheMaxBytes = 0` turns it off.
     */
-  def trainCache(df: DataFrame): DataFrame = {
+  private def trainCache(df: DataFrame): DataFrame = {
     val maxBytes = Knobs.long(df.sparkSession,
       "graft.train.cacheMaxBytes", 8L << 30, min = 0)
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (est <= maxBytes)
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     else df
+  }
+
+  /** Lend [[trainCache]]`(df)` to `f` and unpersist it when `f`
+    * returns or throws. No persisted training frame outlives the call,
+    * a failed training collect included: serving queries leave no
+    * cached frame in the session (PipelineSignalsSpec's contract), so
+    * a frame `f` returns recomputes its one scan when it is served.
+    */
+  def withTrainCache[A](df: DataFrame)(f: DataFrame => A): A = {
+    val e = trainCache(df)
+    try f(e) finally e.unpersist()
   }
 
   /** Trained-IVF coarse-quantizer state: ascending cell ids, flattened

@@ -172,14 +172,8 @@ object SimilarityQueries {
     // deterministically; all 64-term dot/norm chains are generated
     // left-deep on both engines so the fp fold order is identical.
     "s4_ivf_topk" -> ((s, d) => {
-      // cost-gated persist for the Lloyd passes that run DURING query
-      // construction (SimilarityOps.trainCache); released before the
-      // frame is returned — serving queries must not leak cached
-      // frames into the session (PipelineSignalsSpec's contract), so
-      // the serve action recomputes the one scan it always paid
-      val e = SimilarityOps.trainCache(
-        SimilarityOps.withNorm(embeddings(s, d), "embedding", "n"))
-      try {
+      SimilarityOps.withTrainCache(
+          SimilarityOps.withNorm(embeddings(s, d), "embedding", "n")) { e =>
       // Assignment runs as the native `ivf_assign` expression
       // (functions.IvfAssign): one constant-size loop per row instead
       // of a broadcast cross join + 64-term dot chain per (vector,
@@ -197,10 +191,7 @@ object SimilarityQueries {
       val res = cellServeTopK(e.withColumn("cell",
         SimilarityOps.ivfAssign(cents, Dim)))
       res
-      // finally, not success-path only: a failed training collect
-      // must not leak the persisted frame into the shared session
-      // (the no-leaked-frames contract — r21 advice)
-      } finally e.unpersist()
+      }
     }),
 
     // s5: int8 embedding quantization — the storage-scale path for a
@@ -275,12 +266,7 @@ object SimilarityQueries {
     // dim table).
     "s7_pq_adc_topk" -> ((s, d) => {
       import graft.operators.ProductQuantization
-      // cost-gated persist for the PQ seed + Lloyd collects that run
-      // during construction (SimilarityOps.trainCache); released
-      // before returning (the no-leaked-frames serving contract,
-      // PipelineSignalsSpec)
-      val e = SimilarityOps.trainCache(embeddings(s, d))
-      try {
+      SimilarityOps.withTrainCache(embeddings(s, d)) { e =>
       val books = ProductQuantization.train(
         e, "embedding", "vec_id", PqSub, PqSubDim, PqK, steps = 1)
       // repartition = a MATERIALIZATION BARRIER, not data movement for
@@ -314,10 +300,7 @@ object SimilarityQueries {
       val res = topkByDist(sim, Seq("q_id"), "adc_dist")
         .select("q_id", "vec_id", "adc_dist", "rank")
       res
-      // finally, not success-path only: a failed training collect
-      // must not leak the persisted frame into the shared session
-      // (the no-leaked-frames contract — r21 advice)
-      } finally e.unpersist()
+      }
     }),
 
     // s8: IVF+PQ — the full FAISS-IVFPQ shape, composing the two
@@ -334,13 +317,8 @@ object SimilarityQueries {
     // composed with s7's generated codebook CTEs.
     "s8_ivfpq_topk" -> ((s, d) => {
       import graft.operators.ProductQuantization
-      // cost-gated persist for the two trainings' construction-time
-      // collects (SimilarityOps.trainCache); released before
-      // returning (the no-leaked-frames serving contract,
-      // PipelineSignalsSpec)
-      val e = SimilarityOps.trainCache(
-        SimilarityOps.withNorm(embeddings(s, d), "embedding", "n"))
-      try {
+      SimilarityOps.withTrainCache(
+          SimilarityOps.withNorm(embeddings(s, d), "embedding", "n")) { e =>
       val (cents, books) =
         VectorIndex.fit(e, Dim, LloydSteps, PqSub, PqSubDim, PqK)
       val coded = VectorIndex.encode(e, cents, books, Dim, PqSubDim)
@@ -368,10 +346,7 @@ object SimilarityQueries {
       val res = topkByDist(sim, Seq("q_id", "cell"), "adc_dist")
         .select("q_id", "vec_id", "cell", "adc_dist", "rank")
       res
-      // finally, not success-path only: a failed training collect
-      // must not leak the persisted frame into the shared session
-      // (the no-leaked-frames contract — r21 advice)
-      } finally e.unpersist()
+      }
     }),
 
     // s9: multi-probe IVFPQ with full-precision re-rank — the two
@@ -392,13 +367,8 @@ object SimilarityQueries {
       import graft.operators.ProductQuantization
       val Probes = 2
       val CandPool = 8 // ADC shortlist size per query before re-rank
-      // cost-gated persist for the two trainings' construction-time
-      // collects (SimilarityOps.trainCache); released before
-      // returning (the no-leaked-frames serving contract,
-      // PipelineSignalsSpec)
-      val e = SimilarityOps.trainCache(
-        SimilarityOps.withNorm(embeddings(s, d), "embedding", "n"))
-      try {
+      SimilarityOps.withTrainCache(
+          SimilarityOps.withNorm(embeddings(s, d), "embedding", "n")) { e =>
       val (cents, books) =
         VectorIndex.fit(e, Dim, LloydSteps, PqSub, PqSubDim, PqK)
       val coded = VectorIndex.encode(e, cents, books, Dim, PqSubDim)
@@ -460,10 +430,7 @@ object SimilarityQueries {
         .filter(col("rank") <= TopK) // exact-cosine final order
         .select("q_id", "vec_id", "sim", "adc_dist", "rank")
       res
-      // finally, not success-path only: a failed training collect
-      // must not leak the persisted frame into the shared session
-      // (the no-leaked-frames contract — r21 advice)
-      } finally e.unpersist()
+      }
     }),
 
     // s11: the index LIFECYCLE — build the IVF+PQ index as a persisted
@@ -577,21 +544,14 @@ object SimilarityQueries {
     // assignment. Sampling drops the seed count to 4 cells (sampled
     // ids < 8), a legitimate smaller index geometry.
     "s10_ivf_sampled" -> ((s, d) => {
-      // cost-gated persist for the Lloyd passes over the sample
-      // (SimilarityOps.trainCache); released before returning (the
-      // no-leaked-frames serving contract, PipelineSignalsSpec)
-      val e = SimilarityOps.trainCache(
-        SimilarityOps.withNorm(embeddings(s, d), "embedding", "n"))
-      try {
+      SimilarityOps.withTrainCache(
+          SimilarityOps.withNorm(embeddings(s, d), "embedding", "n")) { e =>
       val cents = SimilarityOps.trainIvf(
         e.filter(pmod(col("vec_id"), lit(2)) === 0), Dim, LloydSteps)
       val res = cellServeTopK(e.withColumn("cell",
         SimilarityOps.ivfAssign(cents, Dim)))
       res
-      // finally, not success-path only: a failed training collect
-      // must not leak the persisted frame into the shared session
-      // (the no-leaked-frames contract — r21 advice)
-      } finally e.unpersist()
+      }
     }),
 
     // s3: embedding near-dup pairs, blocked by (label, sign-bucket) with
@@ -687,13 +647,8 @@ object SimilarityQueries {
     // and measured, so the gate cannot drift from its own report
     // card. recall is integer-exact (matches·1e6 div total).
     "s14_gate_recall" -> ((s, d) => {
-      // cost-gated persist for the Lloyd passes that run during
-      // construction (SimilarityOps.trainCache); released before
-      // returning (the no-leaked-frames serving contract,
-      // PipelineSignalsSpec)
-      val e = SimilarityOps.trainCache(
-        SimilarityOps.withNorm(embeddings(s, d), "embedding", "n"))
-      try {
+      SimilarityOps.withTrainCache(
+          SimilarityOps.withNorm(embeddings(s, d), "embedding", "n")) { e =>
       val cents = SimilarityOps.trainIvf(
         e.filter(col("vec_id") < VecGateSplit), Dim, LloydSteps)
       val assigned = e
@@ -731,10 +686,7 @@ object SimilarityQueries {
         .withColumn("recall",
           expr("(n_caught * 1000000) div n_true").cast("double") / lit(1e6))
       res
-      // finally, not success-path only: a failed training collect
-      // must not leak the persisted frame into the shared session
-      // (the no-leaked-frames contract — r21 advice)
-      } finally e.unpersist()
+      }
     })
   )
 

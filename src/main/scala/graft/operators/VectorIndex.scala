@@ -119,12 +119,9 @@ object VectorIndex {
     WriterLease.withLease(s, DedupIndex.leaseRoot(dir)) {
     // build makes 5-6 passes over this frame (two quantizer trainings
     // with their seed collects, then the encode+write and the
-    // membership sketch) — cost-gated cache so passes 2..n read the
-    // materialized copy instead of re-running the scan+norm lineage;
-    // released before leaving the build either way
-    val e = SimilarityOps.trainCache(
-      SimilarityOps.withNorm(e0, "embedding", "n"))
-    try {
+    // membership sketch)
+    SimilarityOps.withTrainCache(
+        SimilarityOps.withNorm(e0, "embedding", "n")) { e =>
     val (cents, books) = fit(e, dim, lloydSteps, subspaces, subDim, k)
     // heartbeat + fence after the long training stage, BEFORE the
     // first destructive write: a holder whose training outlasted the
@@ -181,7 +178,7 @@ object VectorIndex {
     // sketch pass is a cache read when the gate engaged.
     DedupIndex.buildMembers(e, "vec_id", dir,
       metrics.get("n_rows").map(_.asInstanceOf[Long]))
-    } finally e.unpersist()
+    }
     }
   }
 
@@ -437,33 +434,25 @@ object VectorIndex {
     }
   }
 
-  /** Append one ingest GENERATION under an already-loaded artifact —
-    * the ingest-loop fast path (quantizers are frozen, so a stream
-    * collects them once, not per batch; only `l.corpus`'s column list
-    * is consulted here). The generation is a partition column and the
-    * write is a DYNAMIC partition overwrite, so a replayed
-    * micro-batch replaces its own partitions instead of
+  /** Append one ingest GENERATION under an already-loaded artifact
+    * (quantizers are frozen; only `l.corpus`'s column list is
+    * consulted here) and return the batch's mean assigned-centroid
+    * cosine — the drift statistic. The generation is a partition
+    * column and the write is a DYNAMIC partition overwrite, so a
+    * replayed micro-batch replaces its own partitions instead of
     * double-appending — per-batch ingest is idempotent. Same
-    * SINGLE-WRITER contract as [[DedupIndex.appendWith]]: generation
+    * SINGLE-WRITER contract as [[DedupIndex.appendBatch]]: generation
     * assignment is uncoordinated, so run one ingest writer per
     * artifact.
-    */
-  def appendWith(l: Loaded, dir: String, newVecs: DataFrame,
-      generation: Long): Unit = {
-    appendWithDrift(l, dir, newVecs, generation)
-    ()
-  }
-
-  /** [[appendWith]] plus the batch's mean assigned-centroid cosine —
-    * the drift statistic — observed ON the append write (one
+    *
+    * The drift statistic is observed ON the append write (one
     * broadcast join against the k-row centroid table rides the
     * encode+write job, the same fold [[build]] uses for the
-    * baseline), instead of [[append]]'s former read-back aggregate of
-    * the just-written generation. The observation sits on the batch's
-    * rows, so a merging write ([[ArtifactManifest.appendGeneration]],
-    * when `generation` is the `compactEvery`-th) still measures the
-    * batch alone. `None` when no batch row has a positive norm
-    * (including the zero-row batch).
+    * baseline). The observation sits on the batch's rows, so a
+    * merging write ([[ArtifactManifest.appendGeneration]], when
+    * `generation` is the `compactEvery`-th) still measures the batch
+    * alone. `None` when no batch row has a positive norm (including
+    * the zero-row batch).
     */
   private[graft] def appendWithDrift(l: Loaded, dir: String,
       newVecs: DataFrame, generation: Long,
@@ -637,6 +626,11 @@ object VectorIndex {
 
   private def adcReportPath(dir: String) = s"$dir/adc_report"
 
+  private def adcStampPath(dir: String) = s"${adcReportPath(dir)}/stamp.state"
+
+  private def adcBands(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(s"${adcReportPath(dir)}/bands")
+
   /** Persist the artifact's ADC recall report
     * ([[SimilarityOps.adcRecallReport]]'s frame) stamped with the
     * shortlist geometry and `measuredVersion` — the corpus manifest
@@ -649,48 +643,45 @@ object VectorIndex {
     * satisfying the freshness contract until the NEXT corpus change.
     * (A pin that is already behind `latest()` stamps an
     * immediately-stale report — the honest outcome: the flag
-    * refuses/recomputes.) Bands first, stamp last: a crash between
-    * the two leaves no stamp, which reads as ABSENT (refuse; re-run
-    * converges). The stamp is its own one-row file because an empty
-    * band frame (no confirmed pairs) must still carry the geometry.
+    * refuses/recomputes.) The stamp is a state file (`vec.adc`:
+    * sub_dim, bar, corpus_version), separate from the bands because
+    * an empty band frame (no confirmed pairs) must still carry the
+    * geometry. It is dropped before the bands are rewritten and
+    * written after them, so a crash in between leaves no stamp, which
+    * reads as ABSENT (refuse; re-run converges).
     */
   def saveAdcReport(s: SparkSession, dir: String, report: DataFrame,
       subDim: Int, bar: Double, measuredVersion: Long): Unit =
     WriterLease.withLease(s, DedupIndex.leaseRoot(dir)) {
-      val rp = adcReportPath(dir)
-      report.coalesce(1).write.mode("overwrite").parquet(s"$rp/bands")
+      ArtifactManifest.dropState(s, adcStampPath(dir))
+      report.coalesce(1).write.mode("overwrite")
+        .parquet(s"${adcReportPath(dir)}/bands")
       WriterLease.verifyHeld(s, DedupIndex.leaseRoot(dir))
-      import s.implicits._
-      Seq((subDim, bar, measuredVersion))
-        .toDF("sub_dim", "bar", "corpus_version")
-        .coalesce(1).write.mode("overwrite").parquet(s"$rp/stamp")
+      ArtifactManifest.saveState(s, adcStampPath(dir), "vec.adc") {
+        _.int(subDim).double(bar).long(measuredVersion)
+      }
     }
 
-  /** The artifact's report rows iff FRESH for (subDim, bar): Left is
-    * the human-readable refusal reason.
+  /** Why the artifact's report is not FRESH for (subDim, bar), `None`
+    * when it is: driver-side state and manifest reads, no Spark job.
     */
-  private def freshAdcReport(s: SparkSession, dir: String,
-      subDim: Int, bar: Double): Either[String, DataFrame] = {
-    val rp = adcReportPath(dir)
-    val fs = new org.apache.hadoop.fs.Path(rp)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val committed = Seq("bands", "stamp").forall(p => fs.exists(
-      new org.apache.hadoop.fs.Path(s"$rp/$p/_SUCCESS")))
-    if (!committed)
-      return Left("no committed recall report beside the artifact")
-    val st = s.read.parquet(s"$rp/stamp").head()
-    val (sd, b, v) = (st.getAs[Int]("sub_dim"),
-      st.getAs[Double]("bar"), st.getAs[Long]("corpus_version"))
-    if (sd != subDim || b != bar)
-      return Left(s"report measured geometry (subDim=$sd, bar=$b), " +
-        s"the gate requests (subDim=$subDim, bar=$bar)")
-    val cur = ArtifactManifest.latest(s, s"$dir/corpus")
-      .map(_.version).getOrElse(-1L)
-    if (v != cur)
-      return Left(s"report is STALE: measured corpus version $v, " +
-        s"the manifest is now at $cur — the corpus changed since")
-    Right(s.read.parquet(s"$rp/bands"))
-  }
+  private def staleAdcReport(s: SparkSession, dir: String,
+      subDim: Int, bar: Double): Option[String] =
+    ArtifactManifest.loadState(s, adcStampPath(dir), "vec.adc") { i =>
+      (i.int(), i.double(), i.long())
+    } match {
+      case None => Some("no committed recall report beside the artifact")
+      case Some((sd, b, _)) if sd != subDim || b != bar =>
+        Some(s"report measured geometry (subDim=$sd, bar=$b), " +
+          s"the gate requests (subDim=$subDim, bar=$bar)")
+      case Some((_, _, v)) =>
+        val cur = ArtifactManifest.latest(s, s"$dir/corpus")
+          .map(_.version).getOrElse(-1L)
+        if (v != cur)
+          Some(s"report is STALE: measured corpus version $v, " +
+            s"the manifest is now at $cur — the corpus changed since")
+        else None
+    }
 
   /** Compute-and-save the report when absent/stale/mismatched — the
     * artifact owner's ensure step: a fresh matching report is left
@@ -703,7 +694,7 @@ object VectorIndex {
     */
   def ensureAdcReport(s: SparkSession, dir: String, subDim: Int,
       bar: Double, measuredVersion: Long)(report: => DataFrame): Unit =
-    if (freshAdcReport(s, dir, subDim, bar).isLeft)
+    if (staleAdcReport(s, dir, subDim, bar).isDefined)
       saveAdcReport(s, dir, report, subDim, bar, measuredVersion)
 
   /** The recall judgment shared by both constructors: every band of
@@ -739,14 +730,14 @@ object VectorIndex {
       books: ProductQuantization.Codebooks, subDim: Int,
       bar: Double): SimilarityOps.AdcPrefilter = {
     if (!adcForced(s))
-      freshAdcReport(s, dir, subDim, bar) match {
-        case Left(reason) => throw new IllegalStateException(
+      staleAdcReport(s, dir, subDim, bar) match {
+        case Some(reason) => throw new IllegalStateException(
           s"ADC shortlist on $dir refused: $reason. Run the recall " +
             "report against the CURRENT corpus and geometry " +
             "(SimilarityOps.adcRecallReport -> saveAdcReport; the " +
             "s18 query) before flipping the flag, or override with " +
             "graft.gate.adcForce=true")
-        case Right(bands) => judgeAdcBands(s, dir, bands)
+        case None => judgeAdcBands(s, dir, adcBands(s, dir))
       }
     SimilarityOps.AdcPrefilter(books, subDim, bar)
   }
@@ -771,15 +762,15 @@ object VectorIndex {
       bar: Double, measuredVersion: Long)(report: => DataFrame)
       : SimilarityOps.AdcPrefilter = {
     if (!adcForced(s)) {
-      val bands = freshAdcReport(s, dir, subDim, bar) match {
-        case Left(_) =>
+      val bands = staleAdcReport(s, dir, subDim, bar) match {
+        case Some(_) =>
           val r = report
           try {
             saveAdcReport(s, dir, r, subDim, bar, measuredVersion)
             // judge the READ-BACK bands: the write consumed the one
             // evaluation of the report query, re-judging `r` would
             // recompute it
-            s.read.parquet(s"${adcReportPath(dir)}/bands")
+            adcBands(s, dir)
           } catch {
             // refuse-loudly stays loud: a knob refusal
             // ([[Knobs.Refused]]) is a misconfiguration and must not
@@ -798,7 +789,7 @@ object VectorIndex {
                 "computed bands — the next call re-measures")
               r
           }
-        case Right(b) => b
+        case None => adcBands(s, dir)
       }
       judgeAdcBands(s, dir, bands)
     }
@@ -1049,7 +1040,7 @@ object VectorIndex {
     * inference, so `cell` is re-cast to its written long type.
     */
   /** Pre-drop `fact` rows whose key cannot be a LIVE vec id — the
-    * persisted membership sketch [[build]]/[[appendWith]] maintain
+    * persisted membership sketch [[build]]/[[appendWithDrift]] maintain
     * beside the corpus ([[DedupIndex]]'s composition; same
     * superset-through-delete contract, so results compose
     * byte-identically with the exact join that follows).

@@ -350,11 +350,16 @@ class ArtifactManifestSpec extends SparkSpec {
     withDir { dir =>
       buildTwoGen(dir)
       val expected = (0L until 15L).toSeq
-      import graft.operators.LayoutOps
-      LayoutOps.compactGenerations(spark, dir + "/", "part")
-      assert(idsOf(spark.read.parquet(dir)) === expected)
+      val kept = ArtifactManifest.compactGenerations(spark, dir + "/",
+        "part")
+      assert(idsOf(ArtifactManifest.frame(spark, dir)) === expected)
+      assert(ArtifactManifest.latest(spark, dir).get.generations ===
+        Seq(kept))
+      // the new generation and the manifest land inside the artifact,
+      // and nothing is staged beside or under it
+      assert(fs.listStatus(new HPath(dir)).map(_.getPath.getName).toSet
+        === Set(s"ingest=$kept", "_manifests"))
       assert(!fs.exists(new HPath(dir + "__compact")))
-      assert(!fs.exists(new HPath(s"$dir/__compact")))
     }
   }
 

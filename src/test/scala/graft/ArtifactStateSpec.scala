@@ -315,4 +315,62 @@ class ArtifactStateSpec extends SparkSpec {
         vecs.select("vec_id").as[Long].collect().sorted.toSeq)
     }
   }
+
+  // an ADC recall report the judge admits, with geometry (8, 0.5); the
+  // artifacts below have no corpus manifest, so the current corpus
+  // version is -1
+  private def adcBands = Seq((19L, 10L, 10L, 1.0))
+    .toDF("band", "n_conf", "n_kept", "recall")
+  private val adcBooks: graft.operators.ProductQuantization.Codebooks =
+    Array(Array(Array(0.0)))
+
+  /** The strict ADC constructor refuses `dir` for want of a report,
+    * ensure recomputes it, and the constructor then admits.
+    */
+  private def refusesThenRecomputes(dir: String): Unit = {
+    val e = intercept[IllegalStateException] {
+      VectorIndex.adcPrefilterFor(spark, dir, adcBooks, 8, 0.5)
+    }
+    assert(e.getMessage.contains("no committed recall report"),
+      e.getMessage)
+    var recomputed = false
+    VectorIndex.ensureAdcReport(spark, dir, 8, 0.5, -1L) {
+      recomputed = true; adcBands
+    }
+    assert(recomputed)
+    VectorIndex.adcPrefilterFor(spark, dir, adcBooks, 8, 0.5)
+  }
+
+  test("ADC report bands without a stamp read as absent") {
+    withTempDir("graft-adc-stamp") { root =>
+      val dir = s"$root/idx"
+      VectorIndex.saveAdcReport(spark, dir, adcBands, 8, 0.5, -1L)
+      VectorIndex.adcPrefilterFor(spark, dir, adcBooks, 8, 0.5)
+      // a save killed between the bands write and the stamp
+      ArtifactManifest.dropState(spark, s"$dir/adc_report/stamp.state")
+      assert(fs.exists(new HPath(s"$dir/adc_report/bands/_SUCCESS")))
+      refusesThenRecomputes(dir)
+    }
+  }
+
+  test("an ADC report stamped only by the one-row parquet tree reads " +
+      "as absent") {
+    withTempDir("graft-adc-stamp") { root =>
+      val dir = s"$root/idx"
+      adcBands.coalesce(1).write.parquet(s"$dir/adc_report/bands")
+      Seq((8, 0.5, -1L)).toDF("sub_dim", "bar", "corpus_version")
+        .coalesce(1).write.parquet(s"$dir/adc_report/stamp")
+      refusesThenRecomputes(dir)
+    }
+  }
+
+  test("the freshness check of a saved ADC report starts no Spark job") {
+    withTempDir("graft-adc-stamp") { root =>
+      val dir = s"$root/idx"
+      VectorIndex.saveAdcReport(spark, dir, adcBands, 8, 0.5, -1L)
+      val (_, jobs) = jobsOf(VectorIndex.ensureAdcReport(spark, dir, 8,
+        0.5, -1L)(sys.error("a fresh report must not be recomputed")))
+      assert(jobs === 0)
+    }
+  }
 }

@@ -131,7 +131,7 @@ class CompactingAppendSpec extends SparkSpec {
         col("doc_id") < 2 * splitId)
       DedupIndex.append(spark, merged, batch, "text", "doc_id",
         compactEvery = 2)
-      DedupIndex.appendWith(k, rpb, twoStep, batch, "text", "doc_id", 1L)
+      DedupIndex.appendBatch(k, rpb, twoStep, batch, "text", "doc_id", 1L)
       ArtifactManifest.compactGenerationsSized(spark, s"$twoStep/buckets",
         "band", sortWithin = Seq("bucket"))
       assert(bucketRows(merged) === bucketRows(twoStep))
@@ -266,7 +266,7 @@ class CompactingAppendSpec extends SparkSpec {
       val batch = docs.filter(col("doc_id") >= splitId)
       DedupIndex.append(spark, merged, batch, "text", "doc_id",
         compactEvery = 2)
-      DedupIndex.appendWith(k, rpb, twoStep, batch, "text", "doc_id", 1L)
+      DedupIndex.appendBatch(k, rpb, twoStep, batch, "text", "doc_id", 1L)
       ArtifactManifest.compactGenerationsSized(spark, s"$twoStep/buckets",
         "band", sortWithin = Seq("bucket"))
       val l = DedupIndex.load(spark, merged)

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path}
 import org.apache.spark.sql.functions._
-import graft.operators.{DedupIndex, DedupOps, LayoutOps}
+import graft.operators.{ArtifactManifest, DedupIndex, DedupOps}
 
 /** The persisted dedup-index lifecycle: a probe must return exactly
   * the batch-run candidate set restricted to pairs touching the batch
@@ -519,19 +519,19 @@ class DedupIndexSpec extends SparkSpec {
       def buckets() = DedupIndex.load(spark, dir).buckets
         .select("doc_id", "band", "bucket")
         .as[(Long, Long, Long)].collect().toSeq.sorted
-      DedupIndex.appendWith(k, rpb, dir, batch, "text", "doc_id",
+      DedupIndex.appendBatch(k, rpb, dir, batch, "text", "doc_id",
         generation = 1L)
       val once = buckets()
       // the replayed generation REPLACES its own partitions (dynamic
       // overwrite) — a crashed-and-retried micro-batch cannot
       // double-ingest
-      DedupIndex.appendWith(k, rpb, dir, batch, "text", "doc_id",
+      DedupIndex.appendBatch(k, rpb, dir, batch, "text", "doc_id",
         generation = 1L)
       assert(buckets() === once)
       // and a NEW generation still accretes
       val more = docs.filter(col("doc_id") >= 450)
         .withColumn("doc_id", col("doc_id") + 1000)
-      DedupIndex.appendWith(k, rpb, dir, more, "text", "doc_id",
+      DedupIndex.appendBatch(k, rpb, dir, more, "text", "doc_id",
         generation = 2L)
       assert(buckets().size > once.size)
     }
@@ -556,10 +556,10 @@ class DedupIndexSpec extends SparkSpec {
     withDir { dir =>
       DedupIndex.build(docs.filter(col("doc_id") < splitId),
         "text", "doc_id", k, rpb, dir)
-      DedupIndex.appendWith(k, rpb, dir,
+      DedupIndex.appendBatch(k, rpb, dir,
         docs.filter(col("doc_id") >= splitId && col("doc_id") < 450),
         "text", "doc_id", generation = 1L)
-      DedupIndex.appendWith(k, rpb, dir,
+      DedupIndex.appendBatch(k, rpb, dir,
         docs.filter(col("doc_id") >= 450), "text", "doc_id",
         generation = 2L)
       val again = docs.filter(col("doc_id") >= 450)
@@ -570,12 +570,13 @@ class DedupIndexSpec extends SparkSpec {
       val before = probed()
       assert(before.nonEmpty)
       val filesBefore = parquetFiles("buckets", dir)
-      val kept = LayoutOps.compactGenerations(spark,
+      val kept = ArtifactManifest.compactGenerations(spark,
         s"$dir/buckets", "band")
-      // the MAX generation number survives, so the next append's
-      // max+1 can never reuse a number an earlier append handed out
-      assert(kept === 2L)
-      assert(ingestDirs("buckets", dir) === Seq("ingest=2"))
+      // the merged generation is numbered past every listed one, so
+      // the next append's max+1 can never reuse a number an earlier
+      // append handed out
+      assert(kept === 3L)
+      assert(ingestDirs("buckets", dir) === Seq("ingest=3"))
       assert(parquetFiles("buckets", dir) < filesBefore)
       // probes are identical across the collapse — compaction is a
       // physical-layout pass, not a semantic one

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path}
 import org.apache.spark.sql.functions._
-import graft.operators.{LayoutOps, SimilarityOps, ProductQuantization,
+import graft.operators.{ArtifactManifest, SimilarityOps, ProductQuantization,
   VectorIndex}
 
 /** The persisted-index lifecycle: build → load must round-trip the
@@ -227,20 +227,21 @@ class IndexArtifactSpec extends SparkSpec {
     val all = Tables.embeddings(spark, d)
     withArtifact(all.filter(col("vec_id") < 300)) { dir =>
       val l = VectorIndex.load(spark, dir)
-      VectorIndex.appendWith(l, dir, all
+      VectorIndex.appendWithDrift(l, dir, all
         .filter(col("vec_id") >= 300 && col("vec_id") < 400)
         .select("vec_id", "embedding"), generation = 1L)
-      VectorIndex.appendWith(l, dir, all.filter(col("vec_id") >= 400)
+      VectorIndex.appendWithDrift(l, dir, all.filter(col("vec_id") >= 400)
         .select("vec_id", "embedding"), generation = 2L)
       def served() = VectorIndex
         .serveTopK(VectorIndex.load(spark, dir), subDim, 5L, 3)
         .as[(Long, Long, Long, Double, Long)].collect().toSeq.sorted
       val before = served()
       val filesBefore = parquetFiles(dir)
-      val kept = LayoutOps.compactGenerations(spark, s"$dir/corpus",
-        "cell")
-      assert(kept === 2L) // max generation survives: numbering monotone
-      assert(ingestDirs(dir) === Seq("ingest=2"))
+      val kept = ArtifactManifest.compactGenerations(spark,
+        s"$dir/corpus", "cell")
+      // merged past every listed generation: numbering monotone
+      assert(kept === 3L)
+      assert(ingestDirs(dir) === Seq("ingest=3"))
       assert(parquetFiles(dir) < filesBefore)
       // serving is identical across the collapse — compaction is a
       // physical-layout pass, not a semantic one
@@ -253,7 +254,7 @@ class IndexArtifactSpec extends SparkSpec {
           .select((col("vec_id") + 10000).as("vec_id"),
             col("embedding")),
         compactEvery = 2)
-      assert(ingestDirs(dir) === Seq("ingest=3"))
+      assert(ingestDirs(dir) === Seq("ingest=4"))
       assert(served().nonEmpty)
     }
   }
@@ -379,9 +380,9 @@ class IndexArtifactSpec extends SparkSpec {
         .select("vec_id", "cell", "code")
         .as[(Long, Long, Seq[Int])].collect().toSeq
         .map { case (v, c, cd) => (v, c, cd.mkString(",")) }.sorted
-      VectorIndex.appendWith(l, dir, batch, generation = 1L)
+      VectorIndex.appendWithDrift(l, dir, batch, generation = 1L)
       val once = corpus()
-      VectorIndex.appendWith(l, dir, batch, generation = 1L)
+      VectorIndex.appendWithDrift(l, dir, batch, generation = 1L)
       assert(corpus() === once) // replay replaced, not doubled
     }
   }
@@ -914,7 +915,6 @@ class IndexArtifactSpec extends SparkSpec {
 
   test("gate bucket column stays derivation-exact and the stamp " +
       "present through a seeded randomized lifecycle") {
-    import graft.operators.ArtifactManifest
     val bits = 5
     val root = Files.createTempDirectory("graft-gate-life")
     val dir = s"$root/idx"

@@ -193,9 +193,8 @@ class KnobsSpec extends SparkSpec {
         0.5, -1L)(bands)
       assert(pf.bar === 0.5)
       // the persist genuinely lost: no stamp was committed
-      assert(!new HPath(s"$local/idx/adc_report/stamp/_SUCCESS")
-        .getFileSystem(conf).exists(
-          new HPath(s"$local/idx/adc_report/stamp/_SUCCESS")))
+      val stamp = new HPath(s"$local/idx/adc_report/stamp.state")
+      assert(!stamp.getFileSystem(conf).exists(stamp))
     } finally conf.unset("fs.rivaltok.impl")
   }
 

@@ -1,9 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
-import graft.operators.LayoutOps
+import graft.operators.ArtifactManifest
 
 /** Layout ops must be content-preserving AND measurably change the
   * physical read: a pushed range predicate over a clustered layout
@@ -24,13 +25,17 @@ class LayoutOpsSpec extends SparkSpec {
     .select(((col("id") * 48271) % 400000).as("k"),
       col("id").as("payload"))
 
+  /** A clustered artifact's live rows, without the generation column. */
+  private def live(dir: String): DataFrame =
+    ArtifactManifest.frame(spark, dir).drop("ingest")
+
   /** Rows the parquet reader emitted for a filtered scan (= rows in
     * the row groups that survived min/max pruning; record-level
     * parquet filtering is off by default in Spark).
     */
-  private def scannedRowsFor(dir: String,
+  private def scannedRowsFor(frame: DataFrame,
       pred: org.apache.spark.sql.Column): Long = {
-    val df = spark.read.parquet(dir).filter(pred)
+    val df = frame.filter(pred)
     // run THIS frame's own plan (a derived count() would execute a
     // different queryExecution and leave these metrics untouched)
     df.collect()
@@ -40,16 +45,19 @@ class LayoutOpsSpec extends SparkSpec {
     scan.metrics("numOutputRows").value
   }
 
-  private def scannedRows(dir: String): Long = {
-    val df = spark.read.parquet(dir)
-      .filter(col("k") >= 1000 && col("k") < 5000)
-    // run THIS frame's own plan (a derived count() would execute a
-    // different queryExecution and leave these metrics untouched)
-    df.collect()
-    val scan = df.queryExecution.executedPlan.collect {
-      case s: FileSourceScanExec => s
-    }.head
-    scan.metrics("numOutputRows").value
+  private def scannedRows(frame: DataFrame): Long =
+    scannedRowsFor(frame, col("k") >= 1000 && col("k") < 5000)
+
+  /** Parquet part files under `p`, recursively. */
+  private def partFiles(p: Path): Seq[Path] = {
+    if (!Files.isDirectory(p))
+      return if (p.getFileName.toString.startsWith("part-")) Seq(p)
+        else Nil
+    val s = Files.list(p)
+    try {
+      import scala.jdk.CollectionConverters._
+      s.iterator.asScala.toSeq.flatMap(partFiles)
+    } finally s.close()
   }
 
   test("range clustering makes the pushed filter skip row groups") {
@@ -58,14 +66,15 @@ class LayoutOpsSpec extends SparkSpec {
       val opts = Map("parquet.block.size" -> (64 * 1024).toString)
       data.repartition(4).write.options(opts)
         .mode("overwrite").parquet(s"$root/flat")
-      LayoutOps.clusterWrite(data, Seq("k"), 4, s"$root/clustered", opts)
+      ArtifactManifest.clusterBuild(data, s"$root/clustered", Seq("k"), 4,
+        extraWriteOpts = opts)
       // identical content
-      assert(spark.read.parquet(s"$root/clustered")
+      assert(live(s"$root/clustered")
         .as[(Long, Long)].collect().sorted ===
         spark.read.parquet(s"$root/flat")
           .as[(Long, Long)].collect().sorted)
-      val (flat, clustered) =
-        (scannedRows(s"$root/flat"), scannedRows(s"$root/clustered"))
+      val (flat, clustered) = (scannedRows(spark.read.parquet(s"$root/flat")),
+        scannedRows(live(s"$root/clustered")))
       // the unclustered layout reads essentially everything (every
       // row group's k-range spans the filter); the clustered one
       // reads only the row groups covering [1000, 5000) — measured,
@@ -87,20 +96,21 @@ class LayoutOpsSpec extends SparkSpec {
       val opts = Map("parquet.block.size" -> (64 * 1024).toString)
       data2.repartition(4).write.options(opts)
         .mode("overwrite").parquet(s"$root/flat")
-      LayoutOps.clusterWrite(data2, Seq("k1"), 4, s"$root/linear", opts)
-      LayoutOps.zorderWrite(data2, Seq("k1", "k2"), 4, s"$root/z",
-        bits = 8, extraWriteOpts = opts)
+      ArtifactManifest.clusterBuild(data2, s"$root/linear", Seq("k1"), 4,
+        extraWriteOpts = opts)
+      ArtifactManifest.clusterBuild(data2, s"$root/z", Seq("k1", "k2"), 4,
+        zorder = true, bits = 8, extraWriteOpts = opts)
       // identical content
-      assert(spark.read.parquet(s"$root/z")
+      assert(live(s"$root/z")
         .as[(Long, Long, Long)].collect().sorted ===
         data2.as[(Long, Long, Long)].collect().sorted)
       val p1 = col("k1") >= 10000 && col("k1") < 35000  // 1/16 of k1
       val p2 = col("k2") >= 10000 && col("k2") < 35000  // 1/16 of k2
-      val flat1 = scannedRowsFor(s"$root/flat", p1)
-      val lin1 = scannedRowsFor(s"$root/linear", p1)
-      val lin2 = scannedRowsFor(s"$root/linear", p2)
-      val z1 = scannedRowsFor(s"$root/z", p1)
-      val z2 = scannedRowsFor(s"$root/z", p2)
+      val flat1 = scannedRowsFor(spark.read.parquet(s"$root/flat"), p1)
+      val lin1 = scannedRowsFor(live(s"$root/linear"), p1)
+      val lin2 = scannedRowsFor(live(s"$root/linear"), p2)
+      val z1 = scannedRowsFor(live(s"$root/z"), p1)
+      val z2 = scannedRowsFor(live(s"$root/z"), p2)
       // the flat layout reads everything; the linear cluster serves
       // its own key but is blind on the other; the z layout skips on
       // BOTH dimensions — measured via scan metrics, not plan strings
@@ -116,110 +126,110 @@ class LayoutOpsSpec extends SparkSpec {
     withDir { root =>
       val df = Seq((1L, 2L)).toDF("a", "b")
       intercept[IllegalArgumentException] {
-        LayoutOps.zorderWrite(df, Seq("a"), 1, s"$root/x")
+        ArtifactManifest.clusterBuild(df, s"$root/x", Seq("a"), 1,
+          zorder = true)
       }
       intercept[IllegalArgumentException] {
         // bits past the cap: 31 would also overflow 1 << bits into
         // Int.MinValue while passing a cols*bits <= 63 check
-        LayoutOps.zorderWrite(df, Seq("a", "b"), 1, s"$root/x",
-          bits = 31)
+        ArtifactManifest.clusterBuild(df, s"$root/x", Seq("a", "b"), 1,
+          zorder = true, bits = 31)
       }
       intercept[IllegalArgumentException] {
         // an all-null z column has no quantile cuts
-        LayoutOps.zorderWrite(Seq((Option.empty[java.lang.Long], 2L))
-          .toDF("a", "b"), Seq("a", "b"), 1, s"$root/x")
+        ArtifactManifest.clusterBuild(
+          Seq((Option.empty[java.lang.Long], 2L)).toDF("a", "b"),
+          s"$root/x", Seq("a", "b"), 1, zorder = true)
       }
+      // nothing was written by the refused builds
+      assert(!Files.exists(java.nio.file.Paths.get(s"$root/x")))
     }
   }
 
-  test("z-order preserves a caller column named __z; self-overwrite rejected") {
+  test("z-order preserves a caller column named __z") {
     withDir { root =>
       // __z is a legal user column — the op's working columns must
       // dodge it, not silently destroy it
       val df = Seq((1L, 10L, "keep1"), (2L, 20L, "keep2"),
         (3L, 30L, "keep3")).toDF("a", "b", "__z")
-      LayoutOps.zorderWrite(df, Seq("a", "b"), 1, s"$root/z", bits = 2)
-      assert(spark.read.parquet(s"$root/z")
+      ArtifactManifest.clusterBuild(df, s"$root/z", Seq("a", "b"), 1,
+        zorder = true, bits = 2)
+      assert(live(s"$root/z")
         .as[(Long, Long, String)].collect().sorted ===
         Seq((1L, 10L, "keep1"), (2L, 20L, "keep2"), (3L, 30L, "keep3")))
-      // overwriting the directory the frame reads would destroy the
-      // source mid-job — both clustered writes refuse
-      val back = spark.read.parquet(s"$root/z")
-      intercept[IllegalArgumentException] {
-        LayoutOps.zorderWrite(back, Seq("a", "b"), 1, s"$root/z")
-      }
-      intercept[IllegalArgumentException] {
-        LayoutOps.clusterWrite(back, Seq("a"), 1, s"$root/z")
-      }
     }
   }
 
   test("clustered compaction restores row-group skipping after appends") {
     withDir { root =>
       val opts = Map("parquet.block.size" -> (64 * 1024).toString)
-      LayoutOps.clusterWrite(data, Seq("k"), 4, s"$root/fact", opts)
-      // accreted appends: small unsorted files, the shape a streaming
-      // sink or per-batch ingest leaves behind a clustered write
+      val fact = s"$root/fact"
+      ArtifactManifest.clusterBuild(data, fact, Seq("k"), 4,
+        extraWriteOpts = opts)
+      // accreted appends: each batch clusters only its own rows into
+      // its own small files, so key ranges overlap across generations
       val appended = spark.range(400000, 500000)
         .select(((col("id") * 48271) % 400000).as("k"),
           col("id").as("payload"))
-      appended.repartition(8).write.options(opts).mode("append")
-        .parquet(s"$root/fact")
+      for (i <- 0 until 4)
+        ArtifactManifest.clusterAppend(
+          appended.filter(col("payload") % 4 === i), fact, Seq("k"), 2,
+          extraWriteOpts = opts)
       val expected = data.unionByName(appended)
         .as[(Long, Long)].collect().sorted
-      // the composition trap: round-robin compaction preserves content
-      // but merges sorted runs arbitrarily, widening row-group key
-      // ranges — the pushed slice reads a large multiple of what the
-      // clustered layout serves (not necessarily EVERYTHING: round
-      // robin happens to preserve within-partition order, so some
-      // residual skipping survives; the gap is what matters)
-      LayoutOps.compact(spark, s"$root/fact", s"$root/naive", 4)
-      val naive = scannedRows(s"$root/naive")
+      // the composition trap: a content-only rewrite (round-robin
+      // repartition) preserves every row but merges the sorted runs
+      // arbitrarily, widening row-group key ranges — the pushed slice
+      // reads a large multiple of what the clustered layout serves
+      live(fact).repartition(4).write.options(opts).mode("overwrite")
+        .parquet(s"$root/naive")
+      val naive = scannedRows(spark.read.parquet(s"$root/naive"))
       // layout-preserving compaction: the SAME slice assertion a fresh
       // clustered write satisfies holds post-compaction, content
-      // byte-identical, file count collapsed, staging cleaned up
-      LayoutOps.compactClusteredInPlace(spark, s"$root/fact", Seq("k"),
-        4, extraWriteOpts = opts)
-      val compacted = scannedRows(s"$root/fact")
+      // identical, one live generation of 4 files, superseded
+      // generations vacuumed
+      val kept = ArtifactManifest.compactClusteredGenerations(spark, fact,
+        Seq("k"), 4, extraWriteOpts = opts)
+      val compacted = scannedRows(live(fact))
       assert(compacted <= 500000L / 10, s"compacted=$compacted")
       assert(naive >= 10 * compacted,
         s"compacted=$compacted naive=$naive")
-      assert(spark.read.parquet(s"$root/fact")
-        .as[(Long, Long)].collect().sorted === expected)
-      assert(!Files.exists(java.nio.file.Paths.get(s"$root/fact__compact")))
-      assert(!Files.exists(java.nio.file.Paths.get(s"$root/fact__old")))
+      assert(live(fact).as[(Long, Long)].collect().sorted === expected)
+      assert(ArtifactManifest.latest(spark, fact).get.generations ===
+        Seq(kept))
+      assert(partFiles(java.nio.file.Paths.get(fact)).size === 4)
     }
   }
 
   test("z-order compaction re-clusters BOTH predicate columns after appends") {
     withDir { root =>
       val opts = Map("parquet.block.size" -> (64 * 1024).toString)
+      val z = s"$root/z"
       val base = spark.range(0, 400000)
         .select(((col("id") * 48271) % 400000).as("k1"),
           ((col("id") * 69621) % 400000).as("k2"),
           col("id").as("payload"))
-      LayoutOps.zorderWrite(base, Seq("k1", "k2"), 4, s"$root/z",
-        bits = 8, extraWriteOpts = opts)
+      ArtifactManifest.clusterBuild(base, z, Seq("k1", "k2"), 4,
+        zorder = true, bits = 8, extraWriteOpts = opts)
       val appended = spark.range(400000, 500000)
         .select(((col("id") * 48271) % 400000).as("k1"),
           ((col("id") * 69621) % 400000).as("k2"),
           col("id").as("payload"))
-      appended.repartition(8).write.options(opts).mode("append")
-        .parquet(s"$root/z")
-      LayoutOps.compactClusteredInPlace(spark, s"$root/z",
+      ArtifactManifest.clusterAppend(appended, z, Seq("k1", "k2"), 8,
+        zorder = true, bits = 8, extraWriteOpts = opts)
+      ArtifactManifest.compactClusteredGenerations(spark, z,
         Seq("k1", "k2"), 4, zorder = true, bits = 8,
         extraWriteOpts = opts)
       val p1 = col("k1") >= 10000 && col("k1") < 35000
       val p2 = col("k2") >= 10000 && col("k2") < 35000
       val total = 500000L
-      val z1 = scannedRowsFor(s"$root/z", p1)
-      val z2 = scannedRowsFor(s"$root/z", p2)
+      val z1 = scannedRowsFor(live(z), p1)
+      val z2 = scannedRowsFor(live(z), p2)
       // the fresh-write assertion (both z columns skip) holds on the
       // compacted layout — measured, not asserted-by-plan-string
       assert(z1 <= total / 4, s"z1=$z1")
       assert(z2 <= total / 4, s"z2=$z2")
-      assert(spark.read.parquet(s"$root/z")
-        .as[(Long, Long, Long)].collect().sorted ===
+      assert(live(z).as[(Long, Long, Long)].collect().sorted ===
         base.unionByName(appended).as[(Long, Long, Long)]
           .collect().sorted)
     }
@@ -236,24 +246,16 @@ class LayoutOpsSpec extends SparkSpec {
         .partitionBy("ingest", "band").parquet(dir)
       gen(1L, 69621L).write.mode("append")
         .partitionBy("ingest", "band").parquet(dir)
-      val expected = spark.read.parquet(dir)
-        .as[(Long, Long, Long)].collect().map(t => (t._1, t._3)).sorted
-      LayoutOps.compactGenerations(spark, dir, "band",
+      def vbands() = ArtifactManifest.frame(spark, dir)
+        .select(col("v"), col("band").cast("long")).as[(Long, Long)]
+        .collect().sorted
+      val expected = vbands()
+      ArtifactManifest.compactGenerations(spark, dir, "band",
         sortWithin = Seq("v"))
-      // content preserved (ingest collapses to the max generation)
-      assert(spark.read.parquet(dir).as[(Long, Long, Long)]
-        .collect().map(t => (t._1, t._3)).sorted === expected)
+      // content preserved (ingest collapses to one new generation)
+      assert(vbands() === expected)
       // every rewritten file is internally sorted on v
-      def files(p: Path): Seq[Path] = {
-        if (!Files.isDirectory(p)) return Seq(p)
-        val s = Files.list(p)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator.asScala.toSeq.flatMap(files)
-        } finally s.close()
-      }
-      val parts = files(java.nio.file.Paths.get(dir))
-        .filter(_.getFileName.toString.startsWith("part-"))
+      val parts = partFiles(java.nio.file.Paths.get(dir))
       assert(parts.nonEmpty)
       for (f <- parts) {
         val vs = spark.read.parquet(f.toString)
@@ -265,26 +267,12 @@ class LayoutOpsSpec extends SparkSpec {
 
   test("compaction collapses the file count and preserves content") {
     withDir { root =>
-      data.repartition(64).write.mode("overwrite").parquet(s"$root/small")
-      def parts(p: String): Seq[Path] = {
-        val s = Files.list(Files.createDirectories(
-          java.nio.file.Paths.get(p)))
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator.asScala.toSeq
-            .filter(_.getFileName.toString.startsWith("part-"))
-        } finally s.close()
-      }
-      assert(parts(s"$root/small").size === 64)
-      // aliased spellings of the source dir must be rejected — an
-      // overwrite into the dir being read destroys the source
-      intercept[IllegalArgumentException] {
-        LayoutOps.compact(spark, s"$root/small", s"$root/small/", 4)
-      }
-      LayoutOps.compact(spark, s"$root/small", s"$root/compact", 4)
-      assert(parts(s"$root/compact").size === 4)
-      assert(spark.read.parquet(s"$root/compact")
-        .as[(Long, Long)].collect().sorted ===
+      val dir = s"$root/small"
+      ArtifactManifest.clusterBuild(data, dir, Seq("k"), 64)
+      assert(partFiles(java.nio.file.Paths.get(dir)).size === 64)
+      ArtifactManifest.compactClusteredGenerations(spark, dir, Seq("k"), 4)
+      assert(partFiles(java.nio.file.Paths.get(dir)).size === 4)
+      assert(live(dir).as[(Long, Long)].collect().sorted ===
         data.as[(Long, Long)].collect().sorted)
     }
   }

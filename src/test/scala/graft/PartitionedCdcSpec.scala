@@ -3,7 +3,7 @@ package graft
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{CdcOps, PartitionedCdc}
+import graft.operators.{CdcOps, PartitionedCdc, WriterLease}
 
 /** The copy-on-write partitioned CDC contract: multi-batch partitioned
   * apply ≡ one-shot changelog apply, every retained version reads as
@@ -817,7 +817,7 @@ class PartitionedCdcSpec extends SparkSpec {
       // every completed mutator releases its lease
       assert(!fs.exists(leaseFile(root)))
       // writer A mid-flight (holds the lease, fresh heartbeat)
-      val lease = PartitionedCdc.acquireLease(spark, root)
+      val lease = WriterLease.acquire(spark, root)
       val dataBefore = fs.listStatus(new HPath(s"$root/data"))
         .map(_.getPath.getName).toSet
       val e = intercept[IllegalStateException] {
@@ -831,7 +831,7 @@ class PartitionedCdcSpec extends SparkSpec {
       assert(fs.listStatus(new HPath(s"$root/data"))
         .map(_.getPath.getName).toSet === dataBefore)
       assert(PartitionedCdc.listVersions(spark, root) === Seq(0))
-      PartitionedCdc.releaseLease(spark, lease)
+      WriterLease.release(spark, lease)
       // once released, the same batch applies cleanly
       PartitionedCdc.applyVersion(spark, root, log1, Seq("k"), "seq",
         "op", bucketOf, fromVersion = 0, retainVersions = 10)
@@ -847,7 +847,7 @@ class PartitionedCdcSpec extends SparkSpec {
     withDir { root =>
       PartitionedCdc.init(base, bucketOf, root)
       // a crashed writer: acquired, never released, heartbeat dead
-      PartitionedCdc.acquireLease(spark, root)
+      WriterLease.acquire(spark, root)
       assert(fs.exists(leaseFile(root)))
       // age the heartbeat past the default 15-minute horizon
       fs.setTimes(leaseFile(root),

@@ -119,8 +119,8 @@ class WriterLeaseSpec extends SparkSpec {
     withTempDir("graft-lease-sweep") { tmp =>
       // CDC convention: lease INSIDE the data root (root/_lock/lease).
       // Acquire/release on a root that holds nothing but the lock tree
-      // is a legal public-API pairing (PartitionedCdc.acquireLease on
-      // a not-yet-initialized root) — the sweep must not delete the
+      // is a legal public-API pairing (a CDC root's lease taken
+      // before `PartitionedCdc.init`) — the sweep must not delete the
       // caller's root itself.
       val dataRoot = s"$tmp/data"
       fs.mkdirs(new HPath(dataRoot))

@@ -34,7 +34,14 @@ SFDIR="${4:-${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}}"
 ROOT="$(git rev-parse --show-toplevel)"
 SHORT="$(git rev-parse --short "$REF")"
 WT="$(mktemp -d "${TMPDIR:-/tmp}/graft-ab-$SHORT.XXXXXX")"
-trap 'rm -rf "$WT"' EXIT
+# graft.Bench rewrites the tracked BENCH_DETAIL.json in the directory
+# it runs in, and the B legs run in this checkout: keep its copy and
+# put it back on exit
+SAVED_DETAIL="$WT.BENCH_DETAIL.json"
+if [ -f "$ROOT/BENCH_DETAIL.json" ]; then
+  cp "$ROOT/BENCH_DETAIL.json" "$SAVED_DETAIL"
+fi
+trap 'if [ -f "$SAVED_DETAIL" ]; then mv "$SAVED_DETAIL" "$ROOT/BENCH_DETAIL.json"; fi; rm -rf "$WT"' EXIT
 git -C "$ROOT" archive "$REF" | tar -x -C "$WT"
 
 run_leg() { # $1 = dir, $2 = label, $3 = outfile

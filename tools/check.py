@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Local correctness pre-check mimicking the driver's DuckDB-oracle compare.
 
-Usage: python3 tools/check.py <sfDir> <verifyOutDir>
+Usage: python3 tools/check.py <sfDir> <verifyOutDir> [--digests <file>]
 
 For each query result parquet in <verifyOutDir>, runs the matching SQL from
 oracle_sql.json in DuckDB over the sfDir tables and compares the way the
@@ -14,8 +14,12 @@ against a Spark int64 is flagged as a DTYPE mismatch — that difference fails
 the driver's hash even when every value is equal, and round-3 shipped five
 such reds while this tool said green. Dev-only tooling (runs on the
 driver-side python stack); the shipped library is pure Scala/Spark.
+
+--digests <file> also writes one `query<TAB>sha256` line per output, each
+over the output in canon() shape (columns by name, rows sorted), so two
+commits' runs compare with one `diff`.
 """
-import sys, os, json, math
+import sys, os, json, math, hashlib, argparse
 import duckdb
 import pandas as pd
 import numpy as np
@@ -44,6 +48,34 @@ def canon(df):
         df = df.sort_values(by=list(df.columns),
                             kind="mergesort", na_position="first")
     return df.reset_index(drop=True)
+
+def plain(v):
+    """A cell as a plain Python value whose repr is exact and complete."""
+    if isinstance(v, np.ndarray):
+        v = v.tolist()
+    if isinstance(v, (list, tuple)):
+        return tuple(plain(x) for x in v)
+    if isinstance(v, dict):
+        return tuple(sorted((k, plain(x)) for k, x in v.items()))
+    return v.item() if isinstance(v, np.generic) else v
+
+def digest(df):
+    """sha256 of `df` in canon() shape: the column names and dtypes, then
+    every row. Frames whose cells pandas cannot sort (arrays) are sorted
+    by each row's rendering instead.
+    """
+    try:
+        df = canon(df)
+        rows = [repr(plain(tuple(r))) for r in df.itertuples(index=False)]
+    except TypeError:
+        df = df[sorted(df.columns)]
+        rows = sorted(repr(plain(tuple(r)))
+                      for r in df.itertuples(index=False))
+    h = hashlib.sha256()
+    h.update(repr([(c, str(df[c].dtype)) for c in df.columns]).encode())
+    for r in rows:
+        h.update(b"\n" + r.encode())
+    return h.hexdigest()
 
 def cell_eq(a, b):
     # exact compare, no rounding — the driver hashes raw values
@@ -78,7 +110,7 @@ def compare(name, got, exp):
                 return f"VALUES first diff row {i} col {c}: got={a!r} want={b!r}"
     return None
 
-def main(sfdir, outdir):
+def main(sfdir, outdir, digests_path=None):
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sfdir}/{t}.parquet"
@@ -91,6 +123,7 @@ def main(sfdir, outdir):
     dirs = sorted(d for d in os.listdir(outdir)
                   if os.path.isdir(os.path.join(outdir, d)))
     n_ok = n_bad = 0
+    digests = {}
     if declared is not None:
         for name in declared:
             if name not in dirs:
@@ -110,6 +143,8 @@ def main(sfdir, outdir):
             print(f"  x {name}: UNREADABLE output ({e})")
             n_bad += 1
             continue
+        if digests_path:
+            digests[name] = digest(got)
         if name not in oracle:
             # rows-only gate: a non-oracle query must at least return rows
             if len(got) > 0:
@@ -139,8 +174,18 @@ def main(sfdir, outdir):
         else:
             n_ok += 1
             print(f"  + {name} ({len(got)} rows)")
+    if digests_path:
+        with open(digests_path, "w") as f:
+            for name in sorted(digests):
+                f.write(f"{name}\t{digests[name]}\n")
     print(f"OK={n_ok} BAD={n_bad}")
     return 1 if n_bad else 0
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    ap = argparse.ArgumentParser()
+    ap.add_argument("sfdir")
+    ap.add_argument("outdir")
+    ap.add_argument("--digests", metavar="FILE",
+                    help="write query<TAB>sha256 of each output here")
+    a = ap.parse_args()
+    sys.exit(main(a.sfdir, a.outdir, a.digests))

@@ -2,6 +2,9 @@
 # One-command round-end correctness ritual: dump every SparkEntry query
 # at BOTH gate scales (sf0.001 + sf0.01, one sbt invocation) and compare
 # each against the DuckDB oracle, printing one summary line per scale.
+# Each scale's per-query digests (tools/check.py --digests) land in
+# /tmp/verify_all_<scale>.digests; `diff` two commits' files to compare
+# their outputs.
 # Usage: tools/verify_all.sh [extra-scale-dir ...]
 #   tools/verify_all.sh                      # the two gate scales
 #   tools/verify_all.sh /root/testdata/sf0.1 # gates + the bench scale
@@ -26,7 +29,8 @@ fi
 status=0
 summary=""
 for i in "${!scales[@]}"; do
-  line=$(python3 tools/check.py "${scales[$i]}" "${outs[$i]}" | tail -1)
+  line=$(python3 tools/check.py "${scales[$i]}" "${outs[$i]}" \
+    --digests "${outs[$i]}.digests" | tail -1)
   case "$line" in *" BAD=0") ;; *) status=1 ;; esac
   summary+="$(basename "${scales[$i]}"): $line | "
 done
